@@ -160,23 +160,6 @@ def build_positions(
     mf.write_meta(index_dir, meta)
 
 
-def _positions_frame(index) -> DataFrame:
-    """The sidecar as a DataFrame, staleness-checked."""
-    meta = index.meta
-    if not meta.get("has_positions"):
-        raise ValueError(
-            f"index at {index.index_dir} has no positions sidecar — "
-            "run build_positions(spark, docs, index_dir) first"
-        )
-    if int(meta.get("positions_gen", -1)) != int(meta.get("gen", 0)):
-        raise ValueError(
-            "positions sidecar is stale (built at gen "
-            f"{meta.get('positions_gen')}, index is at gen "
-            f"{meta.get('gen', 0)}) — rebuild with build_positions()"
-        )
-    return index.spark.read.parquet(positions_path(index.index_dir))
-
-
 def phrase_scores_all(index, terms: list[str], slop: int = 0) -> DataFrame:
     """(doc_id, raw) for EVERY doc matching the phrase ``terms`` — the
     full match set a bool conjunction needs, unrounded and unsorted.
@@ -190,25 +173,16 @@ def phrase_scores_all(index, terms: list[str], slop: int = 0) -> DataFrame:
     p + m-1+slop.  Greedy minimizes the chain end, so the existence
     test is exact; positions are ascending and duplicate-free per
     (doc, term), making the per-anchor filters cheap."""
-    index._refresh_if_stale()
-    meta = index.meta
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, raw double")
-    if not terms:
-        return empty
     distinct = sorted(set(terms))
-    by_term = index._term_ids_for(distinct)
-    if len(by_term) < len(distinct):
-        return empty  # an OOV conjunct: no doc can hold the phrase
-    pos = _positions_frame(index)
-    n_buckets = int(meta["n_buckets"])
-    buckets = sorted({tid % n_buckets for tid in by_term.values()})
-    pos = pos.filter(F.col("term_bucket").isin(buckets)).filter(
-        F.col("term_id").isin(sorted(set(by_term.values())))
-    )
+    info = index.lookup_terms(distinct) if terms else {}
+    if not terms or len(info) < len(distinct):
+        # no terms, or an OOV conjunct: no doc can hold the phrase
+        return index.spark.createDataFrame([], "doc_id long, raw double")
+    meta = index.meta
+    pos = index.blocks([tid for tid, _, _ in info.values()], "positions")
     legs = []
     for i, t in enumerate(terms):
-        leg = pos.filter(F.col("term_id") == by_term[t]).select(
+        leg = pos.filter(F.col("term_id") == info[t][0]).select(
             "doc_id",
             *(["dl"] if i == 0 else []),
             F.col("positions").alias(f"p{i}"),
@@ -304,7 +278,6 @@ def match_phrase_prefix_positional(
     if max_expansions is None:
         max_expansions = MAX_EXPANSIONS
     index._refresh_if_stale()
-    meta = index.meta
     spark = index.spark
     empty = spark.createDataFrame([], "doc_id long, score double")
     terms = index._tokenize(phrase)
@@ -314,25 +287,19 @@ def match_phrase_prefix_positional(
     expansions = expand_prefix(spark, index.index_dir, pre, max_expansions)
     if not expansions:
         return empty
-    if firsts:
-        by_term = index._term_ids_for(sorted(set(firsts)))
-        if len(by_term) < len(set(firsts)):
-            return empty  # an OOV leading conjunct
-    else:
-        by_term = {}
+    info = index.lookup_terms(sorted(set(firsts))) if firsts else {}
+    if len(info) < len(set(firsts)):
+        return empty  # an OOV leading conjunct
+    meta = index.meta
     exp_ids = sorted({term_id_of(t) for t in expansions})
-    pos = _positions_frame(index)
-    n_buckets = int(meta["n_buckets"])
-    all_ids = sorted(set(by_term.values()) | set(exp_ids))
-    buckets = sorted({tid % n_buckets for tid in all_ids})
-    pos = pos.filter(F.col("term_bucket").isin(buckets)).filter(
-        F.col("term_id").isin(all_ids)
+    pos = index.blocks(
+        {tid for tid, _, _ in info.values()} | set(exp_ids), "positions"
     )
     m = len(terms)
     legs = []
     for i, t in enumerate(firsts):
         legs.append(
-            pos.filter(F.col("term_id") == by_term[t]).select(
+            pos.filter(F.col("term_id") == info[t][0]).select(
                 "doc_id",
                 *(["dl"] if i == 0 else []),
                 F.col("positions").alias(f"p{i}"),
@@ -429,39 +396,24 @@ def phrase_local(
     """
     import numpy as np
     import pandas as pd
-    import pyarrow.dataset as pds
 
-    index._refresh_if_stale()
-    meta = index.meta
     empty = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                           "score": pd.Series([], dtype="float64")})
     terms = index._tokenize(phrase)
     if not terms:
         return empty
     distinct = sorted(set(terms))
-    by_term = index._term_ids_for(distinct)
-    if len(by_term) < len(distinct):
+    info = index.lookup_terms(distinct)
+    if len(info) < len(distinct):
         return empty
-    _positions_frame(index)  # existence + staleness gate (cheap reader)
-    n_buckets = int(meta["n_buckets"])
-    tids = sorted(set(by_term.values()))
-    buckets = sorted({t % n_buckets for t in tids})
+    meta = index.meta
+    tids = [tid for tid, _, _ in info.values()]
     # budget from the stats sidecar: Σ cf == total positions to read
-    sds = pds.dataset(
-        os.path.join(index.index_dir, "stats"), partitioning="hive"
-    )
-    st = sds.to_table(
-        filter=pds.field("term_bucket").isin(buckets)
-        & pds.field("term_id").isin(tids),
-        columns=["term_id", "cf"],
-    )
+    st = index._driver_scan(tids, "stats", ["term_id", "cf"])
     if int(st["cf"].to_pandas().sum()) > max_positions:
         return match_phrase_positional(index, phrase, k).toPandas()
-    d = pds.dataset(positions_path(index.index_dir), partitioning="hive")
-    tb = d.to_table(
-        filter=pds.field("term_bucket").isin(buckets)
-        & pds.field("term_id").isin(tids),
-        columns=["term_id", "doc_id", "dl", "positions"],
+    tb = index._driver_scan(
+        tids, "positions", ["term_id", "doc_id", "dl", "positions"]
     )
     tid_np = tb["term_id"].to_numpy()
     doc_np = tb["doc_id"].to_numpy()
@@ -479,7 +431,7 @@ def phrase_local(
         order = np.argsort(docs, kind="quicksort")  # doc ids unique/term
         return docs[order], rows[order]
 
-    tid_list = [by_term[t] for t in terms]
+    tid_list = [info[t][0] for t in terms]
     docs0, rows0 = leg(tid_list[0])
     if len(docs0) == 0:
         return empty

@@ -112,16 +112,6 @@ FROM chunks
 """.strip()
 
 
-def chunk_stats(docs: DataFrame, size: int = CHUNK_TOKENS,
-                overlap: float = CHUNK_OVERLAP) -> DataFrame:
-    """Per-doc chunk counts — the reference's doc→chunk expansion factor."""
-    ct = chunk_table(docs, size, overlap)
-    return ct.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_chunks"),
-        F.sum("n_chunk_tokens").cast("long").alias("n_chunk_tokens"),
-    )
-
-
 EMBED_DIM = 64
 EMBED_MODEL = "sentence-transformers/all-MiniLM-L6-v2"
 

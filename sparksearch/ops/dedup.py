@@ -144,13 +144,6 @@ def shingle_rows(
     )
 
 
-def shingles_col(text_col: str, k: int = SHINGLE_K) -> Column:
-    """array<string> of word k-shingles directly from a text column —
-    convenience/compat form; hot paths use :func:`shingle_rows` (inlining
-    the tokenizer here re-evaluates it per lambda element)."""
-    return shingles_from_tokens(tokens_col(text_col), k)
-
-
 def _duck_shingles(text_col: str, k: int = SHINGLE_K) -> str:
     toks = DUCKDB_TOKENS_EXPR.format(col=text_col)
     return (

@@ -57,10 +57,7 @@ def build_and_load(
     index_dir: str,
     *,
     cache_stats: bool | None = None,
-    cache_postings: bool = False,
     **build_kw,
 ) -> InvertedIndex:
     build_index(spark, docs, index_dir, **build_kw)
-    return InvertedIndex(
-        spark, index_dir, cache_stats=cache_stats, cache_postings=cache_postings
-    )
+    return InvertedIndex(spark, index_dir, cache_stats=cache_stats)

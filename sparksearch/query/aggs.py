@@ -378,20 +378,6 @@ def terms_agg_indexed(
     )
 
 
-def match_docs_indexed(index, docs: DataFrame, query_text: str,
-                       *, id_col: str = "doc_id") -> DataFrame:
-    """``docs`` restricted to the packed index's match set (semi-join).
-
-    The generic indexed front for EVERY agg below: derive ids from
-    pruned postings, semi-join the corpus for the agg fields only —
-    then hand the frame to any aggregation with its match filter
-    disabled (it is already applied).  AQE broadcasts the ids side when
-    the match set is small.
-    """
-    ids = indexed_match_ids(index, query_text)
-    return docs.join(ids, docs[id_col] == ids["doc_id"], "leftsemi")
-
-
 def cardinality_agg(
     docs: DataFrame,
     query_text: str,

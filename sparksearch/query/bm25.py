@@ -156,8 +156,3 @@ scored AS (
   GROUP BY tf.doc_id
 )"""
 
-
-def bm25_topk_df_filtered(docs: DataFrame, query_text: str, k: int, lang: str, **kw) -> DataFrame:
-    """Convenience: corpus restricted to one language (mirrors the
-    reference's namespace-0 ingest filter, ``wikipedia_extractor.py:194``)."""
-    return bm25_topk_df(docs.filter(F.col("lang") == lang), query_text, k, **kw)

@@ -177,10 +177,10 @@ def combined_fields_search(
     """Engine path over the ONE multi-field index: BM25F from sidecars.
 
     Per-field tf comes from the ``tfrows`` sidecar pruned to the query
-    terms' SALTED ids (hive ``term_bucket`` partition pruning + a
-    ``term_id IN`` row-group pushdown — cost Σ df over the fields, the
-    corpus is never read); per-field dl from the ``doclens`` sidecar's
-    ``field_id`` column.  tf'/dl' merge, union df', and the final
+    terms' SALTED ids (``InvertedIndex.blocks``: hive ``term_bucket``
+    partition pruning + a ``term_id IN`` row-group pushdown — cost Σ df
+    over the fields, the corpus is never read); per-field dl from the
+    ``doclens`` sidecar's ``field_id`` column.  tf'/dl' merge, union df', and the final
     score/top-k are the same algebra as :func:`combined_fields_topk`
     (rank-identical, pytest-pinned).  Requires ``keep_tfrows`` (the
     default) and a base-generation index — same contract as
@@ -213,13 +213,10 @@ def combined_fields_search(
     # salted term_id → (original term, field weight)
     tid_info: dict[int, tuple[str, float]] = {}
     for f, w in weights.items():
-        ids = index._term_ids_for(terms, f + FIELD_SEP)
-        for t, tid in ids.items():
+        for t, (tid, _, _) in index.lookup_terms(terms, f + FIELD_SEP).items():
             tid_info[tid] = (t, float(w))
     if not tid_info:
         return empty
-    n_buckets = meta["n_buckets"]
-    buckets = sorted({tid % n_buckets for tid in tid_info})
     tmap = spark.createDataFrame(
         [(tid, t, w) for tid, (t, w) in tid_info.items()],
         "term_id long, term string, w double",
@@ -241,9 +238,7 @@ def combined_fields_search(
         )
     )
     tf = (
-        spark.read.parquet(_os.path.join(index.index_dir, "tfrows"))
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term_id").isin(list(tid_info)))
+        index.blocks(tid_info, "tfrows")
         .join(F.broadcast(tmap), "term_id")
         .join(dl_rows.select("doc_id", "_orig"), "doc_id")
         .groupBy(F.col("_orig").alias("doc_id"), F.col("term"))

@@ -44,8 +44,8 @@ def merged_stats(indexes, terms: list[str]) -> tuple[dict, int, float]:
     avgdl_g = tok_g / n_g if n_g else 0.0
     df_g: dict[int, int] = {}
     for ix in indexes:
-        for tid, (_idf, df) in ix.lookup_terms(terms).items():
-            df_g[tid] = df_g.get(tid, 0) + int(df)
+        for tid, _idf, df in ix.lookup_terms(terms).values():
+            df_g[tid] = df_g.get(tid, 0) + df
     info = {
         tid: (float(lucene_idf(n_g, float(df))), df)
         for tid, df in df_g.items()
@@ -73,21 +73,15 @@ def search_multi(indexes, query_text: str, k: int = 10) -> DataFrame:
     if not info:
         return spark.createDataFrame([], SCORE_SCHEMA)
     term_idf = {tid: idf for tid, (idf, _df) in info.items()}
-    legs = []
-    for ix in indexes:
-        buckets = sorted({tid % ix.meta["n_buckets"] for tid in term_idf})
-        blocks = (
-            ix.postings()
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term_id").isin(list(term_idf)))
+    legs = [
+        ix.map_segments(
+            term_idf,
+            make_segment_scorer(
+                term_idf, m0["k1"], m0["b"], avgdl_g, k, ix._lookup_spec()
+            ),
+            SCORE_SCHEMA,
         )
-        scorer = make_segment_scorer(
-            term_idf, m0["k1"], m0["b"], avgdl_g, k, ix._lookup_spec()
-        )
-        legs.append(
-            blocks.drop("term_bucket", "unit")
-            .groupBy("segment_id")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
+        for ix in indexes
+    ]
     allc = reduce(DataFrame.unionByName, legs)
     return allc.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

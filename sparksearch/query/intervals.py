@@ -247,28 +247,16 @@ def intervals_positional(
     shift-invariant).  Rank-identical to :func:`intervals_topk`
     (pytest-pinned).  A slot with every alternative OOV empties the
     conjunction; OOV alternatives inside a surviving slot just drop."""
-    from sparksearch.index.positions import _positions_frame
-
     analyzer = index.meta.get("analyzer", "ascii")
     slots = _validate_slots(slots, analyzer)
     if max_gaps < 0:
         raise ValueError("max_gaps must be >= 0 (use a bool query for -1)")
-    index._refresh_if_stale()
-    meta = index.meta
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    all_terms = sorted({t for g in slots for t in g})
-    by_term = index._term_ids_for(all_terms)
-    slot_ids = [sorted({by_term[t] for t in g if t in by_term}) for g in slots]
+    info = index.lookup_terms(sorted({t for g in slots for t in g}))
+    slot_ids = [sorted({info[t][0] for t in g if t in info}) for g in slots]
     if any(not ids for ids in slot_ids):
-        return empty
-    pos = _positions_frame(index)
-    n_buckets = int(meta["n_buckets"])
-    want = sorted({tid for ids in slot_ids for tid in ids})
-    buckets = sorted({tid % n_buckets for tid in want})
-    pos = pos.filter(F.col("term_bucket").isin(buckets)).filter(
-        F.col("term_id").isin(want)
-    )
+        return index.spark.createDataFrame([], "doc_id long, score double")
+    meta = index.meta
+    pos = index.blocks({tid for ids in slot_ids for tid in ids}, "positions")
     legs = []
     for j, ids in enumerate(slot_ids):
         leg = (

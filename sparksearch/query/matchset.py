@@ -11,24 +11,26 @@ and emits doc ids:
   candidate superset for phrase verification — a doc can only contain
   the phrase if it contains each phrase term).
 
-Scale shape: the scan is pruned to the terms' ``term_bucket=``
-directories + a ``term_id IN`` row-group predicate, grouped by
-``segment_id`` so each task decodes one segment's blocks and resolves
-ordinals through the per-segment sidecar — identical pruning to
-``InvertedIndex.search`` (`query/topk.py`), minus the scoring kernel.
+Scale shape: terms resolve through ``InvertedIndex.lookup_terms`` and
+the kernels run through ``InvertedIndex.map_segments`` — the
+postings-access layer in `query/topk.py` that owns the bucket- and
+``term_id``-pruned read — grouped by ``segment_id`` so each task decodes
+one segment's blocks and resolves ordinals through the per-segment
+sidecar: the read of ``InvertedIndex.search``, minus the scoring kernel.
 The corpus table is never read.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from sparksearch.index.ordmap import OrdinalMap, cached_map, cached_tombstones
-from sparksearch.query.wand import _decode_term, _sort_blocks
+from sparksearch.index.ordmap import OrdinalMap
+from sparksearch.query.wand import _decode_term, _sort_blocks, resolve_lookup
 
 IDS_SCHEMA = StructType([StructField("doc_id", LongType(), False)])
 COUNTS_SCHEMA = StructType(
@@ -45,6 +47,21 @@ PAIRS_SCHEMA = StructType(
 )
 
 
+def _term_ords(
+    pdf: pd.DataFrame, tids: list[int], lookup
+) -> tuple[OrdinalMap, dict[int, np.ndarray]]:
+    """One segment group's blocks → (ordinal map, {term_id: distinct
+    live ordinals}) for the ``tids`` present in it — the decode loop the
+    match, count and pairs kernels share."""
+    omap, tb = resolve_lookup(lookup, pdf)
+    hits: dict[int, np.ndarray] = {}
+    for tid in tids:
+        sub = pdf[pdf["term_id"] == tid]
+        if len(sub):
+            hits[tid] = np.unique(_decode_term(_sort_blocks(sub), tb)[0])
+    return omap, hits
+
+
 def make_match_kernel(term_ids: list[int], n_terms_required: int, lookup):
     """Per-segment ``applyInPandas`` kernel → doc ids with ≥ required terms.
 
@@ -56,47 +73,24 @@ def make_match_kernel(term_ids: list[int], n_terms_required: int, lookup):
     tids = sorted(term_ids)
     need = int(n_terms_required)
 
-    def _map_for(pdf: pd.DataFrame) -> OrdinalMap:
-        if isinstance(lookup, OrdinalMap):
-            return lookup
-        segs = sorted(int(s) for s in pdf["segment_id"].unique())
-        return cached_map(lookup["index_dir"], lookup["gen"], segs)
-
-    def _tombs_for() -> np.ndarray | None:
-        if isinstance(lookup, OrdinalMap):
-            return None
-        return cached_tombstones(lookup["index_dir"], lookup["gen"])
-
     def match_segment(pdf: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame({"doc_id": np.zeros(0, np.int64)})
         if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": np.zeros(0, np.int64)})
-        omap = _map_for(pdf)
-        tb = _tombs_for()
-        hits: list[np.ndarray] = []
-        for tid in tids:
-            sub = pdf[pdf["term_id"] == tid]
-            if len(sub) == 0:
-                if need == len(tids):
-                    return pd.DataFrame({"doc_id": np.zeros(0, np.int64)})
-                continue
-            ords, _ = _decode_term(_sort_blocks(sub), tb)
-            hits.append(np.unique(ords))
-        if not hits:
-            return pd.DataFrame({"doc_id": np.zeros(0, np.int64)})
+            return empty
+        omap, hits = _term_ords(pdf, tids, lookup)
+        if not hits or (need == len(tids) and len(hits) < len(tids)):
+            return empty
         if need <= 1:
-            ords = np.unique(np.concatenate(hits))
-        elif need == len(tids) and len(hits) == len(tids):
-            ords = hits[0]
-            for h in hits[1:]:
-                ords = np.intersect1d(ords, h, assume_unique=True)
-                if len(ords) == 0:
-                    break
+            ords = np.unique(np.concatenate(list(hits.values())))
+        elif need == len(tids):
+            ords = reduce(
+                lambda a, h: np.intersect1d(a, h, assume_unique=True), hits.values()
+            )
         else:  # generic ≥-need counting (minimum_should_match analog)
-            allo = np.concatenate(hits)
-            uniq, cnt = np.unique(allo, return_counts=True)
+            uniq, cnt = np.unique(np.concatenate(list(hits.values())), return_counts=True)
             ords = uniq[cnt >= need]
         if len(ords) == 0:
-            return pd.DataFrame({"doc_id": np.zeros(0, np.int64)})
+            return empty
         docs, _ = omap.resolve(ords)
         return pd.DataFrame({"doc_id": docs.astype(np.int64)})
 
@@ -112,35 +106,16 @@ def make_count_kernel(term_ids: list[int], lookup):
     instead.  Same decode, pruning, and ordinal resolution."""
     tids = sorted(term_ids)
 
-    def _map_for(pdf: pd.DataFrame) -> OrdinalMap:
-        if isinstance(lookup, OrdinalMap):
-            return lookup
-        segs = sorted(int(s) for s in pdf["segment_id"].unique())
-        return cached_map(lookup["index_dir"], lookup["gen"], segs)
-
-    def _tombs_for() -> np.ndarray | None:
-        if isinstance(lookup, OrdinalMap):
-            return None
-        return cached_tombstones(lookup["index_dir"], lookup["gen"])
-
     def count_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {"doc_id": np.zeros(0, np.int64), "n_matched": np.zeros(0, np.int64)}
         )
         if len(pdf) == 0:
             return empty
-        omap = _map_for(pdf)
-        tb = _tombs_for()
-        hits: list[np.ndarray] = []
-        for tid in tids:
-            sub = pdf[pdf["term_id"] == tid]
-            if len(sub) == 0:
-                continue
-            ords, _ = _decode_term(_sort_blocks(sub), tb)
-            hits.append(np.unique(ords))
+        omap, hits = _term_ords(pdf, tids, lookup)
         if not hits:
             return empty
-        uniq, cnt = np.unique(np.concatenate(hits), return_counts=True)
+        uniq, cnt = np.unique(np.concatenate(list(hits.values())), return_counts=True)
         docs, _ = omap.resolve(uniq)
         return pd.DataFrame(
             {"doc_id": docs.astype(np.int64), "n_matched": cnt.astype(np.int64)}
@@ -153,26 +128,13 @@ def match_counts_for_terms(index, terms: list[str]) -> DataFrame:
     """DataFrame(doc_id, n_matched) over the pruned postings — how many
     of ``terms`` (distinct) each matching doc holds.  OOV terms simply
     never contribute; docs matching zero terms are absent."""
-    index._refresh_if_stale()
-    spark = index.spark
     terms = sorted(set(terms))
     info = index.lookup_terms(terms) if terms else {}
     if not info:
-        return spark.createDataFrame([], COUNTS_SCHEMA)
-    tids = sorted(info)
-    meta = index.meta
-    buckets = sorted({t % meta["n_buckets"] for t in tids})
-    blocks = (
-        index.postings()
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term_id").isin(tids))
-    )
+        return index.spark.createDataFrame([], COUNTS_SCHEMA)
+    tids = sorted(tid for tid, _, _ in info.values())
     kernel = make_count_kernel(tids, index._lookup_spec())
-    return (
-        blocks.drop("term_bucket", "unit")
-        .groupBy("segment_id")
-        .applyInPandas(kernel, COUNTS_SCHEMA)
-    )
+    return index.map_segments(tids, kernel, COUNTS_SCHEMA)
 
 
 def make_pairs_kernel(term_ids: list[int], lookup):
@@ -182,33 +144,16 @@ def make_pairs_kernel(term_ids: list[int], lookup):
     as the match/count kernels."""
     tids = sorted(term_ids)
 
-    def _map_for(pdf: pd.DataFrame) -> OrdinalMap:
-        if isinstance(lookup, OrdinalMap):
-            return lookup
-        segs = sorted(int(s) for s in pdf["segment_id"].unique())
-        return cached_map(lookup["index_dir"], lookup["gen"], segs)
-
-    def _tombs_for() -> np.ndarray | None:
-        if isinstance(lookup, OrdinalMap):
-            return None
-        return cached_tombstones(lookup["index_dir"], lookup["gen"])
-
     def pairs_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {"term_id": np.zeros(0, np.int64), "doc_id": np.zeros(0, np.int64)}
         )
         if len(pdf) == 0:
             return empty
-        omap = _map_for(pdf)
-        tb = _tombs_for()
+        omap, hits = _term_ords(pdf, tids, lookup)
         out_t: list[np.ndarray] = []
         out_d: list[np.ndarray] = []
-        for tid in tids:
-            sub = pdf[pdf["term_id"] == tid]
-            if len(sub) == 0:
-                continue
-            ords, _ = _decode_term(_sort_blocks(sub), tb)
-            ords = np.unique(ords)
+        for tid, ords in hits.items():
             if len(ords) == 0:
                 continue
             docs, _ = omap.resolve(ords)
@@ -230,23 +175,11 @@ def term_doc_pairs_for_ids(index, term_ids: list[int]) -> DataFrame:
     """DataFrame(term_id, doc_id) for the given term ids, decoded from
     the bucket-pruned postings (cost = Σ df over the ids)."""
     index._refresh_if_stale()
-    spark = index.spark
     tids = sorted(set(int(t) for t in term_ids))
     if not tids:
-        return spark.createDataFrame([], PAIRS_SCHEMA)
-    meta = index.meta
-    buckets = sorted({t % meta["n_buckets"] for t in tids})
-    blocks = (
-        index.postings()
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term_id").isin(tids))
-    )
+        return index.spark.createDataFrame([], PAIRS_SCHEMA)
     kernel = make_pairs_kernel(tids, index._lookup_spec())
-    return (
-        blocks.drop("term_bucket", "unit")
-        .groupBy("segment_id")
-        .applyInPandas(kernel, PAIRS_SCHEMA)
-    )
+    return index.map_segments(tids, kernel, PAIRS_SCHEMA)
 
 
 def match_ids_df(index, query_text: str, *, mode: str = "any") -> DataFrame:
@@ -270,33 +203,21 @@ def match_ids_for_terms(index, terms: list[str], *, mode: str = "any",
     requirement (the ``minimum_should_match`` engine leg): OOV terms
     can never be matched, so in-vocab terms < n ⇒ empty.
     """
-    index._refresh_if_stale()
-    spark = index.spark
+    empty = index.spark.createDataFrame([], IDS_SCHEMA)
     terms = sorted(set(terms))
     if not terms:
-        return spark.createDataFrame([], IDS_SCHEMA)
+        return empty
     info = index.lookup_terms(terms)
     if mode == "all" and len(info) < len(terms):
-        return spark.createDataFrame([], IDS_SCHEMA)  # an OOV conjunct
+        return empty  # an OOV conjunct
     if min_match is not None and len(info) < min_match:
-        return spark.createDataFrame([], IDS_SCHEMA)
+        return empty
     if not info:
-        return spark.createDataFrame([], IDS_SCHEMA)
-    tids = sorted(info)
+        return empty
+    tids = sorted(tid for tid, _, _ in info.values())
     need = (
         int(min_match) if min_match is not None
         else (len(tids) if mode == "all" else 1)
     )
-    meta = index.meta
-    buckets = sorted({t % meta["n_buckets"] for t in tids})
-    blocks = (
-        index.postings()
-        .filter(F.col("term_bucket").isin(buckets))
-        .filter(F.col("term_id").isin(tids))
-    )
     kernel = make_match_kernel(tids, need, index._lookup_spec())
-    return (
-        blocks.drop("term_bucket", "unit")
-        .groupBy("segment_id")
-        .applyInPandas(kernel, IDS_SCHEMA)
-    )
+    return index.map_segments(tids, kernel, IDS_SCHEMA)

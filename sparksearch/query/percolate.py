@@ -201,14 +201,13 @@ def percolate_indexed(index, queries: list[tuple]) -> DataFrame:
     rows = _query_terms(queries, analyzer)
     if not rows:
         return index.spark.createDataFrame([], "doc_id long, query_id long")
-    terms = sorted({t for _, t, _, _ in rows})
-    by_term = index._term_ids_for(terms)
+    info = index.lookup_terms(sorted({t for _, t, _, _ in rows}))
     # AND queries with an OOV term can never fully match; OR queries
     # just lose the missing term's contribution
     qt_rows = [
-        (qid, by_term[t], n, op)
+        (qid, info[t][0], n, op)
         for qid, t, n, op in rows
-        if t in by_term
+        if t in info
     ]
     return _percolate_qt(index, qt_rows)
 
@@ -258,7 +257,7 @@ def register_queries(index, queries: list[tuple], *, mode: str = "overwrite") ->
     analyzer = index.meta.get("analyzer", "ascii")
     rows = _query_terms(queries, analyzer)
     terms = sorted({t for _, t, _, _ in rows})
-    vocab = index._term_ids_for(terms)
+    vocab = index.lookup_terms(terms)
     pdf = pd.DataFrame(
         [
             (qid, t, term_id_of(t), n, op, t in vocab)
@@ -290,7 +289,7 @@ def refresh_registrations(index) -> None:
     upsert/delete changed the vocabulary.  One stats probe over the
     registered terms; the stored analysis is reused untouched."""
     pdf = _read_registry(index.index_dir)
-    vocab = index._term_ids_for(sorted(set(pdf["term"])))
+    vocab = index.lookup_terms(sorted(set(pdf["term"])))
     pdf["in_vocab"] = pdf["term"].map(lambda t: t in vocab)
     _write_registry(index.index_dir, pdf)
     meta = mf.read_meta(index.index_dir)

@@ -229,10 +229,7 @@ def span_near_positional(
     joins one bucket-pruned slice per DISTINCT clause term and counts
     anchors whose window holds every clause multiplicity.
     Rank-identical to :func:`span_near_topk` (pytest-pinned)."""
-    from sparksearch.index.positions import (
-        _positions_frame,
-        phrase_scores_all,
-    )
+    from sparksearch.index.positions import phrase_scores_all
 
     analyzer = index.meta.get("analyzer", "ascii")
     terms = _validate_clauses(terms, analyzer)
@@ -243,23 +240,16 @@ def span_near_positional(
             .limit(k)
             .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
         )
-    index._refresh_if_stale()
-    meta = index.meta
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
     distinct = sorted(set(terms))
-    by_term = index._term_ids_for(distinct)
-    if len(by_term) < len(distinct):
-        return empty  # an OOV clause: the conjunction is empty
-    pos = _positions_frame(index)
-    n_buckets = int(meta["n_buckets"])
-    buckets = sorted({tid % n_buckets for tid in by_term.values()})
-    pos = pos.filter(F.col("term_bucket").isin(buckets)).filter(
-        F.col("term_id").isin(sorted(set(by_term.values())))
-    )
+    info = index.lookup_terms(distinct)
+    if len(info) < len(distinct):
+        # an OOV clause: the conjunction is empty
+        return index.spark.createDataFrame([], "doc_id long, score double")
+    meta = index.meta
+    pos = index.blocks([tid for tid, _, _ in info.values()], "positions")
     legs = []
     for i, t in enumerate(distinct):
-        leg = pos.filter(F.col("term_id") == by_term[t]).select(
+        leg = pos.filter(F.col("term_id") == info[t][0]).select(
             "doc_id",
             *(["dl"] if i == 0 else []),
             F.col("positions").alias(f"p{i}"),
@@ -403,23 +393,14 @@ def span_first_sql(
 def span_first_positional(index, term: str, end: int, k: int = 10) -> DataFrame:
     """span_first from the positions sidecar alone (one bucket-pruned
     leg; 0-based sidecar positions give tf = |{p : p < end}| directly)."""
-    from sparksearch.index.positions import _positions_frame
-
     analyzer = index.meta.get("analyzer", "ascii")
     term = _validate_term(term, analyzer)
-    index._refresh_if_stale()
+    info = index.lookup_terms([term])
+    if not info or end <= 0:
+        return index.spark.createDataFrame([], "doc_id long, score double")
     meta = index.meta
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    by_term = index._term_ids_for([term])
-    if not by_term or end <= 0:
-        return empty
-    tid = by_term[term]
-    pos = _positions_frame(index)
-    leg = (
-        pos.filter(F.col("term_bucket") == tid % int(meta["n_buckets"]))
-        .filter(F.col("term_id") == tid)
-        .select("doc_id", "dl", "positions")
+    leg = index.blocks([info[term][0]], "positions").select(
+        "doc_id", "dl", "positions"
     )
 
     def _lt_end(p):
@@ -487,28 +468,18 @@ def span_or_positional(index, terms: list[str], k: int = 10) -> DataFrame:
     """span_or from the positions sidecar: one bucket-pruned leg per
     clause term, full-outer-joined on doc_id (union semantics — OOV
     clauses just drop out), tf = Σ per-leg occurrence counts."""
-    from sparksearch.index.positions import _positions_frame
-
     analyzer = index.meta.get("analyzer", "ascii")
     terms = sorted({_validate_term(t, analyzer) for t in terms})
     if len(terms) < 2:
         raise ValueError("span_or needs >= 2 distinct span_term clauses")
-    index._refresh_if_stale()
+    info = index.lookup_terms(terms)
+    if not info:
+        return index.spark.createDataFrame([], "doc_id long, score double")
     meta = index.meta
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    by_term = index._term_ids_for(terms)
-    if not by_term:
-        return empty
-    present = sorted(by_term)
-    pos = _positions_frame(index)
-    n_buckets = int(meta["n_buckets"])
-    buckets = sorted({by_term[t] % n_buckets for t in present})
-    pos = pos.filter(F.col("term_bucket").isin(buckets)).filter(
-        F.col("term_id").isin(sorted(set(by_term.values())))
-    )
+    present = sorted(info)
+    pos = index.blocks([tid for tid, _, _ in info.values()], "positions")
     legs = [
-        pos.filter(F.col("term_id") == by_term[t]).select(
+        pos.filter(F.col("term_id") == info[t][0]).select(
             "doc_id",
             F.col("dl").alias(f"dl{i}"),
             F.size("positions").alias(f"c{i}"),
@@ -625,31 +596,21 @@ def span_not_positional(
     leg LEFT-joined (docs without the exclude term keep every include
     occurrence); the buffer filter runs on 0-based lists — buffer
     arithmetic is shift-invariant so it pins to the token fold."""
-    from sparksearch.index.positions import _positions_frame
-
     analyzer = index.meta.get("analyzer", "ascii")
     include = _validate_term(include, analyzer)
     exclude = _validate_term(exclude, analyzer)
     if pre < 0 or post < 0:
         raise ValueError("span_not pre/post must be >= 0")
-    index._refresh_if_stale()
+    info = index.lookup_terms(sorted({include, exclude}))
+    if include not in info:
+        return index.spark.createDataFrame([], "doc_id long, score double")
     meta = index.meta
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    by_term = index._term_ids_for(sorted({include, exclude}))
-    if include not in by_term:
-        return empty
-    pos = _positions_frame(index)
-    n_buckets = int(meta["n_buckets"])
-    buckets = sorted({tid % n_buckets for tid in by_term.values()})
-    pos = pos.filter(F.col("term_bucket").isin(buckets)).filter(
-        F.col("term_id").isin(sorted(set(by_term.values())))
-    )
-    inc = pos.filter(F.col("term_id") == by_term[include]).select(
+    pos = index.blocks([tid for tid, _, _ in info.values()], "positions")
+    inc = pos.filter(F.col("term_id") == info[include][0]).select(
         "doc_id", "dl", F.col("positions").alias("pi")
     )
-    if exclude in by_term:
-        exc = pos.filter(F.col("term_id") == by_term[exclude]).select(
+    if exclude in info:
+        exc = pos.filter(F.col("term_id") == info[exclude][0]).select(
             "doc_id", F.col("positions").alias("pe")
         )
         joined = inc.join(exc, "doc_id", "left").withColumn(

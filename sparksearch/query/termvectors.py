@@ -119,7 +119,7 @@ def termvectors_indexed(index, doc_id: int) -> DataFrame:
     ``more_like_this_indexed``); requires the lexicon and positions
     sidecars."""
     from sparksearch.index.lexicon import read_lexicon
-    from sparksearch.index.positions import _positions_frame
+    from sparksearch.index.positions import positions_path
 
     spark = index.spark
     index._refresh_if_stale()
@@ -138,8 +138,9 @@ def termvectors_indexed(index, doc_id: int) -> DataFrame:
         os.path.join(index.index_dir, "stats")
     ).select("term_id", "df", F.col("cf").alias("ttf"))
     lex = read_lexicon(spark, index.index_dir).select("term", "term_id")
+    index._require_positions()
     pos = (
-        _positions_frame(index)
+        spark.read.parquet(positions_path(index.index_dir))
         .filter(F.col("doc_id") == doc_id)
         .select("term_id", "positions")
     )

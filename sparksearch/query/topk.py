@@ -1,4 +1,4 @@
-"""Top-k search API over a built index.
+"""Top-k search API over a built index, and its postings-access layer.
 
 Spark restatement of the reference's query lifecycle
 (``keyword_search/test_keyword_search.py:22-63``): analyze the query
@@ -6,6 +6,19 @@ string with the SAME analyzer as the documents → look up term stats →
 partition-pruned scan of the query terms' posting blocks → per-segment
 DAAT scoring (``applyInPandas``) → global ``orderBy().limit(k)`` merge
 (Spark plans this as TakeOrderedAndProject — no single-partition window).
+
+Postings-access layer: every term-keyed read of an index at query time
+goes through :class:`InvertedIndex`, which alone knows the on-disk
+layout (``term_bucket = pmod(term_id, n_buckets)`` hive directories,
+delta generations, partition columns):
+
+* :meth:`InvertedIndex.lookup_terms` — terms → (term_id, idf, df), the
+  one stats probe, with the staleness check;
+* :meth:`InvertedIndex.blocks` — the pruned Spark frame of ``postings``,
+  ``positions``, ``tfrows`` or ``stats``; :meth:`InvertedIndex.map_segments`
+  runs a per-segment kernel over the postings one;
+* ``InvertedIndex._driver_scan`` — the same pruning read with pyarrow on
+  the driver (zero Spark jobs).
 
 Plan properties worth `.explain()`-checking:
 * the postings scan carries ``PushedFilters: [In(term_id, ...)]`` and
@@ -21,7 +34,9 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -37,7 +52,8 @@ from sparksearch.query.wand import (
 
 
 class InvertedIndex:
-    """Handle to an on-disk index (meta + stats + postings paths).
+    """Handle to an on-disk index (meta + stats + postings paths), and
+    the postings-access layer every indexed query reads through.
 
     ``cache_stats=None`` (default) auto-selects the term-stats lookup
     mode by vocabulary size: a vocab up to ``stats_cache_max_terms``
@@ -59,24 +75,33 @@ class InvertedIndex:
     # (corpus-scale head terms on a real cluster).
     DRIVER_PATH_MAX_POSTINGS = 5_000_000
 
+    # search_many batch size the driver path scores in one vectorized
+    # pass; larger batches take the distributed plan so the per-segment
+    # tasks parallelize the batch (VERDICT r2 finding 5)
+    DRIVER_PATH_MAX_QUERIES = 64
+
+    # ordinal sidecar driver cache ceiling: n_docs × 24 B ≈ 120 MB at 5 M
+    ORDMAP_CACHE_MAX_DOCS = 5_000_000
+
+    _BLOCK_COLS = [
+        "term_id", "segment_id", "block_id", "first_ord", "n_docs",
+        "ord_gaps", "tfs", "max_tf", "min_dl",
+    ]
+
     def __init__(self, spark: SparkSession, index_dir: str,
                  cache_stats: bool | None = None,
-                 cache_postings: bool = False,
                  driver_path_max_postings: int = DRIVER_PATH_MAX_POSTINGS,
-                 stats_cache_max_terms: int | None = None,
-                 driver_path_max_queries: int = 64):
+                 stats_cache_max_terms: int | None = None):
         from sparksearch.index.upsert import recover_pending_upsert
 
         recover_pending_upsert(spark, index_dir)  # finish any crashed upsert
         self.spark = spark
         self.index_dir = index_dir
         self.driver_path_max_postings = driver_path_max_postings
-        self.driver_path_max_queries = driver_path_max_queries
         self.postings_path = os.path.join(index_dir, "postings")
         self.stats_path = os.path.join(index_dir, "stats")
         self._cache_stats_opt = cache_stats
         self._stats_cache_max_terms = stats_cache_max_terms
-        self._cache_postings = cache_postings
         self._load(recheck=False)
 
     def _tokenize(self, s: str) -> list[str]:
@@ -127,10 +152,8 @@ class InvertedIndex:
             )
         self._sig = self._meta_sig()
         self._stats_pdf: pd.DataFrame | None = None
-        self._pds = None  # lazy pyarrow dataset (file listing) cache
-        self._dpds = None  # delta-generation postings dataset cache
-        self.dpostings_path = os.path.join(self.index_dir, "dpostings")
-        self._has_dgens = os.path.isdir(self.dpostings_path)
+        self._pds: dict = {}  # pyarrow datasets (file listings) by table
+        self._has_dgens = os.path.isdir(os.path.join(self.index_dir, "dpostings"))
         # retired ordinals (generational upserts) — delta-sized, masked
         # out of every decode; compact_index folds them away.  A pure
         # generational DELETE leaves tombstones with no delta postings,
@@ -166,13 +189,6 @@ class InvertedIndex:
                 .toPandas()
                 .set_index("term_id")
             )
-        old = getattr(self, "_postings_df", None)
-        if old is not None:
-            old.unpersist()
-        self._postings_df: DataFrame | None = None
-        if self._cache_postings:
-            self._postings_df = self.postings().persist()
-            self._postings_df.count()  # materialize the cache
 
     def refresh(self) -> None:
         """Drop every cached view and reload from disk (explicit form of
@@ -193,103 +209,173 @@ class InvertedIndex:
         if fresh != self._sig:
             self._load(recheck=True)
 
-    # -- term stats -----------------------------------------------------
-    def lookup_terms(
-        self, terms: list[str], salt: str = "", n_docs: int | None = None
-    ) -> dict[int, tuple[float, int]]:
-        """term strings → {term_id: (idf, df)}; OOV terms are dropped.
-
-        Terms hash to term_id on the driver (``hashing.term_id_of`` ==
-        Spark ``xxhash64``); the stats probe is then int-keyed — pandas
-        index lookup in cached mode, or a Spark filter whose ``term_id
-        IN`` predicate prunes ``term_bucket=`` directories AND pushes
-        into parquet row-group stats (a string filter could do neither
-        as cheaply).  ``salt``/``n_docs`` are the field namespace prefix
-        and per-field idf N of a multi-field index.
-        """
-        n = self.meta["n_docs"] if n_docs is None else n_docs
-        ids = {term_id_of(salt + t) for t in terms}
-        if self._stats_pdf is not None:
-            hit = self._stats_pdf.loc[self._stats_pdf.index.intersection(list(ids))]
-            return {
-                int(tid): (float(lucene_idf(n, float(df))), int(df))
-                for tid, df in zip(hit.index, hit["df"])
-            }
-        buckets = sorted({tid % self.meta["n_buckets"] for tid in ids})
-        rows = (
-            self.spark.read.parquet(self.stats_path)
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term_id").isin(sorted(ids)))
-            .select("term_id", "df")
-            .collect()
-        )
-        return {
-            int(r["term_id"]): (float(lucene_idf(n, float(r["df"]))), int(r["df"]))
-            for r in rows
-        }
-
-    def postings(self) -> DataFrame:
-        if self._postings_df is not None:
-            return self._postings_df
-        base = self.spark.read.parquet(self.postings_path)
-        if not self._has_dgens:
-            return base
-        # delta generations (generational upserts): base is gen 0, the
-        # dpostings tree is hive-partitioned gen=<g>/unit=<u>/term_bucket=<b>
-        delta = self.spark.read.parquet(self.dpostings_path)
-        base = base.withColumn("gen", F.lit(0))
-        return base.unionByName(delta.select(*base.columns))
-
-    _BLOCK_COLS = [
-        "term_id", "segment_id", "block_id", "first_ord", "n_docs",
-        "ord_gaps", "tfs", "max_tf", "min_dl",
-    ]
-
-    # ordinal sidecar driver cache ceiling: n_docs × 24 B ≈ 120 MB at 5 M
-    ORDMAP_CACHE_MAX_DOCS = 5_000_000
-
     def _lookup_spec(self) -> dict:
         """Picklable ordinal-map source for executor-side scoring."""
         return {"index_dir": self.index_dir, "gen": int(self.meta.get("gen", 0))}
 
-    def _driver_scan(self, buckets: list[int], term_ids: list[int]) -> pd.DataFrame | None:
-        """Read the pruned posting blocks DIRECTLY with pyarrow — zero
-        Spark jobs.  Directory pruning via the hive ``term_bucket=``
-        partitioning plus a ``term_id IN`` filter that pushes into
-        parquet row-group statistics.  This is the coordinator-node
-        read: legal exactly when the pruned volume is small (the same
-        ``driver_path_max_postings`` condition that gates it), which
-        removes the per-query Spark job-scheduling floor entirely.
-        Returns None when the local dataset API is unavailable (e.g.
-        object-store index without fsspec) — caller falls back to the
-        Spark scan."""
-        try:
+    # -- postings-access layer -----------------------------------------
+    def lookup_terms(
+        self, terms: list[str], salt: str = "", n_docs: int | None = None
+    ) -> dict[str, tuple[int, float, int]]:
+        """Analyzed terms → {term: (term_id, idf, df)}; OOV terms are
+        dropped.  The query path's one term resolver and stats probe;
+        it runs the staleness check first.
+
+        Terms hash to term_id on the driver (``hashing.term_id_of`` ==
+        Spark ``xxhash64``); the stats probe is then int-keyed — pandas
+        index lookup in cached mode, or :meth:`blocks` over ``stats``,
+        whose ``term_id IN`` predicate prunes ``term_bucket=``
+        directories AND pushes into parquet row-group stats (a string
+        filter could do neither as cheaply).  ``salt``/``n_docs`` are
+        the field namespace prefix and per-field idf N of a multi-field
+        index.
+        """
+        self._refresh_if_stale()
+        n = self.meta["n_docs"] if n_docs is None else n_docs
+        by_id = {term_id_of(salt + t): t for t in terms}
+        if self._stats_pdf is not None:
+            hit = self._stats_pdf.loc[self._stats_pdf.index.intersection(list(by_id))]
+            dfs = zip(hit.index, hit["df"])
+        else:
+            rows = self.blocks(by_id, "stats").select("term_id", "df").collect()
+            dfs = ((r["term_id"], r["df"]) for r in rows)
+        return {
+            by_id[int(tid)]: (int(tid), float(lucene_idf(n, float(df))), int(df))
+            for tid, df in dfs
+        }
+
+    def _buckets(self, term_ids: list[int]) -> list[int]:
+        """``term_bucket`` directories holding ``term_ids`` — the
+        ``pmod(term_id, n_buckets)`` routing every term-keyed table
+        shares."""
+        n = int(self.meta["n_buckets"])
+        return sorted({t % n for t in term_ids})
+
+    def _require_positions(self) -> None:
+        """Refuse a missing or stale positions sidecar."""
+        meta = self.meta
+        if not meta.get("has_positions"):
+            raise ValueError(
+                f"index at {self.index_dir} has no positions sidecar — "
+                "run build_positions(spark, docs, index_dir) first"
+            )
+        if int(meta.get("positions_gen", -1)) != int(meta.get("gen", 0)):
+            raise ValueError(
+                "positions sidecar is stale (built at gen "
+                f"{meta.get('positions_gen')}, index is at gen "
+                f"{meta.get('gen', 0)}) — rebuild with build_positions()"
+            )
+
+    def blocks(self, term_ids, table: str = "postings") -> DataFrame:
+        """Spark read of ``table``'s rows for ``term_ids``: only the
+        ids' hive ``term_bucket=`` directories (PartitionFilters) and a
+        ``term_id IN`` predicate that pushes into parquet row-group
+        statistics; partition columns are dropped.
+
+        ``table`` is ``postings`` (unioned with the delta generations'
+        ``dpostings``, tagged ``gen``), ``positions`` (refused when
+        missing or stale), ``tfrows`` or ``stats``."""
+        if table == "positions":
+            self._require_positions()
+        ids = sorted({int(t) for t in term_ids})
+        frame = self.spark.read.parquet(os.path.join(self.index_dir, table))
+        if table == "postings" and self._has_dgens:
+            # delta generations (generational upserts): base is gen 0, the
+            # dpostings tree is hive-partitioned gen=<g>/unit=<u>/term_bucket=<b>
+            delta = self.spark.read.parquet(os.path.join(self.index_dir, "dpostings"))
+            frame = frame.withColumn("gen", F.lit(0))
+            frame = frame.unionByName(delta.select(*frame.columns))
+        return (
+            frame.filter(F.col("term_bucket").isin(self._buckets(ids)))
+            .filter(F.col("term_id").isin(ids))
+            .drop("term_bucket", "unit")
+        )
+
+    def map_segments(self, term_ids, kernel, schema) -> DataFrame:
+        """``kernel`` run per ``segment_id`` group (``applyInPandas``)
+        over the pruned postings of ``term_ids``."""
+        return self.blocks(term_ids).groupBy("segment_id").applyInPandas(kernel, schema)
+
+    def _dataset(self, table: str):
+        ds = self._pds.get(table)
+        if ds is None:  # file discovery is per index generation, not per query
             import pyarrow.dataset as pds
 
-            if getattr(self, "_pds", None) is None:
-                # file discovery is per-index, not per-query
-                self._pds = pds.dataset(
-                    self.postings_path, format="parquet", partitioning="hive"
-                )
-            filt = pds.field("term_bucket").isin(buckets) & pds.field("term_id").isin(
-                term_ids
+            ds = self._pds[table] = pds.dataset(
+                os.path.join(self.index_dir, table), format="parquet",
+                partitioning="hive",
             )
-            out = self._pds.to_table(filter=filt, columns=self._BLOCK_COLS).to_pandas()
-            if not self._has_dgens:
-                return out
-            if getattr(self, "_dpds", None) is None:
-                self._dpds = pds.dataset(
-                    self.dpostings_path, format="parquet", partitioning="hive"
-                )
-            dout = self._dpds.to_table(
-                filter=filt, columns=self._BLOCK_COLS + ["gen"]
-            ).to_pandas()
-            out["gen"] = 0
-            return pd.concat([out, dout], ignore_index=True)
-        except Exception:
-            return None
+        return ds
+
+    def _driver_scan(
+        self, term_ids, table: str = "postings", columns: list[str] | None = None
+    ) -> pa.Table:
+        """The driver twin of :meth:`blocks`: the same pruning read
+        DIRECTLY with pyarrow — zero Spark jobs.  ``columns`` defaults to
+        the posting-block columns.  This is the coordinator-node read,
+        used exactly when the pruned volume is within a driver budget
+        (``driver_path_max_postings`` for postings), which removes the
+        per-query Spark job-scheduling floor.  Read errors raise."""
+        import pyarrow.dataset as pds
+
+        if table == "positions":
+            self._require_positions()
+        ids = sorted({int(t) for t in term_ids})
+        filt = pds.field("term_bucket").isin(self._buckets(ids)) & pds.field(
+            "term_id"
+        ).isin(ids)
+        cols = list(columns or self._BLOCK_COLS)
+        out = self._dataset(table).to_table(filter=filt, columns=cols)
+        if table != "postings" or not self._has_dgens:
+            return out
+        delta = self._dataset("dpostings").to_table(filter=filt, columns=cols + ["gen"])
+        gen0 = np.zeros(len(out), delta.schema.field("gen").type.to_pandas_dtype())
+        return pa.concat_tables([out.append_column("gen", pa.array(gen0)), delta])
 
     # -- search ---------------------------------------------------------
+    def _resolve(
+        self, query_text: str, field: str | None
+    ) -> tuple[dict[int, float], int, float]:
+        """Analyze and resolve one query → ({term_id: idf}, Σ df, avgdl)."""
+        self._refresh_if_stale()
+        salt, n, avgdl = self._field_params(field)
+        info = self.lookup_terms(sorted(set(self._tokenize(query_text))), salt, n)
+        term_idf = {tid: idf for tid, idf, _ in info.values()}
+        return term_idf, sum(df for _, _, df in info.values()), avgdl
+
+    def _on_driver(self, total_df: int, n_queries: int = 1) -> bool:
+        """Executor choice: the coordinator path when the pruned postings
+        volume and the batch size are within budget and the ordinal map
+        is cached on the driver; else the distributed plan."""
+        return (
+            total_df <= self.driver_path_max_postings
+            and n_queries <= self.DRIVER_PATH_MAX_QUERIES
+            and self._ordmap is not None
+        )
+
+    def _search_driver(
+        self, term_idf: dict[int, float], avgdl: float, k: int
+    ) -> pd.DataFrame:
+        """Coordinator path: pyarrow-read the pruned blocks and score in
+        one numpy pass.  Same kernel, same tie-break, bit-identical to
+        the distributed path."""
+        meta = self.meta
+        scorer = make_segment_scorer(
+            term_idf, meta["k1"], meta["b"], avgdl, k, self._ordmap,
+            tombs=self._tombs,
+        )
+        return scorer(self._driver_scan(term_idf).to_pandas())
+
+    def _search_distributed(
+        self, term_idf: dict[int, float], avgdl: float, k: int
+    ) -> DataFrame:
+        meta = self.meta
+        scorer = make_segment_scorer(
+            term_idf, meta["k1"], meta["b"], avgdl, k, self._lookup_spec()
+        )
+        candidates = self.map_segments(term_idf, scorer, SCORE_SCHEMA)
+        return candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
     def search(
         self, query_text: str, k: int = 5, field: str | None = None
     ) -> DataFrame:
@@ -300,31 +386,14 @@ class InvertedIndex:
         pinned instead, cf. SURVEY §5.2).  ``field`` scopes a
         multi-field index (default: the first build-order field).
         """
-        self._refresh_if_stale()
-        out = self._search_driver_pdf(query_text, k, field)
-        if out is not None:
-            return self.spark.createDataFrame(out, SCORE_SCHEMA)
-        meta = self.meta
-        salt, n, avgdl = self._field_params(field)
-        info = self.lookup_terms(sorted(set(self._tokenize(query_text))), salt, n)
-        if not info:
+        term_idf, total_df, avgdl = self._resolve(query_text, field)
+        if not term_idf:
             return self.spark.createDataFrame([], SCORE_SCHEMA)
-        term_idf = {tid: idf for tid, (idf, _) in info.items()}
-        buckets = sorted({tid % meta["n_buckets"] for tid in term_idf})
-        blocks = (
-            self.postings()
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term_id").isin(list(term_idf)))
-        )
-        scorer = make_segment_scorer(
-            term_idf, meta["k1"], meta["b"], avgdl, k, self._lookup_spec()
-        )
-        candidates = (
-            blocks.drop("term_bucket", "unit")
-            .groupBy("segment_id")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
-        return candidates.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        if self._on_driver(total_df):
+            return self.spark.createDataFrame(
+                self._search_driver(term_idf, avgdl, k), SCORE_SCHEMA
+            )
+        return self._search_distributed(term_idf, avgdl, k)
 
     def score_all(self, query_text: str, field: str | None = None) -> DataFrame:
         """Score EVERY matching doc (no top-k) → DataFrame(doc_id, score).
@@ -332,68 +401,21 @@ class InvertedIndex:
         Compound queries (``query/boolq.py``) need full per-clause match
         sets — a top-k leg can't feed a conjunction/exclusion — so this
         runs the exhaustive kernel over the clause's PRUNED posting
-        blocks (same ``term_bucket=`` + ``term_id IN`` pruning as
-        :meth:`search`; "exhaustive" refers to no early termination, not
-        to scan breadth).  Output size ≈ the query terms' total df.
+        blocks (same :meth:`blocks` read as :meth:`search`;
+        "exhaustive" refers to no early termination, not to scan
+        breadth).  Output size ≈ the query terms' total df.
         """
         from sparksearch.query.wand import make_exhaustive_scorer
 
-        self._refresh_if_stale()
-        meta = self.meta
-        salt, n, avgdl = self._field_params(field)
-        info = self.lookup_terms(sorted(set(self._tokenize(query_text))), salt, n)
-        if not info:
+        term_idf, _, avgdl = self._resolve(query_text, field)
+        if not term_idf:
             return self.spark.createDataFrame([], SCORE_SCHEMA)
-        term_idf = {tid: idf for tid, (idf, _) in info.items()}
-        buckets = sorted({tid % meta["n_buckets"] for tid in term_idf})
-        blocks = (
-            self.postings()
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term_id").isin(list(term_idf)))
-        )
+        meta = self.meta
         scorer = make_exhaustive_scorer(
             term_idf, meta["k1"], meta["b"], avgdl, int(meta["n_docs"]) + 1,
             self._lookup_spec(),
         )
-        return (
-            blocks.drop("term_bucket", "unit")
-            .groupBy("segment_id")
-            .applyInPandas(scorer, SCORE_SCHEMA)
-        )
-
-    def _search_driver_pdf(
-        self, query_text: str, k: int, field: str | None = None
-    ) -> pd.DataFrame | None:
-        """Coordinator path: when the pruned posting volume is small,
-        read the blocks on the driver (direct pyarrow — ZERO Spark jobs;
-        Spark-collect fallback) and score in one numpy pass.  Same
-        kernel, same tie-break, bit-identical to the distributed path.
-        Returns None when the volume demands the distributed path."""
-        meta = self.meta
-        salt, n, avgdl = self._field_params(field)
-        info = self.lookup_terms(sorted(set(self._tokenize(query_text))), salt, n)
-        if not info:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        total_df = sum(df for _, df in info.values())
-        if total_df > self.driver_path_max_postings or self._ordmap is None:
-            return None
-        term_idf = {tid: idf for tid, (idf, _) in info.items()}
-        buckets = sorted({tid % meta["n_buckets"] for tid in term_idf})
-        scorer = make_segment_scorer(
-            term_idf, meta["k1"], meta["b"], avgdl, k, self._ordmap,
-            tombs=self._tombs,
-        )
-        pdf = self._driver_scan(buckets, list(term_idf))
-        if pdf is None:
-            pdf = (
-                self.postings()
-                .filter(F.col("term_bucket").isin(buckets))
-                .filter(F.col("term_id").isin(list(term_idf)))
-                .drop("term_bucket", "unit")
-                .toPandas()
-            )
-        return scorer(pdf)
+        return self.map_segments(term_idf, scorer, SCORE_SCHEMA)
 
     def search_local(
         self, query_text: str, k: int = 5, field: str | None = None
@@ -404,12 +426,13 @@ class InvertedIndex:
         ``took`` is measured server-side the same way).  Head-term
         queries that exceed the driver-path threshold transparently run
         the distributed plan and collect."""
-        self._refresh_if_stale()
-        out = self._search_driver_pdf(query_text, k, field)
-        if out is None:
-            return self.search(query_text, k, field).toPandas()
-        return out
-
+        term_idf, total_df, avgdl = self._resolve(query_text, field)
+        if not term_idf:
+            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                                 "score": pd.Series(dtype="float64")})
+        if self._on_driver(total_df):
+            return self._search_driver(term_idf, avgdl, k)
+        return self._search_distributed(term_idf, avgdl, k).toPandas()
 
     def search_many(
         self, queries: dict[str, str] | list[str], k: int = 5,
@@ -433,61 +456,36 @@ class InvertedIndex:
             queries = {str(i): q for i, q in enumerate(queries)}
         meta = self.meta
         salt, n, avgdl = self._field_params(field)
+        q_terms = {qid: set(self._tokenize(q)) for qid, q in queries.items()}
+        # ONE stats lookup for the batch
+        info = self.lookup_terms(sorted(set().union(*q_terms.values())), salt, n)
         per_query: dict[str, dict[int, float]] = {}
-        all_terms = sorted({t for q in queries.values() for t in self._tokenize(q)})
-        info = self.lookup_terms(all_terms, salt, n)  # ONE stats lookup for the batch
-        if info:
-            ids_by_term = self._term_ids_for(all_terms, salt)
-            for qid, qtext in queries.items():
-                tids = {}
-                for t in set(self._tokenize(qtext)):
-                    tid = ids_by_term.get(t)
-                    if tid is not None and tid in info:
-                        tids[tid] = info[tid][0]
-                if tids:
-                    per_query[qid] = tids
+        for qid, terms in q_terms.items():
+            tids = {info[t][0]: info[t][1] for t in terms if t in info}
+            if tids:
+                per_query[qid] = tids
         out_schema = "query_id string, doc_id long, score double"
         if not per_query:
             return self.spark.createDataFrame([], out_schema)
         union_ids = sorted({tid for tids in per_query.values() for tid in tids})
-        buckets = sorted({tid % meta["n_buckets"] for tid in union_ids})
-        blocks = (
-            self.postings()
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term_id").isin(union_ids))
-        )
-        total_df = sum(df for _, df in info.values())
-        # the driver path scores the batch in one vectorized pass —
-        # fine for tens of queries; above the query-count threshold take
-        # the distributed plan so the per-segment tasks parallelize the
-        # batch (VERDICT r2 finding 5).  Either way the kernel is
-        # make_batch_scorer: each term's blocks decode ONCE for the
-        # whole batch (VERDICT r3 ask #8), with results bit-identical to
-        # per-query search().
-        use_driver = (
-            total_df <= self.driver_path_max_postings
-            and len(per_query) <= self.driver_path_max_queries
-            and self._ordmap is not None
-        )
-        # driver path resolves ordinals from the cached map; the
-        # distributed path ships only the tiny {dir, gen} spec and loads
-        # per-segment sidecars inside the tasks (never the whole map)
-        lookup = self._ordmap if use_driver else self._lookup_spec()
-        scorer = make_batch_scorer(
-            per_query, meta["k1"], meta["b"], avgdl, k, lookup,
-            tombs=self._tombs if use_driver else None,
-        )
-
-        if use_driver:
-            pdf = self._driver_scan(buckets, union_ids)
-            if pdf is None:
-                pdf = blocks.drop("term_bucket", "unit").toPandas()
+        total_df = sum(df for _, _, df in info.values())
+        # either way the kernel is make_batch_scorer: each term's blocks
+        # decode ONCE for the whole batch (VERDICT r3 ask #8), with
+        # results bit-identical to per-query search().  The driver path
+        # resolves ordinals from the cached map; the distributed path
+        # ships only the tiny {dir, gen} spec and loads per-segment
+        # sidecars inside the tasks (never the whole map)
+        if self._on_driver(total_df, len(per_query)):
+            scorer = make_batch_scorer(
+                per_query, meta["k1"], meta["b"], avgdl, k, self._ordmap,
+                tombs=self._tombs,
+            )
+            pdf = self._driver_scan(union_ids).to_pandas()
             return self.spark.createDataFrame(scorer(pdf), out_schema)
-        candidates = (
-            blocks.drop("term_bucket", "unit")
-            .groupBy("segment_id")
-            .applyInPandas(lambda p: scorer(p), out_schema)
+        scorer = make_batch_scorer(
+            per_query, meta["k1"], meta["b"], avgdl, k, self._lookup_spec()
         )
+        candidates = self.map_segments(union_ids, scorer, out_schema)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             candidates.withColumn("rank", F.row_number().over(w))
@@ -495,22 +493,6 @@ class InvertedIndex:
             .drop("rank")
             .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
         )
-
-    def _term_ids_for(self, terms: list[str], salt: str = "") -> dict[str, int]:
-        """term string → term_id for the given terms (OOV terms absent)."""
-        by_id = {term_id_of(salt + t): t for t in terms}
-        if self._stats_pdf is not None:
-            hit = self._stats_pdf.index.intersection(list(by_id))
-            return {by_id[int(tid)]: int(tid) for tid in hit}
-        buckets = sorted({tid % self.meta["n_buckets"] for tid in by_id})
-        rows = (
-            self.spark.read.parquet(self.stats_path)
-            .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term_id").isin(sorted(by_id)))
-            .select("term_id")
-            .collect()
-        )
-        return {by_id[int(r["term_id"])]: int(r["term_id"]) for r in rows}
 
 
 def search(spark: SparkSession, index_dir: str, query_text: str, k: int = 5) -> DataFrame:

@@ -96,6 +96,25 @@ def _sort_blocks(sub: pd.DataFrame) -> pd.DataFrame:
     return sub.sort_values(keys, kind="stable").reset_index(drop=True)
 
 
+def resolve_lookup(
+    lookup: OrdinalMap | dict, pdf: pd.DataFrame, tombs: np.ndarray | None = None
+) -> tuple[OrdinalMap, np.ndarray | None]:
+    """(ordinal map, retired ordinals) for one segment group's blocks.
+
+    A driver-side :class:`OrdinalMap` is used as is, with the caller's
+    ``tombs`` (the handle caches them).  A picklable ``{"index_dir",
+    "gen"}`` spec loads the group's segment sidecars and, unless
+    ``tombs`` is given, the generation's tombstones — both
+    process-cached inside the executor task."""
+    if isinstance(lookup, OrdinalMap):
+        return lookup, tombs
+    segs = sorted(int(s) for s in pdf["segment_id"].unique())
+    omap = cached_map(lookup["index_dir"], lookup["gen"], segs)
+    if tombs is None:
+        tombs = cached_tombstones(lookup["index_dir"], lookup["gen"])
+    return omap, tombs
+
+
 def _tfn(tfs: np.ndarray, dls: np.ndarray, k1: float, b: float, avgdl: float) -> np.ndarray:
     return tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
 
@@ -176,17 +195,6 @@ def make_segment_scorer(
     """
     term_ids = sorted(term_idf)  # fixed order ⇒ deterministic float sums
 
-    def _map_for(pdf: pd.DataFrame) -> OrdinalMap:
-        if isinstance(lookup, OrdinalMap):
-            return lookup
-        segs = sorted(int(s) for s in pdf["segment_id"].unique())
-        return cached_map(lookup["index_dir"], lookup["gen"], segs)
-
-    def _tombs_for() -> np.ndarray | None:
-        if tombs is not None or isinstance(lookup, OrdinalMap):
-            return tombs
-        return cached_tombstones(lookup["index_dir"], lookup["gen"])
-
     def _count(decoded: int, total: int) -> None:
         if counters is not None:
             counters["blocks_decoded"] = counters.get("blocks_decoded", 0) + decoded
@@ -204,7 +212,7 @@ def make_segment_scorer(
     def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
             return pd.DataFrame({"doc_id": np.zeros(0, np.int64), "score": np.zeros(0)})
-        omap = _map_for(pdf)
+        omap, tb = resolve_lookup(lookup, pdf, tombs)
         if len(term_ids) == 1:
             # pdf may carry OTHER queries' term rows (search_many hands
             # every scorer the batch-union block frame) — restrict to
@@ -217,10 +225,12 @@ def make_segment_scorer(
                 return pd.DataFrame(
                     {"doc_id": np.zeros(0, np.int64), "score": np.zeros(0)}
                 )
-            return _score_single(sub, term_idf[tid], omap)
-        return _score_multi(pdf, omap)
+            return _score_single(sub, term_idf[tid], omap, tb)
+        return _score_multi(pdf, omap, tb)
 
-    def _score_multi(pdf: pd.DataFrame, omap: OrdinalMap) -> pd.DataFrame:
+    def _score_multi(
+        pdf: pd.DataFrame, omap: OrdinalMap, tb: np.ndarray | None
+    ) -> pd.DataFrame:
         """MaxScore: essential terms decode fully; non-essential terms
         decode only candidate-overlapping blocks (exact, tie-aware).
 
@@ -230,7 +240,6 @@ def make_segment_scorer(
         (same addition order) — pruning bounds therefore act on the true
         score values and exact ties resolve like the oracle's.
         """
-        tb = _tombs_for()
         subs: dict[int, pd.DataFrame] = {}
         ub: dict[int, float] = {}
         for tid in term_ids:
@@ -297,9 +306,10 @@ def make_segment_scorer(
         # (score desc, doc_id asc) tie-break then matches the oracle
         return _topk(omap.docs_of(cand_docs), cand_scores, k)
 
-    def _score_single(pdf: pd.DataFrame, idf: float, omap: OrdinalMap) -> pd.DataFrame:
+    def _score_single(
+        pdf: pd.DataFrame, idf: float, omap: OrdinalMap, tb: np.ndarray | None
+    ) -> pd.DataFrame:
         """Block-max pruned single-term top-k (exact, tie-aware)."""
-        tb = _tombs_for()
         bounds = _block_bounds(pdf)
         order = np.argsort(-bounds, kind="stable")
         pdf = pdf.iloc[order]
@@ -349,14 +359,7 @@ def make_batch_scorer(
         idf_of.update(tids)
 
     def score_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        if isinstance(lookup, OrdinalMap):
-            omap, tb = lookup, tombs
-        else:
-            segs = sorted(int(s) for s in pdf["segment_id"].unique())
-            omap = cached_map(lookup["index_dir"], lookup["gen"], segs)
-            tb = tombs if tombs is not None else cached_tombstones(
-                lookup["index_dir"], lookup["gen"]
-            )
+        omap, tb = resolve_lookup(lookup, pdf, tombs)
         contrib: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         for tid in all_tids:
             sub = pdf[pdf["term_id"] == tid]
@@ -393,19 +396,15 @@ def make_exhaustive_scorer(
     lookup: OrdinalMap | dict,
     tombs: np.ndarray | None = None,
 ):
-    """Decode-everything DAAT scorer — the test oracle for the pruned
-    kernel (never used in the query path)."""
+    """Decode-everything DAAT scorer: no early termination.  It is the
+    test oracle for the pruned kernel, and ``InvertedIndex.score_all``
+    runs it with ``k`` = n_docs + 1 to emit a clause's FULL scored match
+    set (bool, query_string, boosting and minimum_should_match legs;
+    dis_max with a tie_breaker)."""
     term_ids = sorted(term_idf)
 
     def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        if isinstance(lookup, OrdinalMap):
-            omap, tb = lookup, tombs
-        else:
-            segs = sorted(int(s) for s in pdf["segment_id"].unique())
-            omap = cached_map(lookup["index_dir"], lookup["gen"], segs)
-            tb = tombs if tombs is not None else cached_tombstones(
-                lookup["index_dir"], lookup["gen"]
-            )
+        omap, tb = resolve_lookup(lookup, pdf, tombs)
         parts_d, parts_s = [], []
         for tid in term_ids:
             sub = pdf[pdf["term_id"] == tid]

@@ -135,3 +135,41 @@ def test_search_many_single_term_not_contaminated(spark, tmp_path_factory):
         want = [(r["doc_id"], r["score"]) for r in idx.search(qtext, 5).collect()]
         assert by_q.get(qid, []) == want, qid
     corpus.unpersist()
+
+
+def test_search_resolves_terms_once(spark, built_index):
+    """search() and search_local() tokenize and resolve a query once,
+    also when the driver budget sends them to the distributed plan."""
+    from sparksearch.query.topk import InvertedIndex
+
+    v = make_vocab(100)
+    q = f"{v[1]} {v[9]}"
+    dist = InvertedIndex(spark, built_index.index_dir, driver_path_max_postings=0)
+    calls = []
+    lookup = dist.lookup_terms
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return lookup(*a, **kw)
+
+    dist.lookup_terms = counting
+    dist.search(q, 5).collect()
+    assert len(calls) == 1
+    calls.clear()
+    dist.search_local(q, 5)
+    assert len(calls) == 1
+
+
+def test_driver_read_error_raises(spark, built_index):
+    """A failing driver-side postings read is a bug: it raises out of
+    search_local instead of silently running the distributed plan."""
+    from sparksearch.query.topk import InvertedIndex
+
+    class _Unreadable:
+        def to_table(self, **kw):
+            raise OSError("unreadable posting file")
+
+    idx = InvertedIndex(spark, built_index.index_dir)
+    idx._pds = {"postings": _Unreadable()}
+    with pytest.raises(OSError, match="unreadable posting file"):
+        idx.search_local(make_vocab(100)[0], 5)

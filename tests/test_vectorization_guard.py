@@ -30,12 +30,9 @@ def test_only_arrow_batched_python():
         "extract.py",       # T-chain cleaning (Arrow-batched pandas UDFs)
         "ops/multimodal.py", # media decode plumbing (mapInPandas)
         "ops/chunking.py",  # C2 chunk-embedding plumbing (mapInPandas)
-        "query/topk.py",    # per-segment scoring (applyInPandas)
-        "query/matchset.py", # per-segment match-id decode (applyInPandas)
+        "query/topk.py",    # per-segment kernels over pruned postings (applyInPandas)
         "ops/graph_ann.py", # per-shard HNSW build/search (applyInPandas)
-        "index/pack.py",    # legacy mapInArrow pack kernel (fallback)
         "query/aggs.py",    # scripted_metric map/combine + reduce (mapInPandas/applyInPandas)
-        "query/federate.py", # per-index leg scoring with merged stats (applyInPandas)
         "ops/pq.py",        # PQ build-time encode kernel (mapInPandas); queries stay JVM-side
     }
     # call sites only (docstrings discuss these operators by name)
