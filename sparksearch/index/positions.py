@@ -57,7 +57,8 @@ from pyspark.sql import functions as F
 
 from sparksearch.analyze import tokens_col
 from sparksearch.index import manifest as mf
-from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.bm25 import indexed_pseudo_term_scores, topk_cut
+from sparksearch.query.wand import _tfn, lucene_idf
 
 
 def positions_path(index_dir: str) -> str:
@@ -219,22 +220,8 @@ def phrase_scores_all(index, terms: list[str], slop: int = 0) -> DataFrame:
             return F.coalesce(acc - p <= m - 1 + slop, F.lit(False))
 
         tf_col = F.size(F.filter(F.col("p0"), _anchor_ok))
-    tf = (
-        joined.select("doc_id", "dl", tf_col.alias("tf"))
-        .filter(F.col("tf") > 0)
-        # df aggregate + scoring both read this; same persist rationale
-        # as match_phrase_indexed (verified rows only — tiny)
-        .persist()
-    )
-    df_ = tf.agg(F.count(F.lit(1)).alias("df"))
-    k1, b = meta["k1"], meta["b"]
-    n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-    idf = F.log(1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-    )
-    return tf.crossJoin(F.broadcast(df_)).select(
-        "doc_id", (idf * tfn).alias("raw")
+    return indexed_pseudo_term_scores(
+        joined.select("doc_id", "dl", tf_col.alias("tf")), meta
     )
 
 
@@ -251,12 +238,7 @@ def match_phrase_positional(
     via ``array_intersect`` of shifted position arrays — verification
     touches position lists only, never document text.
     """
-    scored = phrase_scores_all(index, index._tokenize(phrase), slop)
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return topk_cut(phrase_scores_all(index, index._tokenize(phrase), slop), k)
 
 
 def match_phrase_prefix_positional(
@@ -331,28 +313,10 @@ def match_phrase_prefix_positional(
         for i in range(1, m):
             acc = F.array_intersect(acc, F.transform(f"p{i}", _shift(i)))
         tf_expr = F.size(acc)
-    tf = (
-        joined.select(
-            "doc_id", F.col(dl_col).alias("dl"), tf_expr.alias("tf")
-        )
-        .filter(F.col("tf") > 0)
-        .persist()
+    tf_frame = joined.select(
+        "doc_id", F.col(dl_col).alias("dl"), tf_expr.alias("tf")
     )
-    df_ = tf.agg(F.count(F.lit(1)).alias("df"))
-    k1, b = meta["k1"], meta["b"]
-    n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-    idf = F.log(1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-    )
-    scored = tf.crossJoin(F.broadcast(df_)).select(
-        "doc_id", (idf * tfn).alias("raw")
-    )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
 
 
 # Driver-path phrase budget: positions volume (Σ collection-frequency
@@ -482,11 +446,9 @@ def phrase_local(
         dl = dl_np[rows0[idx0]]
     if len(tf_docs) == 0:
         return empty
-    df_ = len(tf_docs)
-    k1, b = meta["k1"], meta["b"]
-    n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-    idf = np.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5))
-    raw = idf * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+    raw = lucene_idf(meta["n_docs"], len(tf_docs)) * _tfn(
+        tf, dl, meta["k1"], meta["b"], meta["avgdl"]
+    )
     order = np.lexsort((tf_docs, -raw))[:k]
     return pd.DataFrame(
         {

@@ -1904,7 +1904,9 @@ def scripted_metric_rms(
         out["n"] = out["n"].astype("int64")
         return out[[key_col, "sum_sq", "n"]]
 
-    def reduce_states(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    # no type hints: a grouped map takes (key, pdf), which PySpark's
+    # hint inference does not cover — partial hints make it warn
+    def reduce_states(key, pdf):
         n = int(pdf["n"].sum())
         rms = (
             round(float(np.sqrt(pdf["sum_sq"].sum() / n)), AVG_ROUND)

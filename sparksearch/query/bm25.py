@@ -1,14 +1,31 @@
-"""Exhaustive BM25 scoring as pure DataFrame ops (no packed index).
+"""The engine's one BM25 scoring module.
 
-This is the Phase-1 reference path of SURVEY §7: tokenize → tf → df →
-score → top-k entirely in Catalyst-planned, whole-stage-codegen'd
-expressions.  It exists for three reasons:
+Every Spark operator scores through the pieces below, so the formula
+(Lucene 9 / OpenSearch 2.x ``BM25Similarity``, no ``(k1+1)`` factor)
 
-1. correctness cross-check for the packed-index engine (must be
-   rank-identical on every query);
-2. the DuckDB oracle twin — :func:`bm25_topk_sql` renders the SAME
-   computation as ANSI SQL for the driver's side-by-side harness;
-3. ad-hoc scoring of a corpus without building an index first.
+    idf = ln(1 + (N - df + 0.5) / (df + 0.5))
+    tfn = tf / (tf + k1 · (1 - b + b · dl / avgdl))
+
+is written once here (and once in numpy, ``query/wand.py``):
+
+* :func:`bm25_weight` — the term weight ``idf · tfn`` as a Column, from
+  Columns, column names or numbers (:func:`bm25_idf`, :func:`bm25_tfn`
+  are its factors);
+* :func:`term_front` — the exhaustive term front: tokenize → (doc_id,
+  dl, term, tf) rows of the query terms → per-term df → corpus
+  n_docs/avgdl; :func:`term_parts` scores its rows;
+* the pseudo-term scorers for phrase/span-like queries, one
+  (doc_id, dl, tf) row per doc and df = rows with tf > 0:
+  :func:`pseudo_term_topk` derives n_docs/avgdl from the rows,
+  :func:`indexed_pseudo_term_scores` takes them from index ``meta``;
+* :func:`topk_cut` — order (raw desc, doc_id asc), limit k, round.
+
+:func:`bm25_scores_df`/:func:`bm25_topk_df` are the exhaustive match
+query itself: the correctness reference for the packed engine and
+ad-hoc scoring without an index.  The DuckDB twins
+(:func:`bm25_topk_sql`, :func:`bm25_scores_cte` and the ``*_sql``
+functions elsewhere) write the formula out in SQL on purpose: an
+expression shared by an engine and its oracle would hide its bugs.
 
 Scores are rounded to 4 decimals on output so float64 summation-order
 differences between engines can't flip a value-hash comparison.
@@ -16,12 +33,129 @@ differences between engines can't flip a value-hash comparison.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
 
 SCORE_ROUND = 4
+
+
+def _col(x) -> Column:
+    """Column as is, a string as a column name, anything else a literal."""
+    if isinstance(x, Column):
+        return x
+    return F.col(x) if isinstance(x, str) else F.lit(x)
+
+
+def bm25_idf(df, n_docs) -> Column:
+    df, n_docs = _col(df), _col(n_docs)
+    return F.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def bm25_tfn(tf, dl, avgdl, k1: float, b: float) -> Column:
+    tf, dl, avgdl = _col(tf), _col(dl), _col(avgdl)
+    return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def bm25_weight(tf, dl, df, n_docs, avgdl, k1: float, b: float) -> Column:
+    """One term's BM25 contribution ``idf · tfn``."""
+    return bm25_idf(df, n_docs) * bm25_tfn(tf, dl, avgdl, k1, b)
+
+
+def term_front(
+    docs: DataFrame,
+    terms: list[str],
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    analyzer: str = "ascii",
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The exhaustive term front → (tf, df, glob) frames.
+
+    ``tf``: (doc_id, dl, term, tf) for the query ``terms``; ``df``:
+    (term, df); ``glob``: one row (n_docs, avgdl) over every doc with
+    text."""
+    base = docs.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("doc_id"), tokens_col(text_col, analyzer).alias("toks")
+    )
+    with_dl = base.select("doc_id", F.size("toks").alias("dl"), "toks")
+    tf, df_ = term_tf(with_dl, terms)
+    glob = with_dl.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    return tf, df_, glob
+
+
+def term_tf(frame: DataFrame, terms: list[str]) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, dl, toks) rows → (doc_id, dl, term, tf) rows of ``terms``
+    and their per-term df."""
+    flat = frame.select("doc_id", "dl", F.explode("toks").alias("term"))
+    tf = (
+        flat.filter(F.col("term").isin(terms))
+        .groupBy("doc_id", "dl", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    return tf, tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+
+
+def term_parts(
+    tf: DataFrame, df_: DataFrame, glob: DataFrame, k1: float, b: float,
+    *keep: str,
+) -> DataFrame:
+    """Score the front's rows → (doc_id, *keep, part)."""
+    return (
+        tf.join(F.broadcast(df_), "term")
+        .crossJoin(F.broadcast(glob))
+        .select(
+            "doc_id", *keep,
+            bm25_weight("tf", "dl", "df", "n_docs", "avgdl", k1, b).alias("part"),
+        )
+    )
+
+
+def pseudo_term_topk(stats: DataFrame, k: int, k1: float, b: float) -> DataFrame:
+    """(doc_id, dl, tf) rows over ALL docs → BM25 top-k of the pseudo-term
+    (df = rows with tf > 0, n_docs/avgdl over every row)."""
+    # one pass feeds the globals, the df and the scored rows
+    stats = stats.persist()
+    glob = stats.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    hits = stats.filter(F.col("tf") > 0)
+    df_ = hits.agg(F.count(F.lit(1)).alias("df"))
+    return topk_cut(
+        hits.crossJoin(F.broadcast(df_))
+        .crossJoin(F.broadcast(glob))
+        .select(
+            "doc_id",
+            bm25_weight("tf", "dl", "df", "n_docs", "avgdl", k1, b).alias("raw"),
+        ),
+        k,
+    )
+
+
+def indexed_pseudo_term_scores(tf_frame: DataFrame, meta: dict) -> DataFrame:
+    """(doc_id, dl, tf) rows (tf = 0 allowed) → (doc_id, raw) with the
+    INDEX's corpus stats (``meta`` n_docs/avgdl/k1/b — a sidecar never
+    re-derives them)."""
+    # the df aggregate and the scoring both read the verified rows
+    tf = tf_frame.filter(F.col("tf") > 0).persist()
+    df_ = tf.agg(F.count(F.lit(1)).alias("df"))
+    w = bm25_weight(
+        "tf", "dl", "df", meta["n_docs"], meta["avgdl"], meta["k1"], meta["b"]
+    )
+    return tf.crossJoin(F.broadcast(df_)).select("doc_id", w.alias("raw"))
+
+
+def topk_cut(scored: DataFrame, k: int, *, round_scores: bool = True) -> DataFrame:
+    """(doc_id, raw) → top-k (doc_id, score) by (raw desc, doc_id asc)."""
+    score = F.round("raw", SCORE_ROUND) if round_scores else F.col("raw")
+    return (
+        scored.orderBy(F.desc("raw"), F.asc("doc_id"))
+        .limit(k)
+        .select("doc_id", score.alias("score"))
+    )
 
 
 def bm25_scores_df(
@@ -36,32 +170,15 @@ def bm25_scores_df(
 ) -> DataFrame:
     """The FULL scored match set → (doc_id, raw).
 
-    The shared front of every exhaustive scoring operator: top-k pages
-    (:func:`bm25_topk_df`), field collapsing, and function_score all
-    order/limit this frame differently but score it identically."""
+    Top-k pages (:func:`bm25_topk_df`), field collapsing and
+    function_score all order/limit this frame differently but score it
+    identically."""
     terms = sorted(set(tokenize_str(query_text, analyzer)))
-    base = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col, analyzer).alias("toks")
-    )
-    with_dl = base.select("doc_id", F.size("toks").alias("dl"), "toks")
-    flat = with_dl.select("doc_id", "dl", F.explode("toks").alias("term"))
-    tf = (
-        flat.filter(F.col("term").isin(terms))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    glob = with_dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+    front = term_front(
+        docs, terms, id_col=id_col, text_col=text_col, analyzer=analyzer
     )
     return (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(glob))
-        .select("doc_id", (idf * tfn).alias("part"))
+        term_parts(*front, k1, b)
         .groupBy("doc_id")
         .agg(F.sum("part").alias("raw"))
     )
@@ -88,14 +205,7 @@ def bm25_topk_df(
         docs, query_text, id_col=id_col, text_col=text_col,
         k1=k1, b=b, analyzer=analyzer,
     )
-    out_score = (
-        F.round(F.col("raw"), SCORE_ROUND) if round_scores else F.col("raw")
-    )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", out_score.alias("score"))
-    )
+    return topk_cut(scored, k, round_scores=round_scores)
 
 
 def bm25_topk_sql(

@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.bm25 import SCORE_ROUND, bm25_weight, topk_cut
 
 KINDS = ("must", "should", "must_not", "filter")
 
@@ -206,6 +206,37 @@ def _default_msm(clauses, minimum_should_match: int | None,
     return 0 if has_req else 1
 
 
+def _combine(frames, n_must: int, n_filt: int, msm: int, pass_ids,
+             k: int) -> DataFrame:
+    """(doc_id, clause_id, kind, cscore) rows of every clause → the bool
+    query's top-k: per-doc clause counts gate the match, the must and
+    should scores sum."""
+    pc = frames[0]
+    for fr in frames[1:]:
+        pc = pc.unionByName(fr)
+    agg = pc.groupBy("doc_id").agg(
+        F.sum(F.when(F.col("kind") == "must", 1).otherwise(0)).alias("n_must"),
+        F.sum(F.when(F.col("kind") == "filter", 1).otherwise(0)).alias("n_filt"),
+        F.sum(F.when(F.col("kind") == "must_not", 1).otherwise(0)).alias("n_not"),
+        F.sum(F.when(F.col("kind") == "should", 1).otherwise(0)).alias("n_shd"),
+        F.sum(
+            F.when(F.col("kind").isin("must", "should"), F.col("cscore")).otherwise(
+                0.0
+            )
+        ).alias("raw"),
+    )
+    keep = (
+        (F.col("n_must") == n_must)
+        & (F.col("n_filt") == n_filt)
+        & (F.col("n_not") == 0)
+        & (F.col("n_shd") >= msm)
+    )
+    out = agg.filter(keep)
+    if pass_ids is not None:
+        out = out.join(pass_ids, "doc_id", "leftsemi")
+    return topk_cut(out, k)
+
+
 def bool_topk(
     docs: DataFrame,
     *,
@@ -268,10 +299,7 @@ def bool_topk(
     glob = base.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
     )
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
+    w = bm25_weight("tf", "dl", "df", "n_docs", "avgdl", k1, b)
     frames = []
     if clauses:
         all_terms = sorted({t for _, _, ts in clauses for t in ts})
@@ -296,7 +324,7 @@ def bool_topk(
             .crossJoin(F.broadcast(glob))
             .join(F.broadcast(cmap), "term")
             .groupBy("doc_id", "clause_id", "kind")
-            .agg(F.sum(idf * tfn).alias("cscore"))
+            .agg(F.sum(w).alias("cscore"))
         )
     if pclauses:
         from sparksearch.query.phrase import phrase_tf_col
@@ -316,7 +344,7 @@ def bool_topk(
                         "doc_id",
                         F.lit(cid).alias("clause_id"),
                         F.lit(kind).alias("kind"),
-                        (idf * tfn).alias("cscore"),
+                        w.alias("cscore"),
                     )
                 )
             else:  # presence-only: phrase in must_not / filter
@@ -328,34 +356,7 @@ def bool_topk(
                         F.lit(0.0).alias("cscore"),
                     )
                 )
-    per_clause = frames[0]
-    for fr in frames[1:]:
-        per_clause = per_clause.unionByName(fr)
-    agg = per_clause.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("kind") == "must", 1).otherwise(0)).alias("n_must"),
-        F.sum(F.when(F.col("kind") == "filter", 1).otherwise(0)).alias("n_filt"),
-        F.sum(F.when(F.col("kind") == "must_not", 1).otherwise(0)).alias("n_not"),
-        F.sum(F.when(F.col("kind") == "should", 1).otherwise(0)).alias("n_shd"),
-        F.sum(
-            F.when(F.col("kind").isin("must", "should"), F.col("cscore")).otherwise(
-                0.0
-            )
-        ).alias("raw"),
-    )
-    keep = (
-        (F.col("n_must") == n_must)
-        & (F.col("n_filt") == n_filt)
-        & (F.col("n_not") == 0)
-        & (F.col("n_shd") >= msm)
-    )
-    out = agg.filter(keep)
-    if pass_ids is not None:
-        out = out.join(pass_ids, "doc_id", "leftsemi")
-    return (
-        out.orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return _combine(frames, n_must, n_filt, msm, pass_ids, k)
 
 
 def bool_topk_sql(
@@ -597,31 +598,4 @@ def bool_search(
                     ).alias("cscore"),
                 )
             )
-    pc = frames[0]
-    for fr in frames[1:]:
-        pc = pc.unionByName(fr)
-    agg = pc.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("kind") == "must", 1).otherwise(0)).alias("n_must"),
-        F.sum(F.when(F.col("kind") == "filter", 1).otherwise(0)).alias("n_filt"),
-        F.sum(F.when(F.col("kind") == "must_not", 1).otherwise(0)).alias("n_not"),
-        F.sum(F.when(F.col("kind") == "should", 1).otherwise(0)).alias("n_shd"),
-        F.sum(
-            F.when(F.col("kind").isin("must", "should"), F.col("cscore")).otherwise(
-                0.0
-            )
-        ).alias("raw"),
-    )
-    keep = (
-        (F.col("n_must") == n_must)
-        & (F.col("n_filt") == n_filt)
-        & (F.col("n_not") == 0)
-        & (F.col("n_shd") >= msm)
-    )
-    out = agg.filter(keep)
-    if pass_ids is not None:
-        out = out.join(pass_ids, "doc_id", "leftsemi")
-    return (
-        out.orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return _combine(frames, n_must, n_filt, msm, pass_ids, k)

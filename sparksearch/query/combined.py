@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.bm25 import SCORE_ROUND, bm25_weight, topk_cut
 
 
 def _check_weights(fields: dict[str, float]) -> None:
@@ -46,6 +46,20 @@ def _check_weights(fields: dict[str, float]) -> None:
             raise ValueError(
                 f"combined_fields weight for {f!r} must be >= 1 (got {w})"
             )
+
+
+def _score(tf, dls, dfs, glob, k: int, k1: float, b: float) -> DataFrame:
+    """BM25F top-k: tf' (``tfw``) rows, per-doc dl', union df', globals."""
+    w = bm25_weight("tfw", "dl", "df", "n_docs", "avgdl", k1, b)
+    return topk_cut(
+        tf.join(dls, "doc_id")
+        .join(F.broadcast(dfs), "term")
+        .crossJoin(F.broadcast(glob))
+        .select("doc_id", w.alias("part"))
+        .groupBy("doc_id")
+        .agg(F.sum("part").alias("raw")),
+        k,
+    )
 
 
 def combined_fields_topk(
@@ -98,21 +112,7 @@ def combined_fields_topk(
     dfs = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")  # union df: rows are distinct docs
     )
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tfw") / (
-        F.col("tfw") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    return (
-        tf.join(dls, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(glob))
-        .select("doc_id", (idf * tfn).alias("part"))
-        .groupBy("doc_id")
-        .agg(F.sum("part").alias("raw"))
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return _score(tf, dls, dfs, glob, k, k1, b)
 
 
 def combined_fields_sql(
@@ -255,18 +255,4 @@ def combined_fields_search(
     dfs = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     )
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tfw") / (
-        F.col("tfw") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    return (
-        tf.join(dls, "doc_id")
-        .join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(glob))
-        .select("doc_id", (idf * tfn).alias("part"))
-        .groupBy("doc_id")
-        .agg(F.sum("part").alias("raw"))
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return _score(tf, dls, dfs, glob, k, k1, b)

@@ -39,8 +39,9 @@ from Lucene's minimal-interval enumeration, whose per-interval
   member of EVERY slot (disjointness makes per-slot counting
   unambiguous — one token satisfies exactly one slot).
 
-Scoring: the span-family BM25 pin (df = docs with tf > 0, corpus-wide
-n_docs/avgdl, 4 dp round, doc_id-asc ties).
+Scoring: the tf above as one BM25 pseudo-term (``query/bm25.py``:
+df = docs with tf > 0, corpus-wide n_docs/avgdl, 4 dp round, doc_id-asc
+ties).
 
 Scale shape: the exhaustive tf is a pure-Catalyst higher-order
 expression (no UDF, no explode, whole-stage codegen); the positional
@@ -56,13 +57,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND
-from sparksearch.query.spans import (
-    _span_bm25_sql,
-    _span_bm25_topk,
-    _span_positional_score,
-    _sql_quote,
+from sparksearch.query.bm25 import (
+    indexed_pseudo_term_scores,
+    pseudo_term_topk,
+    topk_cut,
 )
+from sparksearch.query.spans import _span_bm25_sql, _sql_quote
 
 
 def _validate_slots(slots: list[list[str]], analyzer: str) -> list[list[str]]:
@@ -206,7 +206,7 @@ def intervals_topk(
             F.col("toks"), slots, max_gaps, ordered=ordered
         ).alias("tf"),
     )
-    return _span_bm25_topk(stats, k, k1, b)
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def intervals_sql(
@@ -304,6 +304,5 @@ def intervals_positional(
             anchors = F.array_union(anchors, F.col(f"p{j}"))
 
     tf_col = F.size(F.filter(anchors, _ok))
-    return _span_positional_score(
-        joined.select("doc_id", "dl", tf_col.alias("tf")), meta, k
-    )
+    tf_frame = joined.select("doc_id", "dl", tf_col.alias("tf"))
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)

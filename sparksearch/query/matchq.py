@@ -42,7 +42,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.bm25 import (
+    SCORE_ROUND,
+    bm25_idf,
+    bm25_scores_df,
+    bm25_tfn,
+    bm25_topk_df,
+    term_front,
+    term_parts,
+    topk_cut,
+)
 
 EXPLAIN_ROUND = 6
 
@@ -60,29 +69,13 @@ def _required(terms: list[str], operator: str,
 
 def _match_frame(docs: DataFrame, terms: list[str], *, id_col: str,
                  text_col: str, k1: float, b: float, analyzer: str):
-    """Shared front: per-doc (raw BM25 sum, n matched distinct terms)."""
-    base = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col, analyzer).alias("toks")
-    )
-    with_dl = base.select("doc_id", F.size("toks").alias("dl"), "toks")
-    flat = with_dl.select("doc_id", "dl", F.explode("toks").alias("term"))
-    tf = (
-        flat.filter(F.col("term").isin(terms))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    glob = with_dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+    """Per-doc (raw BM25 sum, n matched distinct terms) over the
+    exhaustive term front."""
+    front = term_front(
+        docs, terms, id_col=id_col, text_col=text_col, analyzer=analyzer
     )
     return (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(glob))
-        .select("doc_id", (idf * tfn).alias("part"))
+        term_parts(*front, k1, b)
         .groupBy("doc_id")
         .agg(
             F.sum("part").alias("raw"),
@@ -118,12 +111,7 @@ def match_topk(
         docs, terms, id_col=id_col, text_col=text_col, k1=k1, b=b,
         analyzer=analyzer,
     )
-    return (
-        scored.filter(F.col("n_matched") >= need)
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return topk_cut(scored.filter(F.col("n_matched") >= need), k)
 
 
 def match_topk_sql(
@@ -285,25 +273,12 @@ def explain_score(
     statistics.  Rounded to {EXPLAIN_ROUND} dp for cross-engine hashing.
     """
     terms = sorted(set(tokenize_str(query_text, analyzer)))
-    base = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col, analyzer).alias("toks")
-    )
-    with_dl = base.select("doc_id", F.size("toks").alias("dl"), "toks")
-    flat = with_dl.select("doc_id", "dl", F.explode("toks").alias("term"))
-    tf_all = (
-        flat.filter(F.col("term").isin(terms))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
     # df over the WHOLE corpus (not just the explained doc)
-    df_ = tf_all.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    glob = with_dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    tf_all, df_, glob = term_front(
+        docs, terms, id_col=id_col, text_col=text_col, analyzer=analyzer
     )
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
+    idf = bm25_idf("df", "n_docs")
+    tfn = bm25_tfn("tf", "dl", "avgdl", k1, b)
     r = EXPLAIN_ROUND
     return (
         tf_all.filter(F.col("doc_id") == doc_id)
@@ -482,7 +457,6 @@ def match_bool_prefix_topk(
     analyzer: str = "ascii",
 ) -> DataFrame:
     """Exhaustive match_bool_prefix top-k → (doc_id, score)."""
-    from sparksearch.query.bm25 import bm25_scores_df
     from sparksearch.query.termq import _expand_prefix_exhaustive
 
     terms = tokenize_str(query_text, analyzer)
@@ -517,13 +491,7 @@ def match_bool_prefix_topk(
     allc = legs[0]
     for leg in legs[1:]:
         allc = allc.unionByName(leg)
-    return (
-        allc.groupBy("doc_id")
-        .agg(F.sum("raw").alias("raw"))
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", 4).alias("score"))
-    )
+    return topk_cut(allc.groupBy("doc_id").agg(F.sum("raw").alias("raw")), k)
 
 
 def match_bool_prefix_sql(
@@ -608,13 +576,7 @@ def match_bool_prefix_search(
     allc = legs[0]
     for leg in legs[1:]:
         allc = allc.unionByName(leg)
-    return (
-        allc.groupBy("doc_id")
-        .agg(F.sum("raw").alias("raw"))
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", 4).alias("score"))
-    )
+    return topk_cut(allc.groupBy("doc_id").agg(F.sum("raw").alias("raw")), k)
 
 
 # -- terms_set ----------------------------------------------------------------
@@ -679,12 +641,9 @@ def terms_set_topk(
         F.col(id_col).alias("doc_id"),
         F.greatest(F.col(msm_field).cast("long"), F.lit(1)).alias("need"),
     )
-    return (
-        scored.join(need, "doc_id")
-        .filter(F.col("n_matched") >= F.col("need"))
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
+    return topk_cut(
+        scored.join(need, "doc_id").filter(F.col("n_matched") >= F.col("need")),
+        k,
     )
 
 
@@ -820,7 +779,6 @@ def match_fuzzy_topk(
 ) -> DataFrame:
     """Exhaustive match-with-fuzziness → (doc_id, score)."""
     from sparksearch.index.lexicon import auto_fuzziness
-    from sparksearch.query.bm25 import bm25_topk_df
     from sparksearch.query.termq import _expand_fuzzy_exhaustive
 
     qterms = sorted(set(tokenize_str(query_text, analyzer)))

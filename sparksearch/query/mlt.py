@@ -29,14 +29,19 @@ MaxScore kernel — corpus text is never read.
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str
-from sparksearch.query.bm25 import SCORE_ROUND, bm25_topk_df, bm25_topk_sql
+from sparksearch.query.bm25 import (
+    SCORE_ROUND,
+    bm25_idf,
+    bm25_topk_df,
+    bm25_topk_sql,
+)
+from sparksearch.query.wand import lucene_idf
 
 MAX_QUERY_TERMS = 25
 MIN_TERM_FREQ = 2
@@ -85,7 +90,7 @@ def _select_terms_exhaustive(
     for t in cand:
         df_ = dfs.get(t, 0)
         if df_ >= min_doc_freq:
-            idf = math.log(1.0 + (n_docs - df_ + 0.5) / (df_ + 0.5))
+            idf = float(lucene_idf(n_docs, df_))
             scored.append((-round(tf[t] * idf, 6), t))
     scored.sort()
     return [t for _, t in scored[:max_query_terms]]
@@ -217,9 +222,7 @@ def more_like_this_indexed(
 
     lex = read_lexicon(spark, index.index_dir).select("term", "term_id")
     n_docs = int(meta["n_docs"])
-    idf = F.log(
-        1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
+    idf = bm25_idf("df", n_docs)
     rows = (
         tfr.join(stats, "term_id")
         .filter(F.col("df") >= min_doc_freq)

@@ -39,7 +39,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.bm25 import (
+    SCORE_ROUND,
+    indexed_pseudo_term_scores,
+    pseudo_term_topk,
+    topk_cut,
+)
 
 
 def phrase_tf_col(toks: Column, phrase_terms: list[str], slop: int = 0) -> Column:
@@ -150,33 +155,16 @@ def match_phrase_topk(
     base = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"), tokens_col(text_col, analyzer).alias("toks")
     )
-    # ONE tokenize + position-filter pass: corpus globals (n_docs/avgdl),
-    # phrase df, and the scored rows all read this narrow persisted frame
-    # (24 B/doc; spills via MEMORY_AND_DISK past executor memory).  The
-    # naive form re-derived it for each broadcast aggregate — three full
-    # corpus passes, measured 3× this plan's wall time.
+    # ONE tokenize + position-filter pass: the scorer persists this
+    # narrow frame (24 B/doc) for the globals, the df and the scored
+    # rows.  The naive form re-derived it for each broadcast aggregate —
+    # three full corpus passes, measured 3× this plan's wall time.
     stats = base.select(
         "doc_id",
         F.size("toks").alias("dl"),
         phrase_tf_col(F.col("toks"), terms, slop).alias("tf"),
-    ).persist()
-    glob = stats.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    tf = stats.filter(F.col("tf") > 0)
-    df_ = tf.agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    scored = tf.crossJoin(F.broadcast(df_)).crossJoin(F.broadcast(glob)).select(
-        "doc_id", (idf * tfn).alias("raw")
-    )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def match_phrase_sql(
@@ -265,32 +253,15 @@ def match_phrase_indexed(
         # construction).
         .persist()
     )
-    tf = (
-        cand.select(
-            "doc_id",
-            F.size("toks").alias("dl"),
-            phrase_tf_col(F.col("toks"), terms, slop).alias("tf"),
-        )
-        .filter(F.col("tf") > 0)
-        # both the df aggregate and the scoring read this frame; without
-        # the persist each one re-runs the postings decode + leftsemi
-        # join (measured 2× the whole query).  Verified-candidate rows
-        # only — tiny, LRU-evictable.
-        .persist()
+    # the scorer persists the verified rows: without it the df
+    # aggregate and the scoring each re-run the postings decode +
+    # leftsemi join (measured 2× the whole query)
+    tf_frame = cand.select(
+        "doc_id",
+        F.size("toks").alias("dl"),
+        phrase_tf_col(F.col("toks"), terms, slop).alias("tf"),
     )
-    df_ = tf.agg(F.count(F.lit(1)).alias("df"))
-    k1, b = meta["k1"], meta["b"]
-    n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-    idf = F.log(1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-    )
-    scored = tf.crossJoin(F.broadcast(df_)).select("doc_id", (idf * tfn).alias("raw"))
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
 
 
 # ---------------------------------------------------------------------------
@@ -401,24 +372,8 @@ def match_phrase_prefix_topk(
         "doc_id",
         F.size("toks").alias("dl"),
         phrase_prefix_tf_col(F.col("toks"), terms[:-1], expansions).alias("tf"),
-    ).persist()
-    glob = stats.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    tf = stats.filter(F.col("tf") > 0)
-    df_ = tf.agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    scored = tf.crossJoin(F.broadcast(df_)).crossJoin(F.broadcast(glob)).select(
-        "doc_id", (idf * tfn).alias("raw")
-    )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def match_phrase_prefix_sql(

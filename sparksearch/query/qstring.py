@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.bm25 import SCORE_ROUND, term_parts, term_tf
 from sparksearch.query.phrase import _phrase_tf_sql, phrase_tf_col
 from sparksearch.query.termq import MAX_EXPANSIONS, wildcard_regex
 
@@ -460,24 +460,8 @@ def query_string_topk(
 
     union_terms = lv.union_terms()
     if union_terms:
-        flat = frame.select("doc_id", "dl", F.explode("toks").alias("term"))
-        tf = (
-            flat.filter(F.col("term").isin(union_terms))
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        idf = F.log(
-            1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        )
-        tfn = F.col("tf") / (
-            F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-        )
-        parts = (
-            tf.join(F.broadcast(dfs), "term")
-            .crossJoin(F.broadcast(glob))
-            .select("doc_id", "term", (idf * tfn).alias("part"))
-        )
+        tf, dfs = term_tf(frame, union_terms)
+        parts = term_parts(tf, dfs, glob, k1, b, "term")
         leafagg = parts.groupBy("doc_id").agg(
             *[
                 F.sum(

@@ -43,7 +43,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND, bm25_scores_cte, bm25_scores_df
+from sparksearch.query.bm25 import (
+    SCORE_ROUND,
+    bm25_scores_cte,
+    bm25_scores_df,
+    bm25_weight,
+)
 from sparksearch.query.phrase import _phrase_tf_sql, phrase_tf_col
 
 
@@ -102,11 +107,8 @@ def rescore_topk(
         .persist()  # window-sized; the df aggregate + scoring read it
     )
     pdf = wdocs.filter(F.col("tf") > 0).agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    sec = F.when(F.col("tf") > 0, idf * tfn).otherwise(F.lit(0.0))
+    w = bm25_weight("tf", "dl", "df", "n_docs", "avgdl", k1, b)
+    sec = F.when(F.col("tf") > 0, w).otherwise(F.lit(0.0))
     return (
         wdocs.crossJoin(F.broadcast(pdf))
         .crossJoin(F.broadcast(glob))
@@ -173,13 +175,8 @@ def rescore_search(
         .persist()
     )
     pdf = wdocs.filter(F.col("tf") > 0).agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-    )
-    sec = F.when(F.col("tf") > 0, idf * tfn).otherwise(F.lit(0.0))
+    w = bm25_weight("tf", "dl", "df", n_docs, avgdl, k1, b)
+    sec = F.when(F.col("tf") > 0, w).otherwise(F.lit(0.0))
     return (
         wdocs.crossJoin(F.broadcast(pdf))
         .select(

@@ -25,8 +25,9 @@ single-term clauses, with the window length ``m + slop`` tokens
 Documented deviation from Lucene: SpanScorer weights each enumerated
 span ``1/(1+matchLength)`` and counts span enumerator emissions; the
 anchored-window tf (weight 1) is pinnable bit-identically across all
-three engines.  Scoring is then the standard phrase-family BM25
-(df = docs with tf > 0, corpus-wide n_docs/avgdl, 4 dp round).
+three engines.  Scoring is then the BM25 pseudo-term of
+``query/bm25.py`` (df = docs with tf > 0, corpus-wide n_docs/avgdl,
+4 dp round).
 
 Scale shape: the exhaustive tf is a pure-Catalyst higher-order
 expression (no UDF, no explode); the positional path joins one
@@ -44,7 +45,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.bm25 import (
+    SCORE_ROUND,
+    indexed_pseudo_term_scores,
+    pseudo_term_topk,
+    topk_cut,
+)
 from sparksearch.query.phrase import _phrase_tf_sql, phrase_tf_col
 
 
@@ -116,29 +122,6 @@ def _span_tf_sql(toks_expr: str, terms: list[str], slop: int,
     )
 
 
-def _span_bm25_topk(stats: DataFrame, k: int, k1: float, b: float) -> DataFrame:
-    """Shared span-family scorer: (doc_id, dl, tf) over ALL docs →
-    BM25 top-k (df = docs with tf > 0, corpus-wide n_docs/avgdl)."""
-    stats = stats.persist()
-    glob = stats.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    hits = stats.filter(F.col("tf") > 0)
-    df_ = hits.agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
-    return (
-        hits.crossJoin(F.broadcast(df_))
-        .crossJoin(F.broadcast(glob))
-        .select("doc_id", (idf * tfn).alias("raw"))
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
-
-
 def span_near_topk(
     docs: DataFrame,
     terms: list[str],
@@ -162,7 +145,7 @@ def span_near_topk(
         F.size("toks").alias("dl"),
         span_near_tf_col(F.col("toks"), terms, slop, in_order=in_order).alias("tf"),
     )
-    return _span_bm25_topk(stats, k, k1, b)
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def span_near_sql(
@@ -234,12 +217,7 @@ def span_near_positional(
     analyzer = index.meta.get("analyzer", "ascii")
     terms = _validate_clauses(terms, analyzer)
     if in_order:
-        scored = phrase_scores_all(index, terms, slop)
-        return (
-            scored.orderBy(F.desc("raw"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-        )
+        return topk_cut(phrase_scores_all(index, terms, slop), k)
     distinct = sorted(set(terms))
     info = index.lookup_terms(distinct)
     if len(info) < len(distinct):
@@ -278,30 +256,8 @@ def span_near_positional(
     for i in range(1, len(distinct)):
         anchors = F.array_union(anchors, F.col(f"p{i}"))
     tf_col = F.size(F.filter(anchors, _ok))
-    return _span_positional_score(
-        joined.select("doc_id", "dl", tf_col.alias("tf")), meta, k
-    )
-
-
-def _span_positional_score(tf_frame: DataFrame, meta: dict, k: int) -> DataFrame:
-    """Shared positional-path scorer: (doc_id, dl, tf) rows (tf=0 rows
-    allowed) → BM25 top-k with the INDEX's corpus stats (meta
-    n_docs/avgdl — the sidecar never re-derives them)."""
-    tf = tf_frame.filter(F.col("tf") > 0).persist()
-    df_ = tf.agg(F.count(F.lit(1)).alias("df"))
-    k1, b = meta["k1"], meta["b"]
-    n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-    idf = F.log(1.0 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfn = F.col("tf") / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-    )
-    return (
-        tf.crossJoin(F.broadcast(df_))
-        .select("doc_id", (idf * tfn).alias("raw"))
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", SCORE_ROUND).alias("score"))
-    )
+    tf_frame = joined.select("doc_id", "dl", tf_col.alias("tf"))
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
 
 
 # ---------------------------------------------------------------------------
@@ -321,7 +277,7 @@ def _span_positional_score(tf_frame: DataFrame, meta: dict, k: int) -> DataFrame
 # * span_not(include, exclude, pre, post): include occurrences with NO
 #   exclude occurrence in [p-pre, p+post] (Lucene's pre/post buffer).
 #
-# Scoring is the span-family BM25 pin (tf above, df = docs with tf>0,
+# Scoring is the BM25 pseudo-term (tf above, df = docs with tf>0,
 # corpus-wide n_docs/avgdl, 4 dp).  Exhaustive paths are pure-Catalyst
 # higher-order expressions; positional paths read only bucket-pruned
 # position lists (buffer arithmetic is shift-invariant, so 0-based
@@ -364,7 +320,7 @@ def span_first_topk(
     )
     tf = F.size(F.filter(F.slice("toks", 1, end), _eq(term))) if end else F.lit(0)
     stats = base.select("doc_id", F.size("toks").alias("dl"), tf.alias("tf"))
-    return _span_bm25_topk(stats, k, k1, b)
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def span_first_sql(
@@ -409,7 +365,7 @@ def span_first_positional(index, term: str, end: int, k: int = 10) -> DataFrame:
     tf_frame = leg.select(
         "doc_id", "dl", F.size(F.filter("positions", _lt_end)).alias("tf")
     )
-    return _span_positional_score(tf_frame, meta, k)
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
 
 
 def span_or_topk(
@@ -441,7 +397,7 @@ def span_or_topk(
         F.size("toks").alias("dl"),
         F.size(F.filter("toks", _member)).alias("tf"),
     )
-    return _span_bm25_topk(stats, k, k1, b)
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def span_or_sql(
@@ -495,7 +451,7 @@ def span_or_positional(index, terms: list[str], k: int = 10) -> DataFrame:
         F.lit(0),
     )
     tf_frame = joined.select("doc_id", dl.alias("dl"), tf.alias("tf"))
-    return _span_positional_score(tf_frame, meta, k)
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
 
 
 def span_not_topk(
@@ -558,7 +514,7 @@ def span_not_topk(
         "dl",
         F.size(F.filter("pi", _clear(F.col("pe")))).alias("tf"),
     )
-    return _span_bm25_topk(stats, k, k1, b)
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def span_not_sql(
@@ -628,7 +584,7 @@ def span_not_positional(
     tf_frame = joined.select(
         "doc_id", "dl", F.size(F.filter("pi", _ok)).alias("tf")
     )
-    return _span_positional_score(tf_frame, meta, k)
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
 
 
 # ---------------------------------------------------------------------------
@@ -759,7 +715,7 @@ def span_containing_topk(
     stats = base.select(
         "doc_id", F.size("toks").alias("dl"), tf.alias("tf")
     )
-    return _span_bm25_topk(stats, k, k1, b)
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def span_containing_sql(
@@ -835,7 +791,7 @@ def span_within_topk(
     stats = base.select(
         "doc_id", F.size("toks").alias("dl"), tf.alias("tf")
     )
-    return _span_bm25_topk(stats, k, k1, b)
+    return pseudo_term_topk(stats, k, k1, b)
 
 
 def span_within_sql(

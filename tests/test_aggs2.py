@@ -497,13 +497,20 @@ def test_matrix_stats(tiny, spark):
 
 
 def test_scripted_metric_rms(tiny):
+    import warnings
+
     import numpy as np
 
     # match set = docs 1-4; null-source doc 4 lands in no bucket
-    out = {r["source"]: r["rms"] for r in
-           aggs.scripted_metric_rms(tiny, "scan", "source", "n_chars").collect()}
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = {r["source"]: r["rms"] for r in aggs.scripted_metric_rms(
+            tiny, "scan", "source", "n_chars").collect()}
     exp_a = round(float(np.sqrt((50.0**2 + 120.0**2) / 2)), 4)
     assert out == {"a": exp_a, "b": 130.0}
+    # the reduce runs as a plain grouped map, without a type-hint warning
+    assert not [w for w in caught if issubclass(w.category, UserWarning)
+                and "eval type" in str(w.message)]
 
 
 def test_scripted_metric_custom_reduce(tiny, spark):
