@@ -15,6 +15,10 @@ Size: the lexicon is vocabulary-sized (tens of millions of rows at
 extra tokenize pass, which is why it is OPT-IN (``build_lexicon``)
 rather than part of every build.
 
+Every rewrite — prefix, fuzzy, wildcard, regexp, the span_multi
+wildcard slot and the query tree's MultiTerm leaves — runs the one
+pipeline :func:`rewrite` (term range, predicate, order, cap).
+
 Expansion semantics (pinned; both expanders are deterministic):
 
 * ``expand_prefix`` — terms starting with the prefix, dictionary order
@@ -31,7 +35,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import tokens_col
@@ -99,30 +103,45 @@ def read_lexicon(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(lexicon_path(index_dir))
 
 
+def rewrite(
+    spark: SparkSession,
+    index_dir: str,
+    *,
+    head: str = "",
+    where: Column | None = None,
+    rank: Column | None = None,
+    max_expansions: int = MAX_EXPANSIONS,
+) -> list[str]:
+    """The one multi-term rewrite: lexicon → ``head`` term range →
+    ``where`` → order → cap → terms.
+
+    The ``term >= head AND term < head + U+FFFF`` range pushes into
+    parquet row-group stats (the sidecar is term-sorted), so only the
+    covering files are read regardless of vocabulary size.  Terms come
+    out in dictionary order, or by (``rank`` asc, term asc).
+    """
+    lx = read_lexicon(spark, index_dir)
+    if head:
+        lx = lx.filter((F.col("term") >= head) & (F.col("term") < head + "\uffff"))
+    if where is not None:
+        lx = lx.filter(where)
+    if rank is None:
+        lx = lx.orderBy("term")
+    else:
+        lx = lx.select("term", rank.alias("_d")).orderBy(F.asc("_d"), F.asc("term"))
+    return [r["term"] for r in lx.limit(max_expansions).collect()]
+
+
 def expand_prefix(
     spark: SparkSession,
     index_dir: str,
     prefix: str,
     max_expansions: int = MAX_EXPANSIONS,
 ) -> list[str]:
-    """Prefix rewrite → expanded terms, dictionary order, capped.
-
-    The ``term >= prefix AND term < prefix + U+FFFF`` range pushes into
-    parquet row-group stats (the sidecar is term-sorted), so only the
-    covering files are read regardless of vocabulary size.
-    """
+    """Prefix rewrite → expanded terms, dictionary order, capped."""
     if not prefix:
         raise ValueError("prefix must be non-empty")
-    rows = (
-        read_lexicon(spark, index_dir)
-        .filter(
-            (F.col("term") >= prefix) & (F.col("term") < prefix + "￿")
-        )
-        .orderBy("term")
-        .limit(max_expansions)
-        .collect()
-    )
-    return [r["term"] for r in rows]
+    return rewrite(spark, index_dir, head=prefix, max_expansions=max_expansions)
 
 
 def expand_fuzzy(
@@ -142,16 +161,8 @@ def expand_fuzzy(
     exists for exactly this cost reason).
     """
     edits = auto_fuzziness(term) if max_edits is None else int(max_edits)
-    lx = read_lexicon(spark, index_dir)
-    if prefix_length > 0:
-        p = term[:prefix_length]
-        lx = lx.filter((F.col("term") >= p) & (F.col("term") < p + "￿"))
     lev = F.levenshtein(F.col("term"), F.lit(term))
-    rows = (
-        lx.filter(lev <= edits)
-        .select("term", lev.alias("_d"))
-        .orderBy(F.asc("_d"), F.asc("term"))
-        .limit(max_expansions)
-        .collect()
+    return rewrite(
+        spark, index_dir, head=term[:prefix_length], where=lev <= edits,
+        rank=lev, max_expansions=max_expansions,
     )
-    return [r["term"] for r in rows]

@@ -46,23 +46,32 @@ parquet (PushedFilters).  They are rejected in ``must``/``should``
 A bool with ONLY structured clauses is OpenSearch's filtered match_all:
 every passing doc at constant score 0.0, doc_id order.
 
-Scale shape (exhaustive path): ONE tokenize pass — per-(doc, term) tf
-for the union of clause terms, map-side-combined groupBys, then a
-clause-membership broadcast join (the clause→term map is a literal)
-and one per-doc aggregate; no UDFs, no per-clause corpus scans.  The
-indexed path (`bool_search`) decodes each clause's pruned posting
-lists instead (conjunctions need FULL match sets, so it uses the
-exhaustive kernel over the pruned blocks, not a top-k leg) and never
-touches the corpus.
+Both executors evaluate the request as one query tree
+(`query/qtree.py`): must/should/must_not/filter of Term, Phrase and
+Field leaves.  The exhaustive path (`bool_topk`) tokenizes once, sums
+every scoring clause's BM25 in one conditional-sum groupBy over the
+clause terms' tf rows, and reads presence-only clauses straight off
+the token array.  The indexed path (`bool_search`) runs each scoring
+clause through the exhaustive kernel over its pruned posting blocks
+(conjunctions need FULL match sets, not a top-k leg), decodes
+presence-only clauses to id sets, and pivots them in one
+groupBy(doc_id); it never touches the corpus text.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND, bm25_weight, topk_cut
+from sparksearch.analyze import duckdb_tokens_expr, tokenize_str
+from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.qtree import (
+    Bool,
+    Field,
+    Phrase,
+    Term,
+    evaluate_exhaustive,
+    evaluate_index,
+)
 
 KINDS = ("must", "should", "must_not", "filter")
 
@@ -148,27 +157,6 @@ def _structured(must_not, filter) -> tuple[list[dict], list[dict]]:
     return out[0], out[1]
 
 
-def _pred_col(d: dict):
-    """Structured clause → boolean Column; null field never matches."""
-    kind, body = next(iter(d.items()))
-    c = F.col(body["field"])
-    if kind == "exists":
-        return c.isNotNull()
-    if kind == "term":
-        p = c == F.lit(body["value"])
-    elif kind == "terms":
-        p = c.isin(list(body["values"]))
-    else:
-        p = F.lit(True)
-        for key, _ in _RANGE_OPS:
-            if key in body:
-                v = F.lit(body[key])
-                p = p & {
-                    "gte": c >= v, "gt": c > v, "lte": c <= v, "lt": c < v,
-                }[key]
-    return F.coalesce(p & c.isNotNull(), F.lit(False))
-
-
 def _sql_lit(v) -> str:
     if isinstance(v, str):
         return "'" + v.replace("'", "''") + "'"
@@ -206,35 +194,34 @@ def _default_msm(clauses, minimum_should_match: int | None,
     return 0 if has_req else 1
 
 
-def _combine(frames, n_must: int, n_filt: int, msm: int, pass_ids,
-             k: int) -> DataFrame:
-    """(doc_id, clause_id, kind, cscore) rows of every clause → the bool
-    query's top-k: per-doc clause counts gate the match, the must and
-    should scores sum."""
-    pc = frames[0]
-    for fr in frames[1:]:
-        pc = pc.unionByName(fr)
-    agg = pc.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("kind") == "must", 1).otherwise(0)).alias("n_must"),
-        F.sum(F.when(F.col("kind") == "filter", 1).otherwise(0)).alias("n_filt"),
-        F.sum(F.when(F.col("kind") == "must_not", 1).otherwise(0)).alias("n_not"),
-        F.sum(F.when(F.col("kind") == "should", 1).otherwise(0)).alias("n_shd"),
-        F.sum(
-            F.when(F.col("kind").isin("must", "should"), F.col("cscore")).otherwise(
-                0.0
-            )
-        ).alias("raw"),
+def _bool_tree(must, should, must_not, filter, minimum_should_match,
+               analyzer: str):
+    """The bool request → a :class:`qtree.Bool` (None: no clause at all).
+
+    The match and phrase clauses form the inner bool.  A hit must match
+    one of its must/should/filter clauses (Lucene: a bool without a
+    required clause needs one should), so with no must and no filter
+    clause at least one should must match whatever msm says.  The
+    structured clauses then gate that inner bool; on their own they
+    are the filtered match_all."""
+    sf, sn = _structured(must_not, filter)
+    clauses = _clauses(must, should, must_not, filter, analyzer)
+    pclauses = _phrase_clauses(
+        must, should, must_not, filter, analyzer, len(clauses)
     )
-    keep = (
-        (F.col("n_must") == n_must)
-        & (F.col("n_filt") == n_filt)
-        & (F.col("n_not") == 0)
-        & (F.col("n_shd") >= msm)
-    )
-    out = agg.filter(keep)
-    if pass_ids is not None:
-        out = out.join(pass_ids, "doc_id", "leftsemi")
-    return topk_cut(out, k)
+    gates = dict(filter=[Field(d) for d in sf], must_not=[Field(d) for d in sn])
+    if not (clauses or pclauses):
+        return Bool(**gates) if sf or sn else None
+    slots = {kind: [] for kind in KINDS}
+    for _, kind, terms in clauses:
+        slots[kind].append(Term(terms))
+    for _, kind, terms, slop in pclauses:
+        slots[kind].append(Phrase(terms, slop))
+    msm = _default_msm(clauses + pclauses, minimum_should_match)
+    if not slots["must"] and not slots["filter"]:
+        msm = max(msm, 1)
+    inner = Bool(msm=msm, **slots)
+    return Bool(must=[inner], **gates) if sf or sn else inner
 
 
 def bool_topk(
@@ -253,110 +240,13 @@ def bool_topk(
     analyzer: str = "ascii",
 ) -> DataFrame:
     """Exhaustive bool query → (doc_id, score) top-k."""
-    sf, sn = _structured(must_not, filter)
-    gate = None
-    for d in sf:
-        p = _pred_col(d)
-        gate = p if gate is None else gate & p
-    for d in sn:
-        p = ~_pred_col(d)
-        gate = p if gate is None else gate & p
-    clauses = _clauses(must, should, must_not, filter, analyzer)
-    pclauses = _phrase_clauses(
-        must, should, must_not, filter, analyzer, len(clauses)
+    tree = _bool_tree(
+        must, should, must_not, filter, minimum_should_match, analyzer
     )
-    empty = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.lit(0.0).alias("score")
-    ).filter(F.lit(False))
-    if not clauses and not pclauses:
-        if gate is None:
-            return empty
-        # filtered match_all: constant score, doc_id order
-        return (
-            docs.filter(gate)
-            .filter(F.col(text_col).isNotNull())
-            .select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.lit(0.0).alias("score"),
-            )
-            .orderBy("doc_id")
-            .limit(k)
-        )
-    # scoring stats stay corpus-wide: the structured gate restricts the
-    # scored candidates at the end, never the statistics
-    pass_ids = (
-        docs.filter(gate).select(F.col(id_col).alias("doc_id"))
-        if gate is not None
-        else None
+    return evaluate_exhaustive(
+        docs, tree, k, id_col=id_col, text_col=text_col, k1=k1, b=b,
+        analyzer=analyzer,
     )
-    msm = _default_msm(clauses + pclauses, minimum_should_match, bool(sf))
-    n_must = sum(1 for c in clauses + pclauses if c[1] == "must")
-    n_filt = sum(1 for c in clauses + pclauses if c[1] == "filter")
-
-    base = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col, analyzer).alias("toks")
-    )
-    glob = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("toks")).alias("avgdl")
-    )
-    w = bm25_weight("tf", "dl", "df", "n_docs", "avgdl", k1, b)
-    frames = []
-    if clauses:
-        all_terms = sorted({t for _, _, ts in clauses for t in ts})
-        spark = docs.sparkSession
-        cmap = spark.createDataFrame(
-            [(cid, kind, t) for cid, kind, ts in clauses for t in ts],
-            "clause_id int, kind string, term string",
-        )
-        tf = (
-            base.select(
-                "doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term")
-            )
-            .filter(F.col("term").isin(all_terms))
-            .groupBy("doc_id", "dl", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        # (doc, clause) score + match flag — a term in N clauses scores
-        # N times
-        frames.append(
-            tf.join(F.broadcast(df_), "term")
-            .crossJoin(F.broadcast(glob))
-            .join(F.broadcast(cmap), "term")
-            .groupBy("doc_id", "clause_id", "kind")
-            .agg(F.sum(w).alias("cscore"))
-        )
-    if pclauses:
-        from sparksearch.query.phrase import phrase_tf_col
-
-        for cid, kind, pterms, slop in pclauses:
-            st = base.select(
-                "doc_id",
-                F.size("toks").alias("dl"),
-                phrase_tf_col(F.col("toks"), pterms, slop).alias("tf"),
-            ).filter(F.col("tf") > 0)
-            if kind in ("must", "should"):
-                dfp = st.agg(F.count(F.lit(1)).alias("df"))
-                frames.append(
-                    st.crossJoin(F.broadcast(dfp))
-                    .crossJoin(F.broadcast(glob))
-                    .select(
-                        "doc_id",
-                        F.lit(cid).alias("clause_id"),
-                        F.lit(kind).alias("kind"),
-                        w.alias("cscore"),
-                    )
-                )
-            else:  # presence-only: phrase in must_not / filter
-                frames.append(
-                    st.select(
-                        "doc_id",
-                        F.lit(cid).alias("clause_id"),
-                        F.lit(kind).alias("kind"),
-                        F.lit(0.0).alias("cscore"),
-                    )
-                )
-    return _combine(frames, n_must, n_filt, msm, pass_ids, k)
 
 
 def bool_topk_sql(
@@ -489,113 +379,18 @@ def bool_search(
     docs: DataFrame | None = None,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Engine path: per-clause FULL scoring from pruned postings.
-
-    Each scoring clause runs the exhaustive kernel over ITS pruned
-    posting blocks (a bool's conjunction/exclusion semantics need every
-    matching doc, so a top-k leg can't feed it); presence-only clauses
-    (filter / must_not) decode to id sets.  The per-clause frames then
-    combine with the same rules as :func:`bool_topk` — rank-identical
-    to it (pytest-pinned).  Corpus text: never read.  Structured
-    (dict) clauses gate on document FIELD values the index does not
-    store, so they require ``docs`` — a pruned (id + field columns)
-    scan of the source table, the analog of Lucene doc values.
-    ``match_phrase`` clauses verify from the positions sidecar
-    (Lucene's own answer — text fields index positions), so they
-    require the index to have one (``build_positions``).
+    """Engine path: the bool's tree over pruned postings
+    (:func:`qtree.evaluate_index`) — rank-identical to :func:`bool_topk`
+    (pytest-pinned).  Corpus text: never read.  Structured (dict)
+    clauses gate on document FIELD values the index does not store, so
+    they require ``docs`` — a pruned (id + field columns) scan of the
+    source table, the analog of Lucene doc values.  ``match_phrase``
+    clauses verify from the positions sidecar (Lucene's own answer —
+    text fields index positions), so they require the index to have
+    one (``build_positions``).
     """
-    from sparksearch.query.matchset import match_ids_for_terms
-
-    spark = index.spark
-    sf, sn = _structured(must_not, filter)
-    gate = None
-    for d in sf:
-        p = _pred_col(d)
-        gate = p if gate is None else gate & p
-    for d in sn:
-        p = ~_pred_col(d)
-        gate = p if gate is None else gate & p
-    if gate is not None and docs is None:
-        raise ValueError(
-            "structured clauses gate on field values: pass docs= (the "
-            "source table) to bool_search"
-        )
-    analyzer = index.meta.get("analyzer", "ascii")
-    clauses = _clauses(must, should, must_not, filter, analyzer)
-    pclauses = _phrase_clauses(
-        must, should, must_not, filter, analyzer, len(clauses)
+    tree = _bool_tree(
+        must, should, must_not, filter, minimum_should_match,
+        index.meta.get("analyzer", "ascii"),
     )
-    if pclauses:
-        index._refresh_if_stale()
-    if pclauses and not index.meta.get("has_positions"):
-        raise ValueError(
-            "match_phrase clauses in bool_search verify from the "
-            "positions sidecar — run build_positions() on this index"
-        )
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    pass_ids = (
-        docs.filter(gate).select(F.col(id_col).cast("long").alias("doc_id"))
-        if gate is not None
-        else None
-    )
-    if not clauses and not pclauses:
-        if pass_ids is None:
-            return empty
-        # filtered match_all = all INDEXED docs passing the gate (the
-        # doclens sidecar is the index's doc list; a null-text row in
-        # the source table was never indexed)
-        import os as _os
-
-        indexed = spark.read.parquet(
-            _os.path.join(index.index_dir, "doclens")
-        ).select("doc_id")
-        return (
-            pass_ids.join(indexed, "doc_id", "leftsemi")
-            .select("doc_id", F.lit(0.0).alias("score"))
-            .orderBy("doc_id")
-            .limit(k)
-        )
-    msm = _default_msm(clauses + pclauses, minimum_should_match, bool(sf))
-    n_must = sum(1 for c in clauses + pclauses if c[1] == "must")
-    n_filt = sum(1 for c in clauses + pclauses if c[1] == "filter")
-
-    frames = []
-    for cid, kind, terms in clauses:
-        if kind in ("must", "should"):
-            scored = index.score_all(" ".join(terms))
-            frames.append(
-                scored.select(
-                    "doc_id",
-                    F.lit(cid).alias("clause_id"),
-                    F.lit(kind).alias("kind"),
-                    F.col("score").alias("cscore"),
-                )
-            )
-        else:
-            ids = match_ids_for_terms(index, terms, mode="any")
-            frames.append(
-                ids.select(
-                    "doc_id",
-                    F.lit(cid).alias("clause_id"),
-                    F.lit(kind).alias("kind"),
-                    F.lit(0.0).alias("cscore"),
-                )
-            )
-    if pclauses:
-        from sparksearch.index.positions import phrase_scores_all
-
-        for cid, kind, pterms, slop in pclauses:
-            scored = phrase_scores_all(index, pterms, slop)
-            frames.append(
-                scored.select(
-                    "doc_id",
-                    F.lit(cid).alias("clause_id"),
-                    F.lit(kind).alias("kind"),
-                    (
-                        F.col("raw")
-                        if kind in ("must", "should")
-                        else F.lit(0.0)
-                    ).alias("cscore"),
-                )
-            )
-    return _combine(frames, n_must, n_filt, msm, pass_ids, k)
+    return evaluate_index(index, tree, k, docs=docs, id_col=id_col)

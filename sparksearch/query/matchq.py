@@ -45,12 +45,18 @@ from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
 from sparksearch.query.bm25 import (
     SCORE_ROUND,
     bm25_idf,
-    bm25_scores_df,
     bm25_tfn,
     bm25_topk_df,
     term_front,
     term_parts,
     topk_cut,
+)
+from sparksearch.query.qtree import (
+    Bool,
+    MultiTerm,
+    Term,
+    evaluate_exhaustive,
+    evaluate_index,
 )
 
 EXPLAIN_ROUND = 6
@@ -444,6 +450,15 @@ def simple_query_string_search(
 # the DuckDB oracle; ties doc_id asc; round 4 dp.
 
 
+def _mbp_tree(terms: list[str], max_expansions: int):
+    """Analyzed terms → should(Term(leading terms), prefix(last term))."""
+    if not terms:
+        return None
+    should = [Term(sorted(set(terms[:-1])))] if terms[:-1] else []
+    should.append(MultiTerm("prefix", terms[-1], max_expansions))
+    return Bool(should=should, msm=1)
+
+
 def match_bool_prefix_topk(
     docs: DataFrame,
     query_text: str,
@@ -457,41 +472,10 @@ def match_bool_prefix_topk(
     analyzer: str = "ascii",
 ) -> DataFrame:
     """Exhaustive match_bool_prefix top-k → (doc_id, score)."""
-    from sparksearch.query.termq import _expand_prefix_exhaustive
-
-    terms = tokenize_str(query_text, analyzer)
-    empty = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.lit(0.0).alias("score")
-    ).filter(F.lit(False))
-    if not terms:
-        return empty
-    firsts, pre = terms[:-1], terms[-1]
-    exps = _expand_prefix_exhaustive(docs, pre, max_expansions, text_col, analyzer)
-    legs = []
-    if firsts:
-        legs.append(
-            bm25_scores_df(
-                docs, " ".join(firsts), id_col=id_col, text_col=text_col,
-                k1=k1, b=b, analyzer=analyzer,
-            )
-        )
-    if exps:
-        legs.append(
-            docs.filter(F.col(text_col).isNotNull())
-            .filter(
-                F.arrays_overlap(
-                    tokens_col(text_col, analyzer),
-                    F.array(*[F.lit(t) for t in exps]),
-                )
-            )
-            .select(F.col(id_col).alias("doc_id"), F.lit(1.0).alias("raw"))
-        )
-    if not legs:
-        return empty
-    allc = legs[0]
-    for leg in legs[1:]:
-        allc = allc.unionByName(leg)
-    return topk_cut(allc.groupBy("doc_id").agg(F.sum("raw").alias("raw")), k)
+    return evaluate_exhaustive(
+        docs, _mbp_tree(tokenize_str(query_text, analyzer), max_expansions),
+        k, id_col=id_col, text_col=text_col, k1=k1, b=b, analyzer=analyzer,
+    )
 
 
 def match_bool_prefix_sql(
@@ -549,34 +533,9 @@ def match_bool_prefix_search(
     scorer (`score_all`), the prefix clause through the lexicon rewrite
     + pruned id-set decode — the corpus is never read.  Rank-identical
     to :func:`match_bool_prefix_topk` (pytest)."""
-    from sparksearch.index.lexicon import expand_prefix
-    from sparksearch.query.matchset import match_ids_for_terms
-
-    index._refresh_if_stale()
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    terms = index._tokenize(query_text)
-    if not terms:
-        return empty
-    firsts, pre = terms[:-1], terms[-1]
-    exps = expand_prefix(spark, index.index_dir, pre, max_expansions)
-    legs = []
-    if firsts:
-        legs.append(index.score_all(" ".join(firsts)).select(
-            "doc_id", F.col("score").alias("raw")
-        ))
-    if exps:
-        legs.append(
-            match_ids_for_terms(index, exps, mode="any").select(
-                "doc_id", F.lit(1.0).alias("raw")
-            )
-        )
-    if not legs:
-        return empty
-    allc = legs[0]
-    for leg in legs[1:]:
-        allc = allc.unionByName(leg)
-    return topk_cut(allc.groupBy("doc_id").agg(F.sum("raw").alias("raw")), k)
+    return evaluate_index(
+        index, _mbp_tree(index._tokenize(query_text), max_expansions), k
+    )
 
 
 # -- terms_set ----------------------------------------------------------------

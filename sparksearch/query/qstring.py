@@ -38,18 +38,17 @@ matches; its score is Σ MUST scores + Σ matched SHOULD scores, times
 any ``^boost``.  A level with only MUST_NOT clauses matches NOTHING
 (Lucene's pure-negative rule).  Output ties doc_id asc, 4 dp rounding.
 
-How it runs (the part Lucene delegates to one index segment at a
-time, re-planned for Spark): the parse tree is compiled ONCE into
-SQL-syntax boolean/score expressions over per-leaf columns, evaluated
-by Spark via ``F.expr`` and by the DuckDB twin verbatim — a single
-shared compilation, two executors, zero drift.  The data plan is ONE
-tokenize pass: per-(doc, term) BM25 parts for the union of term-leaf
-vocabularies → one groupBy(doc) with a conditional sum per leaf (the
-leaf→term map is a literal, so this is a map-side-combined aggregate,
-no joins per clause); phrase leaves are array-kernel columns over the
-same token arrays; wildcard expansion is a capped dictionary scan.
-Everything stays in whole-stage codegen; the only exchanges are the
-tf groupBy and the final TakeOrderedAndProject.
+How it runs: the parse tree becomes one query tree
+(`query/qtree.py` — Term, Phrase, MultiTerm and Field leaves under
+Bool and Boost nodes), and both executors evaluate that tree.  The
+exhaustive path tokenizes once and feeds every term leaf from one
+conditional-sum groupBy over the leaves' tf rows; phrase leaves are
+array-kernel columns over the same token arrays, wildcard expansion is
+a capped dictionary scan.  The engine path feeds each leaf from the
+index (pruned postings, the positions sidecar, the lexicon) and pivots
+the leaf frames in one groupBy(doc_id).  The DuckDB twin compiles the
+parse tree to SQL on its own (:func:`compile_query_string`); no engine
+path runs that SQL, so a compiler bug cannot hide in both.
 """
 
 from __future__ import annotations
@@ -57,11 +56,20 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import SCORE_ROUND, term_parts, term_tf
-from sparksearch.query.phrase import _phrase_tf_sql, phrase_tf_col
+from sparksearch.analyze import duckdb_tokens_expr, tokenize_str
+from sparksearch.query.bm25 import SCORE_ROUND
+from sparksearch.query.phrase import _phrase_tf_sql
+from sparksearch.query.qtree import (
+    Bool,
+    Boost,
+    Field,
+    MultiTerm,
+    Phrase,
+    Term,
+    evaluate_exhaustive,
+    evaluate_index,
+)
 from sparksearch.query.termq import MAX_EXPANSIONS, wildcard_regex
 
 MUST, SHOULD, MUST_NOT = "must", "should", "must_not"
@@ -312,7 +320,7 @@ def parse_query_string(
 
 
 # ---------------------------------------------------------------------------
-# compilation: AST → shared SQL-syntax matched/score expressions
+# the DuckDB twin's compiler: AST → SQL matched/score expressions
 # ---------------------------------------------------------------------------
 
 
@@ -351,11 +359,7 @@ def _collect(ast, lv: _Leaves):
 
 
 def _emit(ast, lv: _Leaves, counters: dict) -> tuple[str, str]:
-    """→ (matched_sql, score_sql) over the evaluation frame's columns.
-
-    The SAME strings run through Spark ``F.expr`` and DuckDB — the
-    emitted subset (CASE WHEN / AND / OR / NOT / coalesce / arithmetic)
-    is common to both dialects."""
+    """→ (matched_sql, score_sql) over the twin's evaluation frame."""
     kind = ast[0]
     if kind == "term":
         i = counters["term"]
@@ -412,7 +416,7 @@ def compile_query_string(
     analyzer: str = "ascii",
     text_col: str = "text",
 ):
-    """→ (leaves, matched_sql, score_sql); shared by both executors."""
+    """→ (leaves, matched_sql, score_sql) for :func:`query_string_sql`."""
     ast = parse_query_string(
         query, default_operator=default_operator, analyzer=analyzer,
         text_col=text_col,
@@ -424,8 +428,43 @@ def compile_query_string(
 
 
 # ---------------------------------------------------------------------------
-# Spark executor
+# Spark executors: the parse tree as one query tree
 # ---------------------------------------------------------------------------
+
+
+def _tree(ast, max_expansions: int):
+    """Parse tree → :mod:`qtree` nodes."""
+    kind = ast[0]
+    if kind == "bool":
+        slots = {MUST: [], SHOULD: [], MUST_NOT: []}
+        for occur, child in ast[1]:
+            slots[occur].append(_tree(child, max_expansions))
+        # a level with no MUST needs one SHOULD (pure-negative: nothing)
+        return Bool(msm=0 if slots[MUST] else 1, **slots)
+    if kind == "boost":
+        return Boost(_tree(ast[1], max_expansions), ast[2])
+    if kind == "term":
+        return Term(ast[1])
+    if kind == "phrase":
+        return Phrase(ast[1], ast[2])
+    if kind == "wild":
+        return MultiTerm("wildcard", ast[1], max_expansions)
+    if kind == "fterm":
+        _, fld, value, is_num = ast
+        return Field({"term": {
+            "field": fld,
+            "value": (float(value) if "." in value else int(value))
+            if is_num else value,
+        }})
+    if kind == "frange":
+        _, fld, lo, hi, lo_inc, hi_inc = ast
+        body = {"field": fld}
+        if lo is not None:
+            body["gte" if lo_inc else "gt"] = lo
+        if hi is not None:
+            body["lte" if hi_inc else "lt"] = hi
+        return Field({"range": body})
+    raise QueryStringError(f"unknown AST node {kind!r}")
 
 
 def query_string_topk(
@@ -442,84 +481,13 @@ def query_string_topk(
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
     """Exhaustive query_string → (doc_id, score), ties doc_id asc."""
-    lv, matched_sql, score_sql = compile_query_string(
+    ast = parse_query_string(
         query, default_operator=default_operator, analyzer=analyzer,
         text_col=text_col,
     )
-    meta_cols = sorted(set(lv.fields))
-    base = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        tokens_col(text_col, analyzer).alias("toks"),
-        *[F.col(c) for c in meta_cols],
-    )
-    frame = base.withColumn("dl", F.size("toks"))
-    glob = frame.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-
-    union_terms = lv.union_terms()
-    if union_terms:
-        tf, dfs = term_tf(frame, union_terms)
-        parts = term_parts(tf, dfs, glob, k1, b, "term")
-        leafagg = parts.groupBy("doc_id").agg(
-            *[
-                F.sum(
-                    F.when(F.col("term").isin(ts), F.col("part"))
-                ).alias(f"ts_{i}")
-                for i, ts in enumerate(lv.terms)
-            ]
-        )
-        frame = frame.join(leafagg, "doc_id", "left")
-
-    for j, (terms, slop) in enumerate(lv.phrases):
-        frame = frame.withColumn(
-            f"ptf_{j}", phrase_tf_col(F.col("toks"), terms, slop)
-        )
-    if lv.phrases:
-        pstats = frame.agg(
-            *[
-                F.count(F.when(F.col(f"ptf_{j}") > 0, 1))
-                .cast("double")
-                .alias(f"pdf_{j}")
-                for j in range(len(lv.phrases))
-            ]
-        )
-        frame = frame.crossJoin(F.broadcast(pstats))
-    frame = frame.crossJoin(F.broadcast(glob))
-    for j in range(len(lv.phrases)):
-        frame = frame.withColumn(
-            f"ps_{j}",
-            F.expr(
-                f"CASE WHEN ptf_{j} > 0 THEN "
-                f"ln(1.0 + (n_docs - pdf_{j} + 0.5) / (pdf_{j} + 0.5)) "
-                f"* ptf_{j} / (ptf_{j} + {k1} * (1.0 - {b} + {b} * dl / avgdl)) "
-                f"ELSE 0.0 END"
-            ),
-        )
-
-    for w, pattern in enumerate(lv.wilds):
-        from sparksearch.query.termq import _expand_wildcard_exhaustive
-
-        exp = _expand_wildcard_exhaustive(
-            docs, pattern, max_expansions, text_col, analyzer
-        )
-        frame = frame.withColumn(
-            f"wm_{w}",
-            F.arrays_overlap(
-                F.col("toks"), F.array(*[F.lit(t) for t in exp])
-            )
-            if exp
-            else F.lit(False),
-        )
-
-    scored = frame.withColumn("qscore", F.expr(score_sql)).filter(
-        F.expr(matched_sql)
-    )
-    return (
-        scored.orderBy(F.desc("qscore"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("qscore", SCORE_ROUND).alias("score"))
+    return evaluate_exhaustive(
+        docs, _tree(ast, max_expansions), k, id_col=id_col,
+        text_col=text_col, k1=k1, b=b, analyzer=analyzer,
     )
 
 
@@ -541,8 +509,8 @@ def query_string_sql(
     analyzer: str = "ascii",
     max_expansions: int = MAX_EXPANSIONS,
 ) -> str:
-    """DuckDB twin — the SAME compiled matched/score expressions over
-    an identically-shaped evaluation frame."""
+    """DuckDB twin: the parse tree compiled to SQL matched/score
+    expressions over a per-doc evaluation frame."""
     lv, matched_sql, score_sql = compile_query_string(
         query, default_operator=default_operator, analyzer=analyzer,
         text_col=text_col,
@@ -648,7 +616,7 @@ def query_string_sql(
 
 
 # ---------------------------------------------------------------------------
-# engine path: the compiled tree over pruned postings
+# engine path: the query tree over pruned postings
 # ---------------------------------------------------------------------------
 
 
@@ -662,152 +630,20 @@ def query_string_search(
     id_col: str = "doc_id",
     max_expansions: int = MAX_EXPANSIONS,
 ) -> DataFrame:
-    """Engine path: the SAME compiled matched/score expressions, with
-    every leaf fed from the index instead of the corpus.
-
-    * term leaves — the exhaustive kernel over the leaf's PRUNED
-      posting blocks (``score_all``; a compiled tree needs FULL match
-      sets, same reason as ``bool_search``);
-    * phrase leaves — the positions sidecar (``phrase_scores_all``);
-    * wildcard leaves — lexicon rewrite (prefix-range-pruned), then a
-      pruned-postings id set;
-    * field leaves — a pruned (id + field columns) scan of the source
-      table via ``docs=`` (the doc-values analog; the index stores no
-      field values), required only when the query uses them.
-
-    Corpus text is never read.  The per-leaf frames (each sized by its
-    leaf's df, not the corpus) union into ONE groupBy(doc_id) pivot —
-    a single exchange — then the shared tree expressions evaluate
-    exactly as in :func:`query_string_topk` (rank-identical,
-    pytest-pinned).
+    """Engine path: the same query tree with every leaf fed from the
+    index instead of the corpus (:func:`qtree.evaluate_index`) — term
+    leaves from pruned postings, phrase leaves from the positions
+    sidecar, wildcard leaves through the lexicon rewrite.  Field leaves
+    read a pruned (id + field columns) scan of the source table via
+    ``docs=`` (the doc-values analog; the index stores no field
+    values), required only when the query uses them.  Corpus text is
+    never read; rank-identical to :func:`query_string_topk`
+    (pytest-pinned).
     """
-    from sparksearch.index.lexicon import read_lexicon
-    from sparksearch.query.matchset import match_ids_for_terms
-    from sparksearch.query.termq import _literal_prefix
-
-    spark = index.spark
-    analyzer = index.meta.get("analyzer", "ascii")
-    lv, matched_sql, score_sql = compile_query_string(
-        query, default_operator=default_operator, analyzer=analyzer,
+    ast = parse_query_string(
+        query, default_operator=default_operator,
+        analyzer=index.meta.get("analyzer", "ascii"),
     )
-    meta_cols = sorted(set(lv.fields))
-    if meta_cols and docs is None:
-        raise ValueError(
-            "field leaves gate on document field values the index does "
-            "not store: pass docs= (the source table)"
-        )
-    if lv.phrases:
-        index._refresh_if_stale()
-        if not index.meta.get("has_positions"):
-            raise ValueError(
-                "phrase leaves verify from the positions sidecar — run "
-                "build_positions() on this index"
-            )
-
-    # per-leaf frames: (doc_id, leaf, val)
-    frames = []
-    for i, terms in enumerate(lv.terms):
-        frames.append(
-            index.score_all(" ".join(terms)).select(
-                "doc_id", F.lit(f"t{i}").alias("leaf"),
-                F.col("score").cast("double").alias("val"),
-            )
-        )
-    if lv.phrases:
-        from sparksearch.index.positions import phrase_scores_all
-
-        for j, (terms, slop) in enumerate(lv.phrases):
-            frames.append(
-                phrase_scores_all(index, terms, slop).select(
-                    "doc_id", F.lit(f"p{j}").alias("leaf"),
-                    F.col("raw").cast("double").alias("val"),
-                )
-            )
-    if lv.wilds:
-        lx = read_lexicon(spark, index.index_dir)
-        for w, pattern in enumerate(lv.wilds):
-            rx = wildcard_regex(pattern)
-            cand = lx
-            head = _literal_prefix(pattern)
-            if head:
-                cand = cand.filter(
-                    (F.col("term") >= head) & (F.col("term") < head + "￿")
-                )
-            terms = [
-                r["term"]
-                for r in cand.filter(F.col("term").rlike(rx))
-                .orderBy("term").limit(max_expansions).collect()
-            ]
-            frames.append(
-                match_ids_for_terms(index, terms, mode="any").select(
-                    "doc_id", F.lit(f"w{w}").alias("leaf"),
-                    F.lit(1.0).alias("val"),
-                )
-            )
-    if not frames and not meta_cols:
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    if frames:
-        from functools import reduce
-
-        u = reduce(lambda a, b: a.unionByName(b), frames)
-        pivot = u.groupBy("doc_id").agg(
-            *[
-                F.max(F.when(F.col("leaf") == f"t{i}", F.col("val")))
-                .alias(f"ts_{i}")
-                for i in range(len(lv.terms))
-            ],
-            *[
-                F.max(F.when(F.col("leaf") == f"p{j}", F.col("val")))
-                .alias(f"_praw_{j}")
-                for j in range(len(lv.phrases))
-            ],
-            *[
-                F.max(
-                    F.when(F.col("leaf") == f"w{w}", F.lit(1))
-                ).alias(f"_wm_{w}")
-                for w in range(len(lv.wilds))
-            ],
-        )
-    else:
-        pivot = None
-
-    if meta_cols:
-        # the doc-values scan: every INDEXED doc's gated fields (an
-        # outer frame — a field leaf alone can match docs no other
-        # leaf touches, e.g. under OR)
-        import os as _os
-
-        indexed = spark.read.parquet(
-            _os.path.join(index.index_dir, "doclens")
-        ).select("doc_id")
-        fields = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            *[F.col(c) for c in meta_cols],
-        ).join(indexed, "doc_id", "leftsemi")
-        frame = (
-            fields.join(pivot, "doc_id", "left")
-            if pivot is not None
-            else fields
-        )
-    else:
-        frame = pivot
-
-    # synthesize the exhaustive path's column names for the shared
-    # expressions: ptf_j > 0 ⇔ the phrase frame had a row; wm_w boolean
-    for j in range(len(lv.phrases)):
-        frame = frame.withColumn(
-            f"ptf_{j}",
-            F.when(F.col(f"_praw_{j}").isNotNull(), 1).otherwise(0),
-        ).withColumn(f"ps_{j}", F.coalesce(f"_praw_{j}", F.lit(0.0)))
-    for w in range(len(lv.wilds)):
-        frame = frame.withColumn(f"wm_{w}", F.col(f"_wm_{w}").isNotNull())
-
-    scored = frame.withColumn("qscore", F.expr(score_sql)).filter(
-        F.expr(matched_sql)
-    )
-    return (
-        scored.orderBy(F.desc("qscore"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("qscore", SCORE_ROUND).alias("score"))
+    return evaluate_index(
+        index, _tree(ast, max_expansions), k, docs=docs, id_col=id_col
     )

@@ -36,7 +36,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparksearch.analyze import tokenize_str
 from sparksearch.query.bm25 import SCORE_ROUND, bm25_scores_cte, bm25_scores_df
+from sparksearch.query.qtree import (
+    Boosting,
+    ConstantScore,
+    Field,
+    Term,
+    evaluate_exhaustive,
+    evaluate_index,
+)
 
 
 def collapse_topk(
@@ -166,6 +175,15 @@ ORDER BY score DESC, s.doc_id ASC LIMIT {k}
 """.strip()
 
 
+def _boosting_tree(positive: str, negative: str, negative_boost: float,
+                   analyzer: str):
+    pos = sorted(set(tokenize_str(positive, analyzer)))
+    if not pos:
+        return None
+    neg = sorted(set(tokenize_str(negative, analyzer)))
+    return Boosting(Term(pos), Term(neg) if neg else None, negative_boost)
+
+
 def boosting_topk(
     docs: DataFrame,
     positive: str,
@@ -185,40 +203,12 @@ def boosting_topk(
     is the bool's must_not; this keeps the doc but sinks it).
 
     Membership comes from the positive query alone (a doc matching only
-    the negative query is no hit).  Scale shape: the positive leg is
-    the shared :func:`bm25_scores_df` plan; the negative leg is a
-    presence-only match set (``arrays_overlap`` — no scoring work)
-    LEFT-joined to flag demotion; TakeOrderedAndProject on top.
+    the negative query is no hit); the negative query is presence-only.
     """
-    from sparksearch.analyze import tokenize_str, tokens_col
-
-    scored = bm25_scores_df(
-        docs, positive, id_col=id_col, text_col=text_col,
-        k1=k1, b=b, analyzer=analyzer,
-    )
-    nterms = sorted(set(tokenize_str(negative, analyzer)))
-    if nterms:
-        nhit = docs.filter(F.col(text_col).isNotNull()).filter(
-            F.arrays_overlap(
-                tokens_col(text_col, analyzer),
-                F.array(*[F.lit(t) for t in nterms]),
-            )
-        ).select(F.col(id_col).cast("long").alias("doc_id"),
-                 F.lit(True).alias("_neg"))
-        scored = scored.join(nhit, "doc_id", "left")
-    else:
-        scored = scored.withColumn("_neg", F.lit(None).cast("boolean"))
-    return (
-        scored.select(
-            "doc_id",
-            F.round(
-                F.when(F.col("_neg"), F.col("raw") * negative_boost)
-                .otherwise(F.col("raw")),
-                SCORE_ROUND,
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    tree = _boosting_tree(positive, negative, negative_boost, analyzer)
+    return evaluate_exhaustive(
+        docs, tree, k, id_col=id_col, text_col=text_col, k1=k1, b=b,
+        analyzer=analyzer,
     )
 
 
@@ -270,25 +260,10 @@ def boosting_search(index, positive: str, negative: str, k: int = 10,
     (`score_all`), negative = pruned-postings id set; demote and page.
     Rank-identical to :func:`boosting_topk` (pytest-pinned); the corpus
     is never read."""
-    from sparksearch.query.matchset import match_ids_df
-
-    scored = index.score_all(positive)
-    nids = match_ids_df(index, negative, mode="any").select(
-        "doc_id", F.lit(True).alias("_neg")
+    tree = _boosting_tree(
+        positive, negative, negative_boost, index.meta.get("analyzer", "ascii")
     )
-    return (
-        scored.join(nids, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.round(
-                F.when(F.col("_neg"), F.col("score") * negative_boost)
-                .otherwise(F.col("score")),
-                SCORE_ROUND,
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return evaluate_index(index, tree, k)
 
 
 # -- constant_score ------------------------------------------------------------
@@ -309,25 +284,16 @@ def _cs_validate(d: dict) -> None:
         raise ValueError(f"terms clause needs non-empty 'values': {d!r}")
 
 
-def _cs_gate_col(filter, text_col: str, analyzer: str):
-    """The filter's boolean Column: a string is a match query in filter
+def _cs_tree(filter, boost: float, analyzer: str):
+    """The filter → ConstantScore: a string is a match query in filter
     context (OR semantics over its analyzed terms); a dict is one
-    structured range/term/terms/exists clause (``boolq._pred_col``
-    rules — null field never matches)."""
+    structured range/term/terms/exists clause (null field never
+    matches)."""
     if isinstance(filter, str):
-        from sparksearch.analyze import tokenize_str, tokens_col
-
         terms = sorted(set(tokenize_str(filter, analyzer)))
-        if not terms:
-            return F.lit(False)
-        return F.arrays_overlap(
-            tokens_col(text_col, analyzer),
-            F.array(*[F.lit(t) for t in terms]),
-        )
-    from sparksearch.query.boolq import _pred_col
-
+        return ConstantScore(Term(terms), boost) if terms else None
     _cs_validate(filter)
-    return _pred_col(filter)
+    return ConstantScore(Field(filter), boost)
 
 
 def constant_score_topk(
@@ -347,16 +313,9 @@ def constant_score_topk(
     Uniform scores make relevance order meaningless, so hits page in
     doc_id order (the deterministic tiebreak) — the same pin as the
     prefix/wildcard ConstantScore rewrites.  Output (doc_id, score)."""
-    gate = _cs_gate_col(filter, text_col, analyzer)
-    return (
-        docs.filter(F.col(text_col).isNotNull())
-        .filter(gate)
-        .select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.round(F.lit(float(boost)), SCORE_ROUND).alias("score"),
-        )
-        .orderBy("doc_id")
-        .limit(k)
+    return evaluate_exhaustive(
+        docs, _cs_tree(filter, boost, analyzer), k, id_col=id_col,
+        text_col=text_col, analyzer=analyzer,
     )
 
 
@@ -406,38 +365,10 @@ def constant_score_search(
     """Engine path: a string filter gates on the pruned-postings match
     set (corpus never read); a structured clause gates on a pruned
     (id + field) projection of ``docs`` semi-joined to the index's
-    doclens doc list (the ``bool_search`` filtered-match_all contract —
-    only INDEXED docs can be hits).  Row-identical to
+    doclens doc list (only INDEXED docs can be hits).  Row-identical to
     :func:`constant_score_topk` (pytest-pinned)."""
-    import os as _os
-
-    spark = index.spark
-    score = F.round(F.lit(float(boost)), SCORE_ROUND).alias("score")
-    if isinstance(filter, str):
-        from sparksearch.query.matchset import match_ids_df
-
-        ids = match_ids_df(index, filter, mode="any")
-        return ids.select("doc_id", score).orderBy("doc_id").limit(k)
-    if docs is None:
-        raise ValueError(
-            "a structured constant_score filter reads a document field — "
-            "pass docs= (the source table) for its (id, field) projection"
-        )
-    from sparksearch.query.boolq import _pred_col
-
-    _cs_validate(filter)
-    pass_ids = docs.filter(_pred_col(filter)).select(
-        F.col(id_col).cast("long").alias("doc_id")
-    )
-    indexed = spark.read.parquet(
-        _os.path.join(index.index_dir, "doclens")
-    ).select("doc_id")
-    return (
-        pass_ids.join(indexed, "doc_id", "leftsemi")
-        .select("doc_id", score)
-        .orderBy("doc_id")
-        .limit(k)
-    )
+    tree = _cs_tree(filter, boost, index.meta.get("analyzer", "ascii"))
+    return evaluate_index(index, tree, k, docs=docs, id_col=id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -948,28 +948,14 @@ def span_multi_near_search(
     intervals positional path with the expanded slot.  Requires the
     lexicon and positions sidecars.  Rank-identical to the exhaustive
     path when the lexicon covers the corpus vocabulary (pytest)."""
-    from pyspark.sql import functions as _F
-
-    from sparksearch.index.lexicon import read_lexicon
     from sparksearch.query.intervals import intervals_positional
-    from sparksearch.query.termq import _literal_prefix, wildcard_regex
+    from sparksearch.query.termq import expand_wildcard
 
     analyzer = index.meta.get("analyzer", "ascii")
     term = _validate_term(term, analyzer)
-    rx = wildcard_regex(pattern)
-    lx = read_lexicon(index.spark, index.index_dir)
-    head = _literal_prefix(pattern)
-    if head:
-        lx = lx.filter(
-            (_F.col("term") >= head) & (_F.col("term") < head + "￿")
-        )
-    rows = (
-        lx.filter(_F.col("term").rlike(rx))
-        .orderBy("term")
-        .limit(max_expansions)
-        .collect()
-    )
-    exp = [r["term"] for r in rows if r["term"] != term]
+    exp = [
+        t for t in expand_wildcard(index, pattern, max_expansions) if t != term
+    ]
     if not exp:
         return index.spark.createDataFrame([], "doc_id long, score double")
     return intervals_positional(

@@ -34,12 +34,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
+from sparksearch.analyze import duckdb_tokens_expr, tokens_col
 from sparksearch.index.lexicon import (
     MAX_EXPANSIONS,
     auto_fuzziness,
     expand_fuzzy,
     expand_prefix,
+    rewrite,
 )
 from sparksearch.query.bm25 import SCORE_ROUND, bm25_topk_df
 
@@ -299,6 +300,16 @@ def _literal_prefix(pattern: str) -> str:
     return pattern
 
 
+def expand_wildcard(index, pattern: str, max_expansions: int) -> list[str]:
+    """Wildcard rewrite through the lexicon, range-pruned to the
+    pattern's literal head."""
+    return rewrite(
+        index.spark, index.index_dir, head=_literal_prefix(pattern),
+        where=F.col("term").rlike(wildcard_regex(pattern)),
+        max_expansions=max_expansions,
+    )
+
+
 def _expand_wildcard_exhaustive(
     docs: DataFrame, pattern: str, max_expansions: int, text_col: str,
     analyzer: str,
@@ -367,20 +378,9 @@ def wildcard_search(index, pattern: str, k: int = 10,
                     *, max_expansions: int = MAX_EXPANSIONS) -> DataFrame:
     """Engine path: lexicon rewrite (prefix-range-pruned when the
     pattern has a literal head) → pruned-postings constant score."""
-    from sparksearch.index.lexicon import read_lexicon
-
-    rx = wildcard_regex(pattern)
-    lx = read_lexicon(index.spark, index.index_dir)
-    head = _literal_prefix(pattern)
-    if head:
-        lx = lx.filter((F.col("term") >= head) & (F.col("term") < head + "￿"))
-    rows = (
-        lx.filter(F.col("term").rlike(rx))
-        .orderBy("term")
-        .limit(max_expansions)
-        .collect()
+    return _indexed_const_score(
+        index, expand_wildcard(index, pattern, max_expansions), k
     )
-    return _indexed_const_score(index, [r["term"] for r in rows], k)
 
 
 # -- regexp ------------------------------------------------------------------
@@ -492,17 +492,9 @@ def regexp_search(index, pattern: str, k: int = 10,
     """Engine path: lexicon regexp rewrite (literal-head range-pruned)
     → pruned-postings constant score — rank-identical to
     :func:`regexp_topk` (pytest-pinned)."""
-    from sparksearch.index.lexicon import read_lexicon
-
-    rx = _check_regexp(pattern)
-    lx = read_lexicon(index.spark, index.index_dir)
-    head = _regexp_literal_head(pattern)
-    if head:
-        lx = lx.filter((F.col("term") >= head) & (F.col("term") < head + "￿"))
-    rows = (
-        lx.filter(F.col("term").rlike(rx))
-        .orderBy("term")
-        .limit(max_expansions)
-        .collect()
+    terms = rewrite(
+        index.spark, index.index_dir, head=_regexp_literal_head(pattern),
+        where=F.col("term").rlike(_check_regexp(pattern)),
+        max_expansions=max_expansions,
     )
-    return _indexed_const_score(index, [r["term"] for r in rows], k)
+    return _indexed_const_score(index, terms, k)

@@ -3,11 +3,15 @@
 ``query/bm25.py`` holds the Spark Column form (term weight, exhaustive
 term front, pseudo-term scorer, top-k cut) and ``query/wand.py`` the
 numpy form (``lucene_idf``, ``_tfn``); every other module scores through
-them.  The guard reads code, not strings: the DuckDB twins spell the
-formula out in SQL on purpose (an oracle must not share the engine's
-expressions), so their ``ln(``/``{k1}`` text never matches.  That also
-hides the one engine copy left: the phrase leaves (``ps_{j}``) of
-``qstring.query_string_topk`` are an ``F.expr`` SQL string.
+them.  The shape guard reads code, not strings: the DuckDB twins spell
+the formula out in SQL on purpose (an oracle must not share the
+engine's expressions), so their ``ln(``/``{k1}`` text never matches.
+
+Two more guards keep that oracle independent: no ``F.expr`` SQL string
+may carry the idf (``ln(1.0 +``) — a Spark copy the shape guard cannot
+see — and the ``query_string`` SQL compiler (``compile_query_string``,
+``_emit``) may only be reached from its DuckDB twin,
+``query_string_sql``.
 """
 
 import ast
@@ -19,6 +23,8 @@ HOMES = {"query/bm25.py", "query/wand.py"}
 # idf: (N - df + 0.5) / (df + 0.5); tfn: k1 * (1.0 - b + b * dl / avgdl)
 IDF = re.compile(r"df\S*\s\+ 0\.5\) / \(.*df\S*\s\+ 0\.5\)")
 TFN = re.compile(r"\* \(1(\.0)? - b \+ b \*")
+SQL_COMPILER = {"compile_query_string", "_emit"}
+SQL_COMPILER_CALLERS = SQL_COMPILER | {"query_string_sql"}
 
 
 def _copies(src: str) -> list[str]:
@@ -34,6 +40,57 @@ def _copies(src: str) -> list[str]:
     return found
 
 
+def _strings(node) -> str:
+    """A string argument's text; f-string placeholders read as ``{}``."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(_strings(v) if isinstance(v, ast.Constant) else "{}"
+                       for v in node.values)
+    return ""
+
+
+def _expr_bm25(src: str) -> list[str]:
+    """``F.expr(...)`` calls whose string argument writes the idf."""
+    found = []
+    for node in ast.walk(ast.parse(src)):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "expr"
+            and any("ln(1.0 +" in _strings(a) for a in node.args)
+        ):
+            found.append(ast.unparse(node)[:80])
+    return found
+
+
+def _compiler_users(src: str) -> list[str]:
+    """Functions outside the SQL compiler and its twin that reference
+    ``compile_query_string``/``_emit``."""
+    found = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name if func is None else func
+        name = (
+            node.id if isinstance(node, ast.Name)
+            else node.attr if isinstance(node, ast.Attribute)
+            else None
+        )
+        if isinstance(node, ast.ImportFrom):
+            names = [a.name for a in node.names]
+        else:
+            names = [name]
+        for n in names:
+            if n in SQL_COMPILER and func not in SQL_COMPILER_CALLERS:
+                found.append(f"{func or '<module>'}: {n}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(src), None)
+    return sorted(set(found))
+
+
 def test_shapes_are_recognised():
     assert _copies('idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)'
                    ' / (F.col("df") + 0.5))')
@@ -41,15 +98,40 @@ def test_shapes_are_recognised():
     assert _copies("t = tf / (tf + k1 * (1.0 - b + b * dl / avgdl))")
     assert not _copies('sql = f"ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))"')
     assert not _copies('sql = f"tf / (tf + {k1} * (1.0 - {b} + {b} * dl))"')
+    assert _expr_bm25('c = F.expr(f"CASE WHEN t{j} > 0 THEN "\n'
+                      '           f"ln(1.0 + (n - d{j} + 0.5)) END")')
+    assert not _expr_bm25('sql = f"ln(1.0 + (n_docs - df + 0.5))"')
+    assert not _expr_bm25('c = F.expr("coalesce(ts_0, 0.0)")')
+    src = (
+        "def query_string_sql(q):\n    return compile_query_string(q)\n"
+        "def compile_query_string(q):\n    return _emit(q)\n"
+        "def topk(q):\n    m, s = qs.compile_query_string(q)\n"
+        "def search(q):\n    from x import _emit\n"
+    )
+    assert _compiler_users(src) == [
+        "search: _emit", "topk: compile_query_string",
+    ]
+
+
+def _offenders(check) -> dict[str, list[str]]:
+    out = {}
+    for p in sorted(PKG.rglob("*.py")):
+        found = check(p.read_text(encoding="utf-8"))
+        if found:
+            out[p.relative_to(PKG).as_posix()] = found
+    return out
 
 
 def test_bm25_formula_lives_in_one_module_per_engine():
-    offenders = {}
-    for p in sorted(PKG.rglob("*.py")):
-        rel = p.relative_to(PKG).as_posix()
-        if rel in HOMES:
-            continue
-        found = _copies(p.read_text(encoding="utf-8"))
-        if found:
-            offenders[rel] = found
+    offenders = _offenders(_copies)
+    for home in HOMES:
+        offenders.pop(home, None)
     assert offenders == {}
+
+
+def test_no_bm25_in_spark_sql_strings():
+    assert _offenders(_expr_bm25) == {}
+
+
+def test_engine_never_runs_the_oracle_compiler():
+    assert _offenders(_compiler_users) == {}
