@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import DUCKDB_TOKENS_EXPR, tokens_col
+from sparksearch.ops.similarity import _dot, cosine
 
 ROUND = 4
 SHINGLE_K = 3
@@ -597,18 +598,6 @@ def _srp_planes(dim: int = EMB_DIM, n_planes: int = SRP_PLANES) -> list[list[flo
     return planes
 
 
-def _vdot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _vnorm(a: Column) -> Column:
-    return F.sqrt(_vdot(a, a))
-
-
 def embedding_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.99,
@@ -638,8 +627,9 @@ def embedding_dup_pairs(
     4. Candidates verified by EXACT cosine ≥ ``threshold``; output
        ``(id_a, id_b, cos)`` with cos rounded to 4dp.
 
-    All math is double-precision JVM expressions (zip_with/aggregate dots);
-    zero Python rows.  At 100 TB the plane-dot select is one scan, the band
+    All math is double-precision JVM expressions (the shared
+    ``similarity._dot`` and ``similarity.cosine``); zero Python rows.
+    At 100 TB the plane-dot select is one scan, the band
     explode is ×``n_bands`` map-side, and the only shuffles are the bucket
     join and the candidate-verify join — identical topology to the MinHash
     path that already carries the 100-TB argument.
@@ -653,7 +643,7 @@ def embedding_dup_pairs(
     sig = base.select(
         "vec_id",
         *[
-            (_vdot(F.col("v"), F.array(*[F.lit(x) for x in pl])) > 0).alias(f"s{i}")
+            (_dot(F.col("v"), F.array(*[F.lit(x) for x in pl])) > 0).alias(f"s{i}")
             for i, pl in enumerate(planes)
         ],
     )
@@ -688,7 +678,7 @@ def embedding_dup_pairs(
     )
     va = base.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
     vb = base.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-    cos = _vdot(F.col("va"), F.col("vb")) / (_vnorm(F.col("va")) * _vnorm(F.col("vb")))
+    cos = cosine(F.col("va"), F.col("vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")

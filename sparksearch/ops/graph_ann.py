@@ -24,10 +24,18 @@ a 100 TB corpus, and it maps 1:1 onto Spark:
 * **Query** — ``applyInPandas`` per shard runs the standard greedy
   descent + ef-bounded best-first search (Malkov & Yashunin 2016,
   alg. 2/5) and emits the shard-local top-k CANDIDATES; the global
-  answer re-ranks candidates with the exact JVM cosine (``zip_with`` +
-  ``aggregate``, same kernel as :func:`~sparksearch.ops.similarity
+  answer re-ranks candidates with the exact JVM cosine
+  (:func:`~sparksearch.ops.similarity.rerank_topk`, the same
+  ``cosine``/``topk_cut`` as :func:`~sparksearch.ops.similarity
   .cosine_topk`) and takes the global top-k.  Candidate generation is
   approximate; scoring is exact — the production ANN contract.
+
+One walk serves every search: ``_search_layer`` (with an optional
+allowed set and visited limit for filtered kNN) over the shard that
+``_search_shard_pdf`` decodes once per query, with ef = max(ef_search,
+k) as in Lucene.  ``hnsw_topk``, ``filtered_hnsw_topk`` and
+``HnswIndex.topk`` differ only in their candidate source and the
+vectors they rerank.
 
 Determinism: level assignment is hashed, all heap entries are
 ``(distance, vec_id)`` tuples (total order), insertion is in ascending
@@ -52,7 +60,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparksearch.ops.similarity import ROUND, _dot, _norm
+from sparksearch.ops.similarity import query_vector, rerank_topk
 
 DEFAULT_M = 8
 DEFAULT_EF_CONSTRUCTION = 64
@@ -81,20 +89,31 @@ def _level_of(vec_id: int, mL: float) -> int:
     return int(-math.log(u) * mL)
 
 
-def _search_layer(mat, links, q, entry_points, ef: int, level: int):
+def _search_layer(mat, links, q, entry_points, ef: int, level: int,
+                  allowed=None, visited_limit: int | None = None):
     """ef-bounded best-first search on one layer (M&Y alg. 2).
 
     Returns ascending [(dist, idx)] of at most ``ef`` nodes.  Distances
     are cosine distance over unit vectors (1 - dot).  Neighbor distances
     are computed as one numpy matvec per expansion, not per edge.
+
+    Filtered search passes ``allowed``: traversal still routes through
+    ALL nodes (the graph stays navigable) but only ``allowed`` indices
+    may enter the result heap — Lucene's FilteredNearestNeighbor
+    traversal.  With ``visited_limit`` the walk aborts and returns
+    ``None`` once more nodes than that have been visited: past that
+    point an exact scan of the allowed set is cheaper, so the caller
+    cuts over (Lucene's visitedLimit cost fallback,
+    ``Lucene90HnswVectorsReader.search``).
     """
     visited = set(entry_points)
-    cand = []   # min-heap (dist, idx)
-    res = []    # max-heap (-dist, idx), size <= ef
+    cand = []   # min-heap (dist, idx) — routing frontier, unfiltered
+    res = []    # max-heap (-dist, idx), allowed only, size <= ef
     for ep in entry_points:
         d = 1.0 - float(mat[ep] @ q)
         heapq.heappush(cand, (d, ep))
-        heapq.heappush(res, (-d, ep))
+        if allowed is None or ep in allowed:
+            heapq.heappush(res, (-d, ep))
     while len(res) > ef:
         heapq.heappop(res)
     while cand:
@@ -105,14 +124,17 @@ def _search_layer(mat, links, q, entry_points, ef: int, level: int):
         if not nbrs:
             continue
         visited.update(nbrs)
+        if visited_limit is not None and len(visited) > visited_limit:
+            return None
         dn = 1.0 - mat[np.asarray(nbrs, dtype=np.int64)] @ q
         for nb, dv in zip(nbrs, dn):
             dv = float(dv)
             if len(res) < ef or dv < -res[0][0]:
                 heapq.heappush(cand, (dv, nb))
-                heapq.heappush(res, (-dv, nb))
-                if len(res) > ef:
-                    heapq.heappop(res)
+                if allowed is None or nb in allowed:
+                    heapq.heappush(res, (-dv, nb))
+                    if len(res) > ef:
+                        heapq.heappop(res)
     return sorted((-nd, i) for nd, i in res)
 
 
@@ -188,6 +210,15 @@ def _build_graph(ids: np.ndarray, mat: np.ndarray, m: int, ef_construction: int)
     return levels, links, entry
 
 
+def _unit_rows(vectors) -> np.ndarray:
+    """Stack vectors as float64 rows scaled to unit length (zero rows
+    stay zero)."""
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0.0] = 1.0
+    return mat / norms[:, None]
+
+
 def _graph_entry(ids, levels):
     """Entry node = highest level, ties → smallest vec_id (deterministic;
     recomputed from persisted levels so no separate entry table)."""
@@ -210,10 +241,7 @@ def _build_shard_pdf(pdf, m: int, ef_construction: int):
         )
     pdf = pdf.sort_values("vec_id").reset_index(drop=True)
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    mat = mat / norms[:, None]
+    mat = _unit_rows(pdf["v"])
     levels, links, _ = _build_graph(ids, mat, m, ef_construction)
     nbrs = [
         [[int(ids[j]) for j in layer] for layer in links[i]]
@@ -255,29 +283,56 @@ def build_hnsw_graph(
 
 def _search_shard_pdf(pdf, qv64: np.ndarray, k: int, ef_search: int,
                       exclude_vec_id):
+    """Per-shard search → the shard's top-k candidate vec_ids.
+
+    Filtered search adds a boolean ``pass`` column to ``pdf`` (filter
+    membership, joined Spark-side so no filter set ever rides the
+    driver) and cuts over to an exact scan of the passing rows when (a)
+    they are no more than ef — a scan is cheaper and recall-1 by
+    construction — or (b) the graph walk visits more nodes than pass
+    (Lucene's visitedLimit rule).  ef = max(ef_search, k), so a shard
+    can yield k candidates."""
     import pandas as pd
 
     if len(pdf) == 0:
         return pd.DataFrame({"vec_id": []})
     pdf = pdf.sort_values("vec_id").reset_index(drop=True)
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    mat = _unit_rows(pdf["v"])
+    qn = float(np.linalg.norm(qv64))
+    q = qv64 / (qn if qn else 1.0)
+    ef = max(ef_search, k)
+    allowed = visited_limit = None
+    if "pass" in pdf:
+        allowed = {
+            i for i, (ok, v) in enumerate(zip(pdf["pass"], ids))
+            if ok and int(v) != exclude_vec_id
+        }
+        visited_limit = len(allowed)
+
+        def exact():
+            rows = sorted(allowed)
+            d = 1.0 - mat[np.asarray(rows, dtype=np.int64)] @ q
+            order = sorted(zip(d, rows))[: max(k, 1)]
+            return pd.DataFrame({"vec_id": [int(ids[i]) for _, i in order]})
+
+        if not allowed:
+            return pd.DataFrame({"vec_id": []})
+        if len(allowed) <= ef:
+            return exact()
     idx_of = {int(v): i for i, v in enumerate(ids)}
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    mat = mat / norms[:, None]
     links = [
         [[idx_of[int(x)] for x in layer] for layer in row]
         for row in pdf["nbrs"]
     ]
     levels = pdf["node_level"].to_list()
     entry = _graph_entry(ids, levels)
-    qn = float(np.linalg.norm(qv64))
-    q = qv64 / (qn if qn else 1.0)
     eps = [entry]
     for layer in range(levels[entry], 0, -1):
         eps = [_search_layer(mat, links, q, eps, 1, layer)[0][1]]
-    found = _search_layer(mat, links, q, eps, ef_search, 0)
+    found = _search_layer(mat, links, q, eps, ef, 0, allowed, visited_limit)
+    if found is None:  # visited-limit hit → exact scan is cheaper
+        return exact()
     out_ids = [int(ids[i]) for _, i in found if int(ids[i]) != exclude_vec_id]
     return pd.DataFrame({"vec_id": out_ids[: max(k, 1)]})
 
@@ -290,110 +345,15 @@ def hnsw_candidates(
     exclude_vec_id: int | None = None,
 ) -> DataFrame:
     """Shard fan-out: per-shard HNSW search → shard-local top-k
-    candidate vec_ids (one ``applyInPandas`` task per shard)."""
+    candidate vec_ids (one ``applyInPandas`` task per shard).  A
+    ``pass`` column on ``graph`` makes it the filtered search
+    (:func:`filtered_hnsw_candidates`)."""
     qv64 = np.asarray(query_vec, dtype=np.float64)
     excl = -1 if exclude_vec_id is None else int(exclude_vec_id)
     return graph.groupBy("shard").applyInPandas(
         lambda pdf: _search_shard_pdf(pdf, qv64, k, ef_search, excl),
         "vec_id long",
     )
-
-
-# ---------------------------------------------------------------------------
-# filtered kNN (Lucene "efficient filtering" semantics)
-# ---------------------------------------------------------------------------
-
-def _search_layer_filtered(mat, links, q, entry_points, ef: int,
-                           level: int, allowed, visited_limit: int):
-    """Filtered layer search: traversal routes through ALL nodes (the
-    graph stays navigable) but only ``allowed`` indices may enter the
-    result heap — Lucene's FilteredNearestNeighbor traversal.  Aborts
-    and returns ``None`` once more than ``visited_limit`` nodes have
-    been visited: past that point an exact scan of the allowed set is
-    cheaper, so the caller cuts over (Lucene's visitedLimit cost
-    fallback, ``Lucene90HnswVectorsReader.search``)."""
-    visited = set(entry_points)
-    cand = []   # min-heap (dist, idx) — routing frontier, unfiltered
-    res = []    # max-heap (-dist, idx), allowed only, size <= ef
-    for ep in entry_points:
-        d = 1.0 - float(mat[ep] @ q)
-        heapq.heappush(cand, (d, ep))
-        if ep in allowed:
-            heapq.heappush(res, (-d, ep))
-    while len(res) > ef:
-        heapq.heappop(res)
-    while cand:
-        d, c = heapq.heappop(cand)
-        if len(res) >= ef and d > -res[0][0]:
-            break
-        nbrs = [nb for nb in links[c][level] if nb not in visited]
-        if not nbrs:
-            continue
-        visited.update(nbrs)
-        if len(visited) > visited_limit:
-            return None
-        dn = 1.0 - mat[np.asarray(nbrs, dtype=np.int64)] @ q
-        for nb, dv in zip(nbrs, dn):
-            dv = float(dv)
-            if len(res) < ef or dv < -res[0][0]:
-                heapq.heappush(cand, (dv, nb))
-                if nb in allowed:
-                    heapq.heappush(res, (-dv, nb))
-                    if len(res) > ef:
-                        heapq.heappop(res)
-    return sorted((-nd, i) for nd, i in res)
-
-
-def _search_shard_filtered_pdf(pdf, qv64: np.ndarray, k: int,
-                               ef_search: int, exclude_vec_id):
-    """Per-shard filtered search.  ``pdf`` carries a boolean ``pass``
-    column (filter membership, joined Spark-side so no filter set ever
-    rides the driver).  Exact-scan fallback fires when (a) the shard's
-    passing set is no bigger than ``ef_search`` — a scan is cheaper and
-    recall-1 by construction — or (b) the graph walk visits more nodes
-    than the passing count (Lucene's visitedLimit rule)."""
-    import pandas as pd
-
-    if len(pdf) == 0:
-        return pd.DataFrame({"vec_id": []})
-    pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-    idx_of = {int(v): i for i, v in enumerate(ids)}
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    mat = mat / norms[:, None]
-    qn = float(np.linalg.norm(qv64))
-    q = qv64 / (qn if qn else 1.0)
-    allowed = {
-        i for i, (ok, v) in enumerate(zip(pdf["pass"], ids))
-        if ok and int(v) != exclude_vec_id
-    }
-    if not allowed:
-        return pd.DataFrame({"vec_id": []})
-
-    def exact():
-        rows = sorted(allowed)
-        d = 1.0 - mat[np.asarray(rows, dtype=np.int64)] @ q
-        order = sorted(zip(d, rows))[: max(k, 1)]
-        return pd.DataFrame({"vec_id": [int(ids[i]) for _, i in order]})
-
-    if len(allowed) <= max(ef_search, k):
-        return exact()
-    links = [
-        [[idx_of[int(x)] for x in layer] for layer in row]
-        for row in pdf["nbrs"]
-    ]
-    levels = pdf["node_level"].to_list()
-    entry = _graph_entry(ids, levels)
-    eps = [entry]
-    for layer in range(levels[entry], 0, -1):
-        eps = [_search_layer(mat, links, q, eps, 1, layer)[0][1]]
-    found = _search_layer_filtered(
-        mat, links, q, eps, ef_search, 0, allowed, len(allowed))
-    if found is None:  # visited-limit hit → exact scan is cheaper
-        return exact()
-    return pd.DataFrame({"vec_id": [int(ids[i]) for _, i in found][: max(k, 1)]})
 
 
 def filtered_hnsw_candidates(
@@ -408,8 +368,6 @@ def filtered_hnsw_candidates(
     graph frame as a boolean column before the per-shard task — the
     filter set is distributed state, never a driver-side collection, so
     a 10^9-id filter costs one (broadcastable) join."""
-    qv64 = np.asarray(query_vec, dtype=np.float64)
-    excl = -1 if exclude_vec_id is None else int(exclude_vec_id)
     marks = (
         filter_ids.select(F.col(filter_ids.columns[0]).cast("long").alias("vec_id"))
         .distinct()
@@ -418,10 +376,7 @@ def filtered_hnsw_candidates(
     marked = graph.join(marks, "vec_id", "left").withColumn(
         "pass", F.coalesce(F.col("pass"), F.lit(False))
     )
-    return marked.groupBy("shard").applyInPandas(
-        lambda pdf: _search_shard_filtered_pdf(pdf, qv64, k, ef_search, excl),
-        "vec_id long",
-    )
+    return hnsw_candidates(marked, query_vec, k, ef_search, exclude_vec_id)
 
 
 def filtered_hnsw_topk(
@@ -448,30 +403,8 @@ def filtered_hnsw_topk(
     set, so output ⊆ filter always holds and values are bit-compatible
     with :func:`~sparksearch.ops.similarity.cosine_topk`'s filtered
     exact path."""
-    if graph is None:
-        graph = build_hnsw_graph(emb, n_shards, m, ef_construction, id_col, vec_col)
-    qrow = (
-        emb.filter(F.col(id_col) == query_vec_id)
-        .select(F.col(vec_col).cast("array<double>").alias("qv"))
-        .head()
-    )
-    if qrow is None:
-        raise KeyError(f"query_vec_id {query_vec_id} not found")
-    cand = filtered_hnsw_candidates(
-        graph, qrow["qv"], filter_ids, k, ef_search, query_vec_id)
-    qlit = F.lit(list(qrow["qv"])).cast("array<double>")
-    base = emb.select(
-        F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("ev")
-    )
-    scored = base.join(cand, "vec_id", "leftsemi").select(
-        "vec_id",
-        (_dot(F.col("ev"), qlit) / (_norm(F.col("ev")) * _norm(qlit))).alias("raw"),
-    )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("raw", ROUND).alias("cos"))
-    )
+    return _graph_topk(emb, query_vec_id, filter_ids, k, n_shards, m,
+                       ef_construction, ef_search, id_col, vec_col, graph)
 
 
 def hnsw_topk(
@@ -493,29 +426,26 @@ def hnsw_topk(
     so output values are bit-compatible with the exact engine and the
     DuckDB oracle).  Output (vec_id, cos) ordered by raw desc / vec_id
     asc — identical shape to :func:`cosine_topk`."""
+    return _graph_topk(emb, query_vec_id, None, k, n_shards, m,
+                       ef_construction, ef_search, id_col, vec_col, graph)
+
+
+def _graph_topk(emb, query_vec_id, filter_ids, k, n_shards, m,
+                ef_construction, ef_search, id_col, vec_col, graph):
+    """Query by id: per-shard candidates (filtered when ``filter_ids``
+    is given), reranked against the caller's ``vec_col``."""
     if graph is None:
         graph = build_hnsw_graph(emb, n_shards, m, ef_construction, id_col, vec_col)
-    qrow = (
-        emb.filter(F.col(id_col) == query_vec_id)
-        .select(F.col(vec_col).cast("array<double>").alias("qv"))
-        .head()
-    )
-    if qrow is None:
-        raise KeyError(f"query_vec_id {query_vec_id} not found")
-    cand = hnsw_candidates(graph, qrow["qv"], k, ef_search, query_vec_id)
-    qlit = F.lit(list(qrow["qv"])).cast("array<double>")
+    qv = query_vector(emb, query_vec_id, id_col, vec_col)
+    if filter_ids is None:
+        cand = hnsw_candidates(graph, qv, k, ef_search, query_vec_id)
+    else:
+        cand = filtered_hnsw_candidates(
+            graph, qv, filter_ids, k, ef_search, query_vec_id)
     base = emb.select(
         F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("ev")
     )
-    scored = base.join(cand, "vec_id", "leftsemi").select(
-        "vec_id",
-        (_dot(F.col("ev"), qlit) / (_norm(F.col("ev")) * _norm(qlit))).alias("raw"),
-    )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("raw", ROUND).alias("cos"))
-    )
+    return rerank_topk(base, cand, qv, k, "ev")
 
 
 # ---------------------------------------------------------------------------
@@ -579,14 +509,5 @@ class HnswIndex:
         """Cosine top-k via shard fan-out + exact re-rank on candidates."""
         graph = self.spark.read.parquet(self.graph_path)
         cand = hnsw_candidates(graph, query_vec, k, ef_search, exclude_vec_id)
-        qlit = F.lit([float(x) for x in query_vec]).cast("array<double>")
         nodes = graph.select("vec_id", F.col("v").alias("emb"))
-        scored = nodes.join(cand, "vec_id", "leftsemi").select(
-            "vec_id",
-            (_dot(F.col("emb"), qlit) / (_norm(F.col("emb")) * _norm(qlit))).alias("raw"),
-        )
-        return (
-            scored.orderBy(F.desc("raw"), F.asc("vec_id"))
-            .limit(k)
-            .select("vec_id", F.round("raw", ROUND).alias("cos"))
-        )
+        return rerank_topk(nodes, cand, query_vec, k, "emb")

@@ -18,9 +18,11 @@ Design (all deterministic, parallelism-invariant):
 * the 64-dim space splits into ``n_sub`` contiguous subspaces; each
   gets a ``k_codes``-word codebook trained by the same pinned Lloyd's
   recipe as ``kmeans_cells`` (smallest-id init, fixed iterations,
-  per-dim means rounded to pin float order) over a hash-drawn sample
-  COLLECTED to the driver — codebooks are n_sub × k_codes × d_sub
-  floats, coarse-quantizer-sized, never corpus-sized;
+  per-dim means rounded to pin float order) over a bounded sample
+  COLLECTED to the driver: the ``PQ_TRAIN_ROWS`` vectors with the
+  smallest ``xxhash64(vec_id)``, in vec_id order (below the cap, the
+  whole table) — codebooks are n_sub × k_codes × d_sub floats,
+  coarse-quantizer-sized, never corpus-sized;
 * encoding (vector → n_sub uint8 codes) is an Arrow-batched numpy
   kernel (``mapInPandas``): one argmin over k_codes per subspace,
   vectorized across the batch — the one Python stage, at build time
@@ -32,11 +34,16 @@ Design (all deterministic, parallelism-invariant):
   codegen over the codes column alone (8 B/row read, the raw vectors
   are NOT scanned);
 * ``rerank``: the top-C by ADC join their raw vectors back (C-row
-  broadcast semi-join) for exact cosine ordering — FAISS's refine
-  step.  At gate scale C ≥ corpus makes the result EXACTLY the
+  semi-join, :func:`~sparksearch.ops.similarity.rerank_topk` — the
+  same exact rerank HNSW uses) for exact cosine ordering — FAISS's
+  refine step.  At gate scale C ≥ corpus makes the result EXACTLY the
   brute-force top-k, which is how ``sim_pq`` stays oracle-checkable
   against ``cosine_topk_sql`` (the honest way to gate an
   approximate structure — same pattern as ``sim_hnsw``).
+
+Shared with the other vector paths (``ops/similarity.py``): the
+``(vec_id, v)`` build frame ``_vectors``, the query-by-id lookup
+``query_vector`` (``KeyError`` for a missing id) and ``rerank_topk``.
 """
 
 from __future__ import annotations
@@ -44,19 +51,16 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparksearch.ops.similarity import _dot, _norm
+from sparksearch.ops.similarity import _vectors, query_vector, rerank_topk
 
 PQ_ROUND = 6   # codebook float pin (same role as KM_ROUND)
-COS_ROUND = 4
-
-
-def _require_numpy():
-    import numpy as np  # baked into the image; import-guard for lint
-
-    return np
+# codebook training sample cap: the driver-side sample is bounded at any
+# corpus size (n_sub × k_codes words need ~10⁴–10⁵ training vectors)
+PQ_TRAIN_ROWS = 65_536
 
 
 def _train_codebooks(
@@ -68,7 +72,6 @@ def _train_codebooks(
     vec_id — content-derived, parallelism-invariant); means round to
     ``PQ_ROUND`` each iteration; empty clusters keep their previous
     word.  → list[n_sub] of (k_codes, d_sub) float64 arrays."""
-    np = _require_numpy()
     n, dim = sample.shape
     if n < k_codes:
         raise ValueError(f"PQ sample ({n}) smaller than k_codes ({k_codes})")
@@ -98,24 +101,20 @@ def build_pq_index(
     n_sub: int = 8,
     k_codes: int = 16,
     n_iters: int = 8,
-    sample_mod: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> "PqIndex":
     """Train codebooks, encode every vector, persist codes + books.
 
-    ``sample_mod``: train on vectors with ``pmod(vec_id, mod) = 0`` (a
-    content-keyed systematic sample — at 10¹² vectors set it so the
-    driver-side sample stays ~10⁵ rows; 1 = train on everything)."""
-    np = _require_numpy()
-    base = emb.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    sample_rows = (
-        base.filter(F.pmod(F.col("vec_id"), F.lit(sample_mod)) == 0)
-        .orderBy("vec_id")
-        .collect()
+    Training sees the ``PQ_TRAIN_ROWS`` vectors with the smallest
+    ``xxhash64(vec_id)`` (content-keyed, parallelism-invariant,
+    uncorrelated with id order), sorted by vec_id on the driver."""
+    base = _vectors(emb, id_col, vec_col)
+    sample_rows = sorted(
+        base.orderBy(F.xxhash64(F.col("vec_id")), F.asc("vec_id"))
+        .limit(PQ_TRAIN_ROWS)
+        .collect(),
+        key=lambda r: r["vec_id"],
     )
     sm = np.array([r["v"] for r in sample_rows], dtype=np.float64)
     sm /= np.maximum(np.linalg.norm(sm, axis=1, keepdims=True), 1e-30)
@@ -126,7 +125,6 @@ def build_pq_index(
     books_py = [[list(map(float, w)) for w in cb] for cb in books]
 
     def encode(batches):
-        import numpy as np  # noqa: F811 — executor-side import
         import pandas as pd
 
         cbs = [np.array(cb, dtype=np.float64) for cb in books_py]
@@ -191,7 +189,6 @@ class PqIndex:
         ``rerank=C > 0``: exact cosine over the top-C ADC candidates
         (requires ``emb``) → (vec_id, cos) with the engine-wide
         rounding/tie rule."""
-        np = _require_numpy()
         m = self.meta
         n_sub, d_sub = m["n_sub"], m["dim"] // m["n_sub"]
         q = np.asarray(query_vec, dtype=np.float64)
@@ -230,26 +227,11 @@ class PqIndex:
             .limit(int(rerank))
             .select("vec_id")
         )
-        qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-        exact = (
-            emb.select(
-                F.col(id_col).cast("long").alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-            .join(F.broadcast(cand), "vec_id", "leftsemi")
-            .select(
-                "vec_id",
-                (
-                    _dot(F.col("v"), qlit)
-                    / (_norm(F.col("v")) * _norm(qlit))
-                ).alias("raw"),
-            )
+        vecs = emb.select(
+            F.col(id_col).cast("long").alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
         )
-        return (
-            exact.orderBy(F.desc("raw"), F.asc("vec_id"))
-            .limit(k)
-            .select("vec_id", F.round("raw", COS_ROUND).alias("cos"))
-        )
+        return rerank_topk(vecs, cand, query_vec, k, "v")
 
 
 def pq_topk_by_id(
@@ -265,11 +247,7 @@ def pq_topk_by_id(
 ) -> DataFrame:
     """Gate-shaped convenience: query by an indexed vector's id,
     excluding itself (the ``sim_*`` convention)."""
-    qv = [
-        float(x)
-        for x in emb.filter(F.col(id_col) == query_vec_id)
-        .select(vec_col).collect()[0][0]
-    ]
+    qv = query_vector(emb, query_vec_id, id_col, vec_col)
     return PqIndex(spark, index_dir).topk(
         qv, k, rerank=rerank, emb=emb, exclude_vec_id=query_vec_id,
         id_col=id_col, vec_col=vec_col,

@@ -18,6 +18,14 @@ reference delegates HNSW kNN to OpenSearch,
 
 Both have DuckDB SQL twins for the driver's value-hash gate.  Scores are
 float64 end-to-end and rounded to 4 decimals on output.
+
+Every vector top-k in the package is built from the shared pieces here:
+:func:`cosine` (the one exact cosine Column), :func:`topk_cut` (raw desc,
+id asc, round), :func:`rerank_topk` (semi-join candidates → exact cosine
+→ cut, the HNSW and PQ refine step), :func:`query_vector` (a query
+vector by id), ``_vectors`` (the ``(vec_id, v array<double>)`` build
+frame), ``_probe_order`` (IVF cells by centroid L2² asc, cell asc) and
+``_default_nprobe``.  The HNSW walk lives in ``ops/graph_ann.py``.
 """
 
 from __future__ import annotations
@@ -38,6 +46,57 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
+
+
+def cosine(v: Column, q: Column) -> Column:
+    """Exact cosine of two array columns, float64 — the one place the
+    engine writes it (``tests/test_scoring_guard.py`` pins this)."""
+    return _dot(v, q) / (_norm(v) * _norm(q))
+
+
+def topk_cut(scored: DataFrame, k: int, id_col: str = "vec_id",
+             keep: tuple[str, ...] = ()) -> DataFrame:
+    """Global top-k of a ``raw`` cosine column: raw desc, ``id_col`` asc,
+    output ``(id_col, *keep, cos)`` rounded to ``ROUND``."""
+    return (
+        scored.orderBy(F.desc("raw"), F.asc(id_col))
+        .limit(k)
+        .select(id_col, *keep, F.round("raw", ROUND).alias("cos"))
+    )
+
+
+def rerank_topk(vecs: DataFrame, cand: DataFrame, query_vec, k: int,
+                vec_col: str) -> DataFrame:
+    """Exact rerank of a candidate id set: semi-join ``cand`` (one
+    ``vec_id`` column) into ``vecs`` (``vec_id`` + ``vec_col``), score
+    the exact cosine against ``query_vec`` (a float64 array literal) and
+    cut the top k."""
+    qlit = F.lit([float(x) for x in query_vec]).cast("array<double>")
+    scored = vecs.join(cand, "vec_id", "leftsemi").select(
+        "vec_id", cosine(F.col(vec_col), qlit).alias("raw")
+    )
+    return topk_cut(scored, k)
+
+
+def query_vector(emb: DataFrame, query_vec_id: int, id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> list[float]:
+    """The vector of ``query_vec_id`` as float64s; ``KeyError`` if absent."""
+    qrow = (
+        emb.filter(F.col(id_col) == query_vec_id)
+        .select(F.col(vec_col).cast("array<double>").alias("qv"))
+        .head()
+    )
+    if qrow is None:
+        raise KeyError(f"query_vec_id {query_vec_id} not found")
+    return list(qrow["qv"])
+
+
+def _vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(vec_id long, v array<double>)`` over the non-null vectors."""
+    return emb.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).cast("long").alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    )
 
 
 def cosine_topk(
@@ -69,21 +128,11 @@ def cosine_topk(
             id_col,
             "leftsemi",
         )
-    scored = (
-        base.crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col).alias("vec_id"),
-            (
-                _dot(F.col(vec_col), F.col("qv"))
-                / (_norm(F.col(vec_col)) * _norm(F.col("qv")))
-            ).alias("raw"),
-        )
+    scored = base.crossJoin(F.broadcast(q)).select(
+        F.col(id_col).alias("vec_id"),
+        cosine(F.col(vec_col), F.col("qv")).alias("raw"),
     )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("raw", ROUND).alias("cos"))
-    )
+    return topk_cut(scored, k)
 
 
 def cosine_topk_sql(
@@ -159,13 +208,7 @@ def ivf_topk(
     q = emb.filter(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("qv"))
     probe = (
         cents.crossJoin(F.broadcast(q))
-        .select(
-            "label",
-            (
-                _dot(F.col("centroid"), F.col("qv"))
-                / (_norm(F.col("centroid")) * _norm(F.col("qv")))
-            ).alias("craw"),
-        )
+        .select("label", cosine(F.col("centroid"), F.col("qv")).alias("craw"))
         .orderBy(F.desc("craw"), F.asc("label"))
         .limit(nprobe)
         .select("label")
@@ -177,17 +220,10 @@ def ivf_topk(
         .select(
             F.col(id_col).alias("vec_id"),
             F.col(label_col).cast("long").alias("label"),
-            (
-                _dot(F.col(vec_col), F.col("qv"))
-                / (_norm(F.col(vec_col)) * _norm(F.col("qv")))
-            ).alias("raw"),
+            cosine(F.col(vec_col), F.col("qv")).alias("raw"),
         )
     )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "label", F.round("raw", ROUND).alias("cos"))
-    )
+    return topk_cut(scored, k, keep=("label",))
 
 
 def ivf_topk_sql(
@@ -240,6 +276,7 @@ FROM scored ORDER BY raw DESC, vec_id ASC LIMIT {k}
 KM_CELLS = 8
 KM_ITERS = 2
 KM_ROUND = 6  # per-iteration centroid rounding: makes the means identical
+              # across summation orders (Spark partitions vs DuckDB)
 
 # auto_ivf_params bounds (VERDICT r2 #7): cells track sqrt(N) — the
 # classic IVF balance between quantizer cost and cell selectivity — and
@@ -261,9 +298,12 @@ def auto_ivf_params(n_vecs: int) -> tuple[int, int]:
     import math as _math
 
     n_cells = max(KM_CELLS, min(AUTO_CELL_CAP, round(_math.sqrt(max(n_vecs, 1)))))
-    nprobe = max(2, min(AUTO_NPROBE_CAP, -(-n_cells // 8)))
-    return n_cells, nprobe
-              # across summation orders (Spark partitions vs DuckDB)
+    return n_cells, _default_nprobe(n_cells)
+
+
+def _default_nprobe(n_cells: int) -> int:
+    """~1/8 of the cells, at least 2, capped at ``AUTO_NPROBE_CAP``."""
+    return max(2, min(AUTO_NPROBE_CAP, -(-n_cells // 8)))
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -291,9 +331,7 @@ def kmeans_cells(
     on the driver between iterations, like any IVF coarse quantizer.
     """
     spark = emb.sparkSession
-    base = emb.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    base = _vectors(emb, id_col, vec_col)
     init = base.orderBy("vec_id").limit(n_cells).collect()
     cents: list[tuple[int, list[float]]] = [
         (i, [float(x) for x in r["v"]]) for i, r in enumerate(init)
@@ -353,9 +391,7 @@ def kmeans_ivf_topk(
     top-k within them.  Output (vec_id, cell, cos)."""
     spark = emb.sparkSession
     cents = kmeans_cells(emb, n_cells, n_iters, id_col, vec_col)
-    base = emb.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    base = _vectors(emb, id_col, vec_col)
     q = base.filter(F.col("vec_id") == query_vec_id).select(F.col("v").alias("qv"))
     probe = (
         _cents_df(spark, cents)
@@ -370,17 +406,9 @@ def kmeans_ivf_topk(
         assigned.join(F.broadcast(probe), "cell")
         .filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "cell",
-            (_dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv")))).alias("raw"),
-        )
+        .select("vec_id", "cell", cosine(F.col("v"), F.col("qv")).alias("raw"))
     )
-    return (
-        scored.orderBy(F.desc("raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "cell", F.round("raw", ROUND).alias("cos"))
-    )
+    return topk_cut(scored, k, keep=("cell",))
 
 
 def _duck_kmeans_ctes(
@@ -526,7 +554,6 @@ def tune_ivf_nprobe(
     import json
     import os
 
-    import numpy as np
     from pyspark.sql import Window
 
     with open(os.path.join(index_dir, "meta.json")) as f:
@@ -539,7 +566,7 @@ def tune_ivf_nprobe(
         .collect()
     )
     if not qrows:
-        return max(2, n_cells // 8), 1.0
+        return _default_nprobe(n_cells), 1.0
     qdf = spark.createDataFrame(
         [(int(r["vec_id"]), list(r["v"])) for r in qrows],
         "qid long, qv array<double>",
@@ -549,8 +576,7 @@ def tune_ivf_nprobe(
         vecs.crossJoin(F.broadcast(qdf))
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
-            "qid", "vec_id", "cell",
-            (_dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv")))).alias("raw"),
+            "qid", "vec_id", "cell", cosine(F.col("v"), F.col("qv")).alias("raw"),
         )
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
@@ -561,16 +587,11 @@ def tune_ivf_nprobe(
         (int(r["cell"]), list(r["c"]))
         for r in spark.read.parquet(os.path.join(index_dir, "centroids")).collect()
     )
-    cmat = np.asarray([c for _, c in cents], dtype=np.float64)
-    cids = np.asarray([c for c, _ in cents], dtype=np.int64)
-    # probe rank of each cell, per query (L2² asc, cell asc — same
-    # ordering VectorIndex.topk uses)
-    rank_of: dict[int, dict[int, int]] = {}
-    for r in qrows:
-        qv = np.asarray(r["v"], dtype=np.float64)
-        d = ((cmat - qv) ** 2).sum(axis=1)
-        order = np.lexsort((cids, d))
-        rank_of[int(r["vec_id"])] = {int(cids[i]): pos for pos, i in enumerate(order)}
+    # probe rank of each cell, per query
+    rank_of = {
+        int(r["vec_id"]): {c: pos for pos, c in enumerate(_probe_order(cents, r["v"]))}
+        for r in qrows
+    }
     ranks = [rank_of[int(h["qid"])][int(h["cell"])] for h in true_hits]
     total = k * len(qrows)
 
@@ -584,7 +605,7 @@ def tune_ivf_nprobe(
         rec = sum(1 for x in ranks if x < nprobe) / total
         return rec, rec - 2.0 * (rec * (1.0 - rec) / total) ** 0.5
 
-    nprobe = max(2, min(AUTO_NPROBE_CAP, -(-n_cells // 8)))  # start at auto
+    nprobe = _default_nprobe(n_cells)  # start at auto
     while nprobe < n_cells:
         if lcb(nprobe)[1] >= floor:
             break
@@ -633,9 +654,7 @@ def build_vector_index(
         return
     if kind != "ivf":
         raise ValueError(f"unknown vector index kind {kind!r}")
-    base = emb.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
+    base = _vectors(emb, id_col, vec_col)
     if n_cells is None:
         n_cells = auto_ivf_params(base.count())[0]
     cents = kmeans_cells(emb, n_cells, n_iters, id_col, vec_col)
@@ -694,42 +713,42 @@ class VectorIndex:
         """Cosine top-k of ``query_vec`` over the probed cells.
 
         Probe selection is a driver-side numpy argmin over the (tiny)
-        centroid table; the scan then prunes to ``cell=<id>/``
-        directories (check ``.explain()``: partition filters on cell).
-        ``nprobe=None`` uses the RECALL-TUNED operating point recorded
-        at build time (``meta["nprobe"]`` — :func:`tune_ivf_nprobe`),
-        falling back to the :func:`auto_ivf_params` formula for indexes
-        built without tuning."""
-        import numpy as np
-
+        centroid table (``_probe_order``); the scan then prunes to
+        ``cell=<id>/`` directories (check ``.explain()``: partition
+        filters on cell).  ``nprobe=None`` uses the RECALL-TUNED
+        operating point recorded at build time (``meta["nprobe"]`` —
+        :func:`tune_ivf_nprobe`), falling back to the
+        :func:`auto_ivf_params` formula for indexes built without
+        tuning."""
         if nprobe is None:
             nprobe = int(
-                self.meta.get(
-                    "nprobe",
-                    max(2, min(AUTO_NPROBE_CAP, -(-int(self.meta["n_cells"]) // 8))),
-                )
+                self.meta.get("nprobe", _default_nprobe(int(self.meta["n_cells"])))
             )
-        qv = np.asarray(query_vec, dtype=np.float64)
-        cmat = np.asarray([c for _, c in self.cents], dtype=np.float64)
-        d = ((cmat - qv) ** 2).sum(axis=1)
-        order = np.lexsort((np.array([c for c, _ in self.cents]), d))
-        probed = [int(self.cents[i][0]) for i in order[:nprobe]]
+        probed = _probe_order(self.cents, query_vec)[:nprobe]
         vecs = self.spark.read.parquet(self.vectors_path).filter(
             F.col("cell").isin(probed)
         )
         if exclude_vec_id is not None:
             vecs = vecs.filter(F.col("vec_id") != exclude_vec_id)
-        qlit = F.lit(qv.tolist()).cast("array<double>")
+        qlit = F.lit([float(x) for x in query_vec]).cast("array<double>")
         scored = vecs.select(
             "vec_id",
             F.col("cell").cast("int").alias("cell"),
-            (_dot(F.col("v"), qlit) / (_norm(F.col("v")) * _norm(qlit))).alias("raw"),
+            cosine(F.col("v"), qlit).alias("raw"),
         )
-        return (
-            scored.orderBy(F.desc("raw"), F.asc("vec_id"))
-            .limit(k)
-            .select("vec_id", "cell", F.round("raw", ROUND).alias("cos"))
-        )
+        return topk_cut(scored, k, keep=("cell",))
+
+
+def _probe_order(cents: list[tuple[int, list[float]]], query_vec) -> list[int]:
+    """IVF probe order: cells by centroid L2² to ``query_vec`` asc, cell
+    asc (numpy over the tiny centroid table)."""
+    import numpy as np
+
+    qv = np.asarray(query_vec, dtype=np.float64)
+    cmat = np.asarray([c for _, c in cents], dtype=np.float64)
+    d = ((cmat - qv) ** 2).sum(axis=1)
+    order = np.lexsort((np.array([c for c, _ in cents]), d))
+    return [int(cents[i][0]) for i in order]
 
 
 # ---------------------------------------------------------------------------
@@ -767,18 +786,9 @@ def doc_knn_topk(
         )
         .filter(F.col("doc_id") != qdoc)
         .crossJoin(F.broadcast(q))
-        .select(
-            "doc_id",
-            (_dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv")))).alias("raw"),
-        )
+        .select("doc_id", cosine(F.col("v"), F.col("qv")).alias("raw"))
     )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.max("raw").alias("raw"))
-        .orderBy(F.desc("raw"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", F.round("raw", ROUND).alias("cos"))
-    )
+    return topk_cut(scored.groupBy("doc_id").agg(F.max("raw").alias("raw")), k, "doc_id")
 
 
 def doc_knn_topk_sql(

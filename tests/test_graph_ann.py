@@ -203,14 +203,15 @@ def test_filtered_hnsw_exact_fallback_selective_filter(spark, emb):
 
 
 def test_filtered_visited_limit_kernel():
-    """_search_layer_filtered aborts (returns None) when the walk visits
-    more nodes than visited_limit — the exact-scan cutover trigger."""
+    """The filtered walk (_search_layer with an allowed set) aborts
+    (returns None) when it visits more nodes than visited_limit — the
+    exact-scan cutover trigger."""
     from sparksearch.ops.graph_ann import (
         DEFAULT_EF_CONSTRUCTION,
         DEFAULT_M,
         _build_graph,
         _graph_entry,
-        _search_layer_filtered,
+        _search_layer,
     )
 
     rng = np.random.default_rng(7)
@@ -222,9 +223,9 @@ def test_filtered_visited_limit_kernel():
     entry = _graph_entry(ids, levels)
     q = mat[0]
     allowed = set(range(0, n, 3))
-    assert _search_layer_filtered(
+    assert _search_layer(
         mat, links, q, [entry], 32, 0, allowed, visited_limit=5) is None
-    found = _search_layer_filtered(
+    found = _search_layer(
         mat, links, q, [entry], 32, 0, allowed, visited_limit=n)
     assert found is not None
     assert all(i in allowed for _, i in found)

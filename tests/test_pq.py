@@ -86,3 +86,33 @@ def test_pq_validation(spark, emb, tmp_path):
     build_pq_index(spark, emb, d, n_sub=8, k_codes=16)
     with pytest.raises(ValueError, match="rerank needs emb"):
         PqIndex(spark, d).topk([0.0] * 32, 5, rerank=10)
+    with pytest.raises(KeyError, match="not found"):
+        pq_topk_by_id(spark, emb, d, 10**6)
+
+
+def test_training_sample_is_bounded(spark, emb, tmp_path, monkeypatch):
+    """Codebooks train on at most ``PQ_TRAIN_ROWS`` vectors (smallest
+    xxhash64(vec_id)), a content-keyed sample: codes and books stay
+    identical under repartition."""
+    from sparksearch.ops import pq
+
+    seen = []
+    train = pq._train_codebooks
+
+    def spy(sample, *a):
+        seen.append(sample.shape[0])
+        return train(sample, *a)
+
+    monkeypatch.setattr(pq, "PQ_TRAIN_ROWS", 100)
+    monkeypatch.setattr(pq, "_train_codebooks", spy)
+    d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
+    build_pq_index(spark, emb, d1, n_sub=8, k_codes=16)
+    build_pq_index(spark, emb.repartition(13), d2, n_sub=8, k_codes=16)
+    assert seen == [100, 100]
+    c1, c2 = (
+        sorted((r["vec_id"], tuple(r["codes"]))
+               for r in PqIndex(spark, d).codes().collect())
+        for d in (d1, d2)
+    )
+    assert c1 == c2 and len(c1) == 300
+    assert PqIndex(spark, d1).meta["books"] == PqIndex(spark, d2).meta["books"]

@@ -12,6 +12,11 @@ may carry the idf (``ln(1.0 +``) — a Spark copy the shape guard cannot
 see — and the ``query_string`` SQL compiler (``compile_query_string``,
 ``_emit``) may only be reached from its DuckDB twin,
 ``query_string_sql``.
+
+The exact vector cosine is written once too, in ``ops/similarity.py``
+(``cosine`` over ``_dot``/``_norm``): no other module may divide by a
+product of two norms, and no other module may build a product with
+``F.zip_with`` (the first half of a hand-written dot product).
 """
 
 import ast
@@ -25,6 +30,8 @@ IDF = re.compile(r"df\S*\s\+ 0\.5\) / \(.*df\S*\s\+ 0\.5\)")
 TFN = re.compile(r"\* \(1(\.0)? - b \+ b \*")
 SQL_COMPILER = {"compile_query_string", "_emit"}
 SQL_COMPILER_CALLERS = SQL_COMPILER | {"query_string_sql"}
+VECTOR_HOME = "ops/similarity.py"
+NORMS = {"_norm", "_vnorm"}
 
 
 def _copies(src: str) -> list[str]:
@@ -91,6 +98,43 @@ def _compiler_users(src: str) -> list[str]:
     return sorted(set(found))
 
 
+def _called(node) -> str | None:
+    """Name of the function a Call node calls (``f(...)``/``m.f(...)``)."""
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _cosines(src: str) -> list[str]:
+    """Divisions whose right operand multiplies two norm calls."""
+    return [
+        ast.unparse(node)
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.BinOp)
+        and isinstance(node.op, ast.Div)
+        and isinstance(node.right, ast.BinOp)
+        and isinstance(node.right.op, ast.Mult)
+        and _called(node.right.left) in NORMS
+        and _called(node.right.right) in NORMS
+    ]
+
+
+def _zip_products(src: str) -> list[str]:
+    """``zip_with`` calls whose lambda multiplies its elements."""
+    return [
+        ast.unparse(node)[:80]
+        for node in ast.walk(ast.parse(src))
+        if _called(node) == "zip_with"
+        and any(
+            isinstance(a, ast.Lambda)
+            and any(isinstance(b, ast.BinOp) and isinstance(b.op, ast.Mult)
+                    for b in ast.walk(a.body))
+            for a in node.args
+        )
+    ]
+
+
 def test_shapes_are_recognised():
     assert _copies('idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)'
                    ' / (F.col("df") + 0.5))')
@@ -111,6 +155,14 @@ def test_shapes_are_recognised():
     assert _compiler_users(src) == [
         "search: _emit", "topk: compile_query_string",
     ]
+    assert _cosines("c = _dot(v, q) / (_norm(v) * _norm(q))")
+    assert _cosines('c = _vdot(a, b) / (_vnorm(F.col("a")) * sim._norm(b))')
+    assert not _cosines("c = _dot(v, q) / _norm(v)")
+    assert not _cosines("s = f'dot(v, q) / (sqrt(dot(v, v)) * sqrt(dot(q, q)))'")
+    assert _zip_products(
+        "d = F.zip_with(a, b, lambda x, y: x.cast('double') * y.cast('double'))")
+    assert not _zip_products(
+        "p = F.zip_with(h, pos, lambda h, p: F.struct(h.alias('h'), p))")
 
 
 def _offenders(check) -> dict[str, list[str]]:
@@ -135,3 +187,11 @@ def test_no_bm25_in_spark_sql_strings():
 
 def test_engine_never_runs_the_oracle_compiler():
     assert _offenders(_compiler_users) == {}
+
+
+def test_vector_cosine_lives_in_one_module():
+    assert _offenders(_cosines) == {
+        VECTOR_HOME: ["_dot(v, q) / (_norm(v) * _norm(q))"]
+    }
+    zips = _offenders(_zip_products)
+    assert list(zips) == [VECTOR_HOME] and len(zips[VECTOR_HOME]) == 1

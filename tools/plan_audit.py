@@ -100,6 +100,9 @@ def main() -> None:
     vidx_dir = os.path.join(tempfile.gettempdir(), "sparksearch_plan_vidx")
     sim.build_vector_index(spark, emb, vidx_dir, kind="ivf")  # probe-plan audit
     vidx = sim.VectorIndex(spark, vidx_dir)
+    hidx_dir = os.path.join(tempfile.gettempdir(), "sparksearch_plan_hidx")
+    sim.build_vector_index(spark, emb, hidx_dir)  # the default layout: HNSW
+    hidx = sim.open_vector_index(spark, hidx_dir)
     qv = emb.filter("vec_id = 0").select(
         F.col("embedding").cast("array<double>")
     ).collect()[0][0]
@@ -149,6 +152,14 @@ def main() -> None:
             "Centroid argmin on the driver; the vector scan is pruned to the "
             "probed `cell=<id>/` directories.",
             audit(vidx.topk(qv, 10, nprobe=2, exclude_vec_id=0)),
+        ),
+        (
+            "Persisted HNSW query (default vector layout)",
+            "Shard fan-out: one `FlatMapGroupsInPandas` task per `shard=` "
+            "graph walks its HNSW and emits candidate ids; the exact cosine "
+            "reranks only the candidates (leftsemi join against the persisted "
+            "vectors) and `TakeOrderedAndProject` takes the global top-k.",
+            audit(hidx.topk(qv, 10, exclude_vec_id=0)),
         ),
         (
             "match_phrase (indexed, positional verification)",
