@@ -81,8 +81,8 @@ FORMAT_VERSION = 3  # v3: dense-ordinal postings + (doc_id, dl, ordinal) sidecar
 #   generally (already the term_id contract).
 FIELD_SEP = "\x1f"
 
-# wall-clock of the last build's stages (diagnostic; read by tools/
-# scaling_bench.py and ad-hoc profiling — overlapping stages overlap)
+# wall-clock of the last build's stages (diagnostic, for ad-hoc
+# profiling — overlapping stages overlap)
 _TIMINGS: dict[str, float] = {}
 
 

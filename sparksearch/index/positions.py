@@ -29,18 +29,27 @@ the per-(doc, term) position lists fall out of the runs in ascending
 order.  NO corpus-wide exchange; the hive-partitioned write is the only
 shuffle-like step, and it is a write-side fan-out, not a groupBy.
 
-Query (`match_phrase_positional`): a phrase's matches are
+Query: every phrase, span and intervals query reads the sidecar through
+ONE front, :func:`_position_legs` — the one ``blocks(…, "positions")``
+read, one leg per slot (a slot is a list of alternative terms: a
+single-term slot selects its rows, a multi-term slot flattens its
+lists per doc) — and counts through ONE kernel, :func:`_positions_tf`,
+with three rules: exact (a phrase's matches are
 
     tf(d) = | pos(t0) ∩ (pos(t1) − 1) ∩ ... ∩ (pos(t_{m-1}) − (m−1)) |
 
-— ``array_intersect`` over shifted position arrays, pure whole-stage
-codegen (positions are distinct within a list, so the set-intersect IS
-the start-position count, overlaps included).  Conjunction docs come
-from the m-way inner join on doc_id — no separate postings decode
-needed.  Scoring/tie-break/rounding mirror ``match_phrase_topk``
-exactly, so results are rank-identical to the exhaustive path (pinned
-in tests/test_positions.py; driver gate `phrase_positional` runs the
-engine against the exhaustive DuckDB oracle).
+— ``array_intersect`` over shifted position arrays; positions are
+distinct within a list, so the set-intersect IS the start-position
+count, overlaps included), ordered (the greedy ``array_min`` chain) and
+unordered (window counts with multiplicity).  :func:`_proximity_scores`
+inner-joins the legs on doc_id (the conjunction — no separate postings
+decode) and scores the tf; span_or/span_not join the front's legs
+their own way.  The token-array twin of the kernel is
+``query.phrase._anchor_rule``/``_window_tf``.  Scoring/tie-break/
+rounding mirror the exhaustive paths exactly, so results are
+rank-identical (pinned in tests/test_positions.py and
+tests/test_proximity_differential.py; driver gate `phrase_positional`
+runs the engine against the exhaustive DuckDB oracle).
 
 Staleness: ``meta.positions_gen`` stamps the generation the sidecar was
 built at; every mutation bumps ``meta.gen``, so a stale sidecar is
@@ -51,8 +60,9 @@ derived data — rebuild is always safe).
 from __future__ import annotations
 
 import os
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import tokens_col
@@ -161,68 +171,126 @@ def build_positions(
     mf.write_meta(index_dir, meta)
 
 
+def _position_legs(index, slots: list[list[str]]) -> list[DataFrame | None]:
+    """The positions front: the one sidecar read for ``slots`` (lists of
+    alternative terms), resolved once through ``lookup_terms``.
+
+    One (doc_id, dl, p) leg per slot — a single-term slot selects its
+    rows; a multi-term slot flattens its terms' lists per doc (distinct
+    terms never share a position, so the flatten IS the union).  OOV
+    alternatives drop out; a slot with no in-vocabulary term gives
+    None, and each caller decides what an empty slot means."""
+    info = index.lookup_terms(sorted({t for g in slots for t in g}))
+    ids = [sorted({info[t][0] for t in g if t in info}) for g in slots]
+    if not any(ids):
+        return [None] * len(slots)
+    pos = index.blocks({tid for g in ids for tid in g}, "positions")
+
+    def leg(g: list[int]) -> DataFrame:
+        if len(g) == 1:
+            return pos.filter(F.col("term_id") == g[0]).select(
+                "doc_id", "dl", F.col("positions").alias("p")
+            )
+        return (
+            pos.filter(F.col("term_id").isin(g))
+            .groupBy("doc_id")
+            .agg(
+                F.first("dl").alias("dl"),
+                F.flatten(F.collect_list("positions")).alias("p"),
+            )
+        )
+
+    return [leg(g) if g else None for g in ids]
+
+
+def _count_within(arr: Column, lo: Column, hi: Column) -> Column:
+    """Column: elements of the position array ``arr`` in [lo, hi]."""
+    return F.size(F.filter(arr, lambda q: (q >= lo) & (q <= hi)))
+
+
+def _positions_tf(mult: list[int], gaps: int, ordered: bool) -> Column:
+    """Column: the anchored-window tf over the legs ``p0..p{n-1}``, leg j
+    standing for ``mult[j]`` slots — the one proximity kernel over
+    position arrays (0-based; the window arithmetic is shift-invariant,
+    so it pins to the token kernel ``query.phrase._anchor_rule``).
+    Each lambda runs when its Column is built, so the
+    loop variables bind at once (never pass them as default arguments:
+    a two-parameter lambda is read by PySpark as the (element, index)
+    form).
+
+    * exact (ordered, ``gaps=0``): ``|p0 ∩ (p1 − 1) ∩ … ∩ (p{m-1} −
+      (m−1))|`` — positions are distinct within a list, so the
+      set-intersect IS the start-position count, overlaps included;
+    * ordered: anchors a in p0 whose greedy chain q_j = min{q ∈ p_j :
+      q > q_{j-1}} ends within a + m-1+gaps;
+    * unordered (legs are the distinct slots): anchors a in any leg with
+      at least ``mult[j]`` positions of leg j in [a, a + m-1+gaps].
+
+    ``m = sum(mult)`` counts the slots.
+    """
+    n, m = len(mult), sum(mult)
+    p = [F.col(f"p{j}") for j in range(n)]
+    end = m - 1 + gaps
+    if ordered and (gaps == 0 or m == 1):
+        acc = p[0]
+        for j in range(1, n):
+            acc = F.array_intersect(acc, F.transform(p[j], lambda x: x - F.lit(j)))
+        return F.size(acc)
+    if ordered:
+
+        def _ok(a):
+            q = a
+            for j in range(1, n):
+                q = F.array_min(F.filter(p[j], lambda x: x > q))
+            return F.coalesce(q - a <= end, F.lit(False))
+
+        return F.size(F.filter(p[0], _ok))
+    anchors = p[0]
+    for j in range(1, n):
+        anchors = F.array_union(anchors, p[j])
+
+    def _ok(a):
+        cond = F.lit(True)
+        for j, c in enumerate(mult):
+            cond = cond & (_count_within(p[j], a, a + end) >= c)
+        return cond
+
+    return F.size(F.filter(anchors, _ok))
+
+
+def _proximity_scores(index, slots: list[list[str]], gaps: int = 0, *,
+                      ordered: bool = True) -> DataFrame:
+    """(doc_id, raw) for EVERY doc whose anchored-window tf over
+    ``slots`` is > 0: the inner-joined legs of :func:`_position_legs`
+    (the conjunction; an empty slot empties it) through
+    :func:`_positions_tf`, scored as one BM25 pseudo-term with the
+    index's corpus stats.  Reads position lists only, never text."""
+    mult = [1] * len(slots)
+    if not ordered:
+        counts = Counter(tuple(sorted(set(g))) for g in slots)
+        slots = [list(g) for g in sorted(counts)]
+        mult = [counts[tuple(g)] for g in slots]
+    legs = _position_legs(index, slots)
+    if any(leg is None for leg in legs):
+        return index.spark.createDataFrame([], "doc_id long, raw double")
+    joined = legs[0].select("doc_id", "dl", F.col("p").alias("p0"))
+    for j, leg in enumerate(legs[1:], 1):
+        joined = joined.join(leg.select("doc_id", F.col("p").alias(f"p{j}")), "doc_id")
+    tf = _positions_tf(mult, gaps, ordered)
+    return indexed_pseudo_term_scores(
+        joined.select("doc_id", "dl", tf.alias("tf")), index.meta
+    )
+
+
 def phrase_scores_all(index, terms: list[str], slop: int = 0) -> DataFrame:
     """(doc_id, raw) for EVERY doc matching the phrase ``terms`` — the
     full match set a bool conjunction needs, unrounded and unsorted.
     Same tf semantics / BM25 globals as :func:`match_phrase_positional`
-    (which is the top-k over this frame).  Verification reads position
-    lists only, never document text.
-
-    ``slop>0`` applies the pinned ordered-window rule
-    (``query.phrase.phrase_tf_col``): tf = anchors p in pos(t0) whose
-    greedy chain q_j = min{q ∈ pos(t_j) : q > q_{j-1}} ends within
-    p + m-1+slop.  Greedy minimizes the chain end, so the existence
-    test is exact; positions are ascending and duplicate-free per
-    (doc, term), making the per-anchor filters cheap."""
-    distinct = sorted(set(terms))
-    info = index.lookup_terms(distinct) if terms else {}
-    if not terms or len(info) < len(distinct):
-        # no terms, or an OOV conjunct: no doc can hold the phrase
+    (which is the top-k over this frame); ``slop>0`` applies the pinned
+    ordered-window rule (``query.phrase.phrase_tf_col``)."""
+    if not terms:
         return index.spark.createDataFrame([], "doc_id long, raw double")
-    meta = index.meta
-    pos = index.blocks([tid for tid, _, _ in info.values()], "positions")
-    legs = []
-    for i, t in enumerate(terms):
-        leg = pos.filter(F.col("term_id") == info[t][0]).select(
-            "doc_id",
-            *(["dl"] if i == 0 else []),
-            F.col("positions").alias(f"p{i}"),
-        )
-        legs.append(leg)
-    joined = legs[0]
-    for leg in legs[1:]:
-        joined = joined.join(leg, "doc_id")
-    def _shift(offset: int):
-        # NB: a two-parameter lambda would be read by PySpark as the
-        # (element, index) form of transform — bind the offset via a
-        # closure, never a default argument
-        return lambda x: x - F.lit(offset)
-
-    m = len(terms)
-    if slop == 0 or m == 1:
-        acc = F.col("p0")
-        for i in range(1, m):
-            acc = F.array_intersect(acc, F.transform(f"p{i}", _shift(i)))
-        tf_col = F.size(acc)
-    else:
-        # sloppy: greedy earliest-successor chain per anchor, existence
-        # iff the greedy chain's end fits in the anchor's window
-        def _next_after(j: int, prev):
-            def gt(q):
-                return q > prev
-
-            return F.array_min(F.filter(F.col(f"p{j}"), gt))
-
-        def _anchor_ok(p):
-            acc = p
-            for j in range(1, m):
-                acc = _next_after(j, acc)
-            return F.coalesce(acc - p <= m - 1 + slop, F.lit(False))
-
-        tf_col = F.size(F.filter(F.col("p0"), _anchor_ok))
-    return indexed_pseudo_term_scores(
-        joined.select("doc_id", "dl", tf_col.alias("tf")), meta
-    )
+    return _proximity_scores(index, [[t] for t in terms], slop)
 
 
 def match_phrase_positional(
@@ -247,76 +315,25 @@ def match_phrase_prefix_positional(
     """match_phrase_prefix from the positions + lexicon sidecars alone.
 
     The last analyzed term expands through the term dictionary
-    (dictionary order, capped — Lucene MatchPhrasePrefixQuery) and its
-    expansions' position lists are flattened per doc (distinct terms
-    can never share a position, so the flatten IS the union); adjacency
-    then counts exactly like :func:`match_phrase_positional`.
-    Rank-identical to ``query.phrase.match_phrase_prefix_topk``
-    (pytest) — no corpus read.
+    (dictionary order, capped — Lucene MatchPhrasePrefixQuery) into the
+    last slot's alternatives; adjacency then counts exactly like
+    :func:`match_phrase_positional`.  Rank-identical to
+    ``query.phrase.match_phrase_prefix_topk`` (pytest) — no corpus read.
     """
     from sparksearch.index.lexicon import MAX_EXPANSIONS, expand_prefix
-    from sparksearch.hashing import term_id_of
 
     if max_expansions is None:
         max_expansions = MAX_EXPANSIONS
     index._refresh_if_stale()
-    spark = index.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
     terms = index._tokenize(phrase)
-    if not terms:
-        return empty
-    firsts, pre = terms[:-1], terms[-1]
-    expansions = expand_prefix(spark, index.index_dir, pre, max_expansions)
+    expansions = (
+        expand_prefix(index.spark, index.index_dir, terms[-1], max_expansions)
+        if terms else []
+    )
     if not expansions:
-        return empty
-    info = index.lookup_terms(sorted(set(firsts))) if firsts else {}
-    if len(info) < len(set(firsts)):
-        return empty  # an OOV leading conjunct
-    meta = index.meta
-    exp_ids = sorted({term_id_of(t) for t in expansions})
-    pos = index.blocks(
-        {tid for tid, _, _ in info.values()} | set(exp_ids), "positions"
-    )
-    m = len(terms)
-    legs = []
-    for i, t in enumerate(firsts):
-        legs.append(
-            pos.filter(F.col("term_id") == info[t][0]).select(
-                "doc_id",
-                *(["dl"] if i == 0 else []),
-                F.col("positions").alias(f"p{i}"),
-            )
-        )
-    # expansion leg: flatten per doc — positions of distinct terms are
-    # disjoint, so no dedup is needed and the flat count IS the tf
-    last = (
-        pos.filter(F.col("term_id").isin(exp_ids))
-        .groupBy("doc_id")
-        .agg(
-            F.first("dl").alias("dl_last"),
-            F.flatten(F.collect_list("positions")).alias(f"p{m - 1}"),
-        )
-    )
-    legs.append(last)
-    joined = legs[0]
-    for leg in legs[1:]:
-        joined = joined.join(leg, "doc_id")
-    dl_col = "dl" if firsts else "dl_last"
-
-    def _shift(offset: int):
-        return lambda x: x - F.lit(offset)
-
-    if m == 1:
-        tf_expr = F.size(F.col("p0"))
-    else:
-        acc = F.col("p0")
-        for i in range(1, m):
-            acc = F.array_intersect(acc, F.transform(f"p{i}", _shift(i)))
-        tf_expr = F.size(acc)
-    tf_frame = joined.select(
-        "doc_id", F.col(dl_col).alias("dl"), tf_expr.alias("tf")
-    )
-    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
+        return index.spark.createDataFrame([], "doc_id long, score double")
+    slots = [[t] for t in terms[:-1]] + [expansions]
+    return topk_cut(_proximity_scores(index, slots), k)
 
 
 # Driver-path phrase budget: positions volume (Σ collection-frequency

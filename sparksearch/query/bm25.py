@@ -117,35 +117,44 @@ def term_parts(
 def pseudo_term_topk(stats: DataFrame, k: int, k1: float, b: float) -> DataFrame:
     """(doc_id, dl, tf) rows over ALL docs → BM25 top-k of the pseudo-term
     (df = rows with tf > 0, n_docs/avgdl over every row)."""
-    # one pass feeds the globals, the df and the scored rows
-    stats = stats.persist()
-    glob = stats.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    # the globals and the df are one aggregate, a scalar subquery of the
+    # same plan (no cache outlives the query), projected once as ``g``
+    # so the weight's references share one subquery
+    g = stats.agg(
+        F.struct(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.avg("dl").alias("avgdl"),
+            F.count_if(F.col("tf") > 0).alias("df"),
+        )
+    ).scalar()
+    w = bm25_weight("tf", "dl", "g.df", "g.n_docs", "g.avgdl", k1, b)
+    # rows with tf = 0 score NULL, which sorts last, and are dropped after
+    # the cut: a tf > 0 filter before it would be pushed into the
+    # tokenize projection and re-tokenize at every anchor position
+    raw = F.when(F.col("tf") > 0, w)
+    scored = stats.select("doc_id", "dl", "tf", g.alias("g")).select(
+        "doc_id", raw.alias("raw")
     )
-    hits = stats.filter(F.col("tf") > 0)
-    df_ = hits.agg(F.count(F.lit(1)).alias("df"))
-    return topk_cut(
-        hits.crossJoin(F.broadcast(df_))
-        .crossJoin(F.broadcast(glob))
-        .select(
-            "doc_id",
-            bm25_weight("tf", "dl", "df", "n_docs", "avgdl", k1, b).alias("raw"),
-        ),
-        k,
-    )
+    return topk_cut(scored, k).filter(F.col("score").isNotNull())
 
 
 def indexed_pseudo_term_scores(tf_frame: DataFrame, meta: dict) -> DataFrame:
     """(doc_id, dl, tf) rows (tf = 0 allowed) → (doc_id, raw) with the
     INDEX's corpus stats (``meta`` n_docs/avgdl/k1/b — a sidecar never
     re-derives them)."""
-    # the df aggregate and the scoring both read the verified rows
-    tf = tf_frame.filter(F.col("tf") > 0).persist()
-    df_ = tf.agg(F.count(F.lit(1)).alias("df"))
+    tf = tf_frame.filter(F.col("tf") > 0)
+    # df is a scalar subquery of the same plan (no cache outlives the
+    # query), projected once so the weight's two df references share it.
+    # It counts ``dl`` (never null) rather than 1 so the subquery keeps
+    # the columns the scoring reads, and AQE reuses the legs' exchanges
+    # instead of running their shuffles twice.
+    df_ = tf.agg(F.count("dl")).scalar()
     w = bm25_weight(
         "tf", "dl", "df", meta["n_docs"], meta["avgdl"], meta["k1"], meta["b"]
     )
-    return tf.crossJoin(F.broadcast(df_)).select("doc_id", w.alias("raw"))
+    return tf.select("doc_id", "dl", "tf", df_.alias("df")).select(
+        "doc_id", w.alias("raw")
+    )
 
 
 def topk_cut(scored: DataFrame, k: int, *, round_scores: bool = True) -> DataFrame:

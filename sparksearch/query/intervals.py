@@ -43,12 +43,12 @@ Scoring: the tf above as one BM25 pseudo-term (``query/bm25.py``:
 df = docs with tf > 0, corpus-wide n_docs/avgdl, 4 dp round, doc_id-asc
 ties).
 
-Scale shape: the exhaustive tf is a pure-Catalyst higher-order
-expression (no UDF, no explode, whole-stage codegen); the positional
-path (:func:`intervals_positional`) reads one bucket-pruned positions
-slice per SLOT (union of the slot's term-id position lists — an
-array-flatten groupBy, slot-count joins on doc_id) and never touches
-document text.
+Scale shape: the exhaustive tf is the token kernel of
+``query/phrase.py`` (``_window_tf``, a pure-Catalyst higher-order
+expression); the positional path (:func:`intervals_positional`) is the
+position kernel behind the one sidecar front of ``index/positions.py``
+(one leg per SLOT — a multi-term slot's lists flatten per doc — joined
+on doc_id) and never touches document text.
 """
 
 from __future__ import annotations
@@ -56,12 +56,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
-from sparksearch.query.bm25 import (
-    indexed_pseudo_term_scores,
-    pseudo_term_topk,
-    topk_cut,
-)
+from sparksearch.analyze import tokenize_str, tokens_col
+from sparksearch.index.positions import _proximity_scores
+from sparksearch.query.bm25 import pseudo_term_topk, topk_cut
+from sparksearch.query.phrase import _window_tf
 from sparksearch.query.spans import _span_bm25_sql, _sql_quote
 
 
@@ -90,11 +88,6 @@ def _validate_slots(slots: list[list[str]], analyzer: str) -> list[list[str]]:
     return out
 
 
-def _in(group: list[str]):
-    arr = F.array(*[F.lit(t) for t in group])
-    return lambda x: F.array_contains(arr, x)
-
-
 def intervals_tf_col(
     toks: Column, slots: list[list[str]], max_gaps: int = 0,
     *, ordered: bool = True,
@@ -103,41 +96,7 @@ def intervals_tf_col(
     spec (module docstring).  ``slots`` must be pre-validated."""
     if max_gaps < 0:
         raise ValueError("max_gaps must be >= 0 (use a bool query for -1)")
-    m = len(slots)
-    if ordered:
-        rest = F.array(
-            *[F.array(*[F.lit(t) for t in g]) for g in slots[1:]]
-        )
-        win = m - 1 + max_gaps
-        in0 = _in(slots[0])
-
-        def _anchor_ok(i):
-            matched = F.aggregate(
-                F.slice(toks, i + 1, win),
-                F.lit(0),
-                lambda acc, x: F.when(
-                    (acc < m - 1)
-                    & F.array_contains(F.element_at(rest, acc + 1), x),
-                    acc + 1,
-                ).otherwise(acc),
-            )
-            return in0(F.element_at(toks, i)) & (matched == m - 1)
-
-    else:
-        w = m + max_gaps  # window length including the anchor
-        members = _in(sorted({t for g in slots for t in g}))
-        checks = [_in(g) for g in slots]
-
-        def _anchor_ok(i):
-            win_sl = F.slice(toks, i, w)
-            cond = members(F.element_at(toks, i))
-            for chk in checks:
-                cond = cond & (F.size(F.filter(win_sl, chk)) >= 1)
-            return cond
-
-    starts = F.sequence(F.lit(1), F.size(toks))
-    hits = F.size(F.filter(starts, _anchor_ok))
-    return F.when(F.size(toks) >= m, hits).otherwise(F.lit(0))
+    return _window_tf(toks, slots, max_gaps, ordered=ordered)
 
 
 def _intervals_tf_sql(
@@ -230,79 +189,21 @@ def intervals_sql(
     return _span_bm25_sql(stf, k, table, id_col, text_col, k1, b, analyzer)
 
 
-def _gt(prev):
-    return lambda q: q > prev
-
-
 def intervals_positional(
     index, slots: list[list[str]], k: int = 10, *,
     max_gaps: int = 0, ordered: bool = True,
 ) -> DataFrame:
     """intervals top-k from the positions sidecar alone — no corpus
-    read.  One bucket-pruned slice per SLOT: the slot's per-term
-    position lists union into one sorted array (array-flatten groupBy),
-    the slot frames join on doc_id (docs missing any slot can't match),
-    then the pinned anchored-window tf evaluates on position arrays
-    (0-based sidecar positions; the window arithmetic is
-    shift-invariant).  Rank-identical to :func:`intervals_topk`
-    (pytest-pinned).  A slot with every alternative OOV empties the
-    conjunction; OOV alternatives inside a surviving slot just drop."""
+    read.  One leg per SLOT (a multi-term slot's position lists
+    flattened per doc), joined on doc_id (docs missing any slot can't
+    match); the pinned anchored-window tf then evaluates on position
+    arrays.  Rank-identical to :func:`intervals_topk` (pytest-pinned).
+    A slot with every alternative OOV empties the conjunction; OOV
+    alternatives inside a surviving slot just drop."""
     analyzer = index.meta.get("analyzer", "ascii")
     slots = _validate_slots(slots, analyzer)
     if max_gaps < 0:
         raise ValueError("max_gaps must be >= 0 (use a bool query for -1)")
-    info = index.lookup_terms(sorted({t for g in slots for t in g}))
-    slot_ids = [sorted({info[t][0] for t in g if t in info}) for g in slots]
-    if any(not ids for ids in slot_ids):
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    meta = index.meta
-    pos = index.blocks({tid for ids in slot_ids for tid in ids}, "positions")
-    legs = []
-    for j, ids in enumerate(slot_ids):
-        leg = (
-            pos.filter(F.col("term_id").isin(ids))
-            .groupBy("doc_id")
-            .agg(
-                *([F.first("dl").alias("dl")] if j == 0 else []),
-                F.array_sort(
-                    F.flatten(F.collect_list("positions"))
-                ).alias(f"p{j}"),
-            )
-        )
-        legs.append(leg)
-    joined = legs[0]
-    for leg in legs[1:]:
-        joined = joined.join(leg, "doc_id")
-    m = len(slots)
-    span_end = m - 1 + max_gaps  # window END offset from the anchor
-
-    if ordered:
-
-        def _ok(p):
-            prev = p
-            for j in range(1, m):
-                prev = F.array_min(F.filter(F.col(f"p{j}"), _gt(prev)))
-            return prev.isNotNull() & (prev <= p + span_end)
-
-        anchors = F.col("p0")
-    else:
-
-        def _count_in(col_name: str, p):
-            def inside(q):
-                return (q >= p) & (q <= p + span_end)
-
-            return F.size(F.filter(F.col(col_name), inside))
-
-        def _ok(p):
-            cond = F.lit(True)
-            for j in range(m):
-                cond = cond & (_count_in(f"p{j}", p) >= 1)
-            return cond
-
-        anchors = F.col("p0")
-        for j in range(1, m):
-            anchors = F.array_union(anchors, F.col(f"p{j}"))
-
-    tf_col = F.size(F.filter(anchors, _ok))
-    tf_frame = joined.select("doc_id", "dl", tf_col.alias("tf"))
-    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
+    return topk_cut(
+        _proximity_scores(index, slots, max_gaps, ordered=ordered), k
+    )

@@ -23,6 +23,16 @@ a pure Catalyst expression — no UDF, no explode, no shuffle before the
 single count/groupBy.  The DuckDB twin renders the identical
 list-lambda computation.
 
+This module holds the one proximity kernel over token arrays: a query
+is a list of SLOTS (lists of alternative terms), :func:`_anchor_rule`
+is the anchored-window rule (ordered: greedy earliest-successor chain;
+unordered: every distinct slot as often as it appears in the window)
+and :func:`_window_tf` counts its anchors.  ``match_phrase`` (any
+slop), ``match_phrase_prefix``, ``span_near``, ``span_containing`` /
+``span_within`` and ``intervals`` all run through it; their positional
+forms run the twin kernel behind the one sidecar front in
+``index/positions.py``.
+
 At scale the exhaustive path re-analyzes every doc; the indexed path
 (`match_phrase_indexed`) instead intersects the phrase terms' pruned
 posting lists (docs can only hold the phrase if they hold every term)
@@ -34,6 +44,8 @@ candidates ⊇ phrase matches.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,53 +59,94 @@ from sparksearch.query.bm25 import (
 )
 
 
+def _in(group: list[str]):
+    """Predicate: a token is one of ``group``."""
+    arr = F.array(*[F.lit(t) for t in group])
+    return lambda x: F.array_contains(arr, x)
+
+
+def _anchor_rule(toks: Column, slots: list[list[str]], gaps: int, *,
+                 ordered: bool):
+    """The anchored-window rule over 1-based token index ``i``; a slot
+    is a list of alternative terms and ``m = len(slots)``.
+
+    * ordered — ``toks[i]`` is in slot 0 and the greedy
+      earliest-successor chain of slots 1.. ends within ``i + m-1+gaps``
+      (greedy minimizes the chain's end, so it is existence-exact);
+    * unordered — ``toks[i]`` is in some slot and the ``m+gaps`` tokens
+      from ``i`` hold every distinct slot as many times as it appears.
+    """
+    m = len(slots)
+    if ordered:
+        rest = F.array(*[F.array(*[F.lit(t) for t in g]) for g in slots[1:]])
+        first = _in(slots[0])
+
+        def _ok(i):
+            matched = F.aggregate(
+                F.slice(toks, i + 1, m - 1 + gaps),
+                F.lit(0),
+                lambda acc, x: F.when(
+                    (acc < m - 1)
+                    & F.array_contains(F.element_at(rest, acc + 1), x),
+                    acc + 1,
+                ).otherwise(acc),
+            )
+            return first(F.element_at(toks, i)) & (matched == m - 1)
+
+        return _ok
+    member = _in(sorted({t for g in slots for t in g}))
+    mult = sorted(Counter(tuple(sorted(set(g))) for g in slots).items())
+
+    def _ok(i):
+        win = F.slice(toks, i, m + gaps)
+        cond = member(F.element_at(toks, i))
+        for g, c in mult:
+            cond = cond & (F.size(F.filter(win, _in(list(g)))) >= c)
+        return cond
+
+    return _ok
+
+
+def _window_tf(toks: Column, slots: list[list[str]], gaps: int = 0, *,
+               ordered: bool = True) -> Column:
+    """Column: #anchors of :func:`_anchor_rule` — the one proximity
+    kernel over token arrays.  Contiguous single-term slots (ordered,
+    ``gaps=0``) count start positions with ``slice == target``.  Guarded
+    for ``len(toks) < m`` because Spark's ``sequence(1, 0)`` DESCENDS
+    (it would yield [1, 0], not [])."""
+    m = len(slots)
+    if ordered and gaps == 0 and all(len(g) == 1 for g in slots):
+        target = F.array(*[F.lit(g[0]) for g in slots])
+        starts = F.sequence(F.lit(1), F.size(toks) - m + 1)
+        hits = F.size(F.filter(starts, lambda i: F.slice(toks, i, m) == target))
+    elif m == 1:
+        # one slot: the window cannot matter
+        return F.size(F.filter(toks, _in(slots[0])))
+    else:
+        starts = F.sequence(F.lit(1), F.size(toks))
+        hits = F.size(
+            F.filter(starts, _anchor_rule(toks, slots, gaps, ordered=ordered))
+        )
+    return F.when(F.size(toks) >= m, hits).otherwise(F.lit(0))
+
+
 def phrase_tf_col(toks: Column, phrase_terms: list[str], slop: int = 0) -> Column:
     """Column: phrase frequency of ``phrase_terms`` in ``toks``.
 
     ``slop=0`` (default): number of start positions where the terms
-    occur exactly adjacent, in order.  Guarded for ``len(toks) < m``
-    because Spark's ``sequence(1, 0)`` DESCENDS (it would yield
-    [1, 0], not []).
+    occur exactly adjacent, in order.
 
     ``slop>0``: the pinned sloppy spec — tf = number of anchor
     positions p with ``toks[p] == t0`` and the remaining terms an
     ordered subsequence of ``toks[p+1 .. p+m-1+slop]`` (an in-order
-    occurrence whose span ≤ m-1+slop).  Reduces EXACTLY to the slop=0
-    semantics at slop=0.  Documented deviation from Lucene's
-    SloppyPhraseScorer (which also permits term transpositions and
-    weights each match 1/(distance+1)); this ordered-window rule is
-    identical in both engines and the DuckDB oracle.  The greedy
-    fold (take each term's earliest in-window occurrence) is
-    existence-exact: greedy minimizes the chain's end position, so a
-    chain within the window exists iff the greedy one fits.
+    occurrence whose span ≤ m-1+slop), the ordered rule of
+    :func:`_anchor_rule`.  Reduces EXACTLY to the slop=0 semantics at
+    slop=0.  Documented deviation from Lucene's SloppyPhraseScorer
+    (which also permits term transpositions and weights each match
+    1/(distance+1)); this ordered-window rule is identical in both
+    engines and the DuckDB oracle.
     """
-    m = len(phrase_terms)
-    if slop == 0:
-        target = F.array(*[F.lit(t) for t in phrase_terms])
-        starts = F.sequence(F.lit(1), F.size(toks) - m + 1)
-        hits = F.size(F.filter(starts, lambda i: F.slice(toks, i, m) == target))
-        return F.when(F.size(toks) >= m, hits).otherwise(F.lit(0))
-    if m == 1:
-        # degenerate: slop cannot matter for a single term
-        return F.size(F.filter(toks, lambda x: x == F.lit(phrase_terms[0])))
-    rest = F.array(*[F.lit(t) for t in phrase_terms[1:]])
-    t0 = F.lit(phrase_terms[0])
-    win = m - 1 + slop  # tokens after the anchor that may hold the rest
-
-    def _anchor_ok(i):
-        # greedy ordered-subsequence fold of terms[1:] over the window
-        matched = F.aggregate(
-            F.slice(toks, i + 1, win),
-            F.lit(0),
-            lambda acc, x: F.when(
-                (acc < m - 1) & (x == F.element_at(rest, acc + 1)), acc + 1
-            ).otherwise(acc),
-        )
-        return (F.element_at(toks, i) == t0) & (matched == m - 1)
-
-    starts = F.sequence(F.lit(1), F.size(toks))
-    hits = F.size(F.filter(starts, _anchor_ok))
-    return F.when(F.size(toks) >= m, hits).otherwise(F.lit(0))
+    return _window_tf(toks, [[t] for t in phrase_terms], slop)
 
 
 def _phrase_tf_sql(toks_expr: str, phrase_terms: list[str], slop: int = 0) -> str:
@@ -281,29 +334,10 @@ def match_phrase_indexed(
 MAX_EXPANSIONS = 50
 
 
-def phrase_prefix_tf_col(
-    toks: Column, first_terms: list[str], expansions: list[str]
-) -> Column:
-    """Start positions where ``first_terms`` match exactly and the next
-    token is any of ``expansions``."""
-    m = len(first_terms) + 1
-    exp = F.array(*[F.lit(t) for t in expansions])
-    starts = F.sequence(F.lit(1), F.size(toks) - m + 1)
-    if first_terms:
-        target = F.array(*[F.lit(t) for t in first_terms])
-        cond = lambda i: (F.slice(toks, i, m - 1) == target) & (  # noqa: E731
-            F.array_contains(exp, F.element_at(toks, i + m - 1))
-        )
-    else:
-        cond = lambda i: F.array_contains(exp, F.element_at(toks, i))  # noqa: E731
-    hits = F.size(F.filter(starts, cond))
-    return F.when(F.size(toks) >= m, hits).otherwise(F.lit(0))
-
-
 def _phrase_prefix_tf_sql(
     toks_expr: str, first_terms: list[str], m: int
 ) -> str:
-    """DuckDB twin of :func:`phrase_prefix_tf_col`; the expansion list is
+    """DuckDB twin of the prefix phrase tf; the expansion list is
     the correlated column ``exps`` (built by the query's own CTE)."""
     last = f"list_contains(exps, ({toks_expr})[i + {m} - 1])"
     if first_terms:
@@ -371,7 +405,9 @@ def match_phrase_prefix_topk(
     stats = base.select(
         "doc_id",
         F.size("toks").alias("dl"),
-        phrase_prefix_tf_col(F.col("toks"), terms[:-1], expansions).alias("tf"),
+        _window_tf(
+            F.col("toks"), [[t] for t in terms[:-1]] + [expansions]
+        ).alias("tf"),
     )
     return pseudo_term_topk(stats, k, k1, b)
 

@@ -11,8 +11,8 @@ single-term clauses, with the window length ``m + slop`` tokens
   t0`` whose remaining clauses form an in-order occurrence within
   ``p + m-1+slop``.  Single-position spans make Lucene's
   ordered-spans condition (strictly increasing positions, span width
-  ≤ slop) identical to that rule, so the ordered path DELEGATES to
-  the phrase implementation and is rank-identical to
+  ≤ slop) identical to that rule, so the ordered path runs the
+  phrase kernel's ordered rule and is rank-identical to
   ``match_phrase(slop=)`` by construction.
 * ``in_order=False`` — tf = anchor positions p where ``toks[p]`` is a
   clause term and the window ``toks[p .. p+m-1+slop]`` holds every
@@ -29,12 +29,13 @@ three engines.  Scoring is then the BM25 pseudo-term of
 ``query/bm25.py`` (df = docs with tf > 0, corpus-wide n_docs/avgdl,
 4 dp round).
 
-Scale shape: the exhaustive tf is a pure-Catalyst higher-order
-expression (no UDF, no explode); the positional path joins one
-bucket-pruned parquet slice per DISTINCT clause term on doc_id and
-verifies from position lists alone — document text is never read
-(the ``match_phrase_positional`` plan with a per-anchor counting
-filter instead of the intersect).
+Scale shape: the exhaustive tf is the token kernel of
+``query/phrase.py`` (``_window_tf``/``_anchor_rule``, a pure-Catalyst
+higher-order expression — no UDF, no explode); the positional path is
+the position kernel behind the one sidecar front of
+``index/positions.py`` (one leg per DISTINCT clause term, joined on
+doc_id; document text is never read).  span_first/span_or/span_not
+take their legs from the same front.
 """
 
 from __future__ import annotations
@@ -45,13 +46,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
+from sparksearch.index.positions import (
+    _count_within,
+    _position_legs,
+    _proximity_scores,
+)
 from sparksearch.query.bm25 import (
     SCORE_ROUND,
     indexed_pseudo_term_scores,
     pseudo_term_topk,
     topk_cut,
 )
-from sparksearch.query.phrase import _phrase_tf_sql, phrase_tf_col
+from sparksearch.query.phrase import _anchor_rule, _in, _phrase_tf_sql, _window_tf
 
 
 def _validate_clauses(terms: list[str], analyzer: str) -> list[str]:
@@ -69,35 +75,12 @@ def _validate_clauses(terms: list[str], analyzer: str) -> list[str]:
     return list(terms)
 
 
-def _eq(u: str):
-    # closure factory: a loop-local lambda would late-bind u, and a
-    # default-arg lambda is read by PySpark as the (element, index)
-    # two-parameter HOF form
-    return lambda x: x == F.lit(u)
-
-
 def span_near_tf_col(
     toks: Column, terms: list[str], slop: int = 0, *, in_order: bool = False
 ) -> Column:
     """Column: span_near frequency of ``terms`` in ``toks`` (see module
     docstring for the pinned anchored-window spec)."""
-    if in_order:
-        return phrase_tf_col(toks, terms, slop)
-    m = len(terms)
-    w = m + slop  # window length: anchor + m-1+slop following tokens
-    mult = sorted(Counter(terms).items())
-    members = F.array(*[F.lit(t) for t in sorted(set(terms))])
-
-    def _ok(i):
-        win = F.slice(toks, i, w)
-        cond = F.array_contains(members, F.element_at(toks, i))
-        for u, c in mult:
-            cond = cond & (F.size(F.filter(win, _eq(u))) >= c)
-        return cond
-
-    starts = F.sequence(F.lit(1), F.size(toks))
-    hits = F.size(F.filter(starts, _ok))
-    return F.when(F.size(toks) >= m, hits).otherwise(F.lit(0))
+    return _window_tf(toks, [[t] for t in terms], slop, ordered=in_order)
 
 
 def _span_tf_sql(toks_expr: str, terms: list[str], slop: int,
@@ -208,56 +191,16 @@ def span_near_positional(
     in_order: bool = False,
 ) -> DataFrame:
     """span_near top-k from the positions sidecar alone — no corpus
-    read.  Ordered delegates to the sloppy-phrase chain; unordered
-    joins one bucket-pruned slice per DISTINCT clause term and counts
-    anchors whose window holds every clause multiplicity.
+    read.  Ordered runs the sloppy-phrase chain; unordered joins one
+    leg per DISTINCT clause term and counts anchors whose window holds
+    every clause multiplicity.
     Rank-identical to :func:`span_near_topk` (pytest-pinned)."""
-    from sparksearch.index.positions import phrase_scores_all
-
     analyzer = index.meta.get("analyzer", "ascii")
     terms = _validate_clauses(terms, analyzer)
-    if in_order:
-        return topk_cut(phrase_scores_all(index, terms, slop), k)
-    distinct = sorted(set(terms))
-    info = index.lookup_terms(distinct)
-    if len(info) < len(distinct):
-        # an OOV clause: the conjunction is empty
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    meta = index.meta
-    pos = index.blocks([tid for tid, _, _ in info.values()], "positions")
-    legs = []
-    for i, t in enumerate(distinct):
-        leg = pos.filter(F.col("term_id") == info[t][0]).select(
-            "doc_id",
-            *(["dl"] if i == 0 else []),
-            F.col("positions").alias(f"p{i}"),
-        )
-        legs.append(leg)
-    joined = legs[0]
-    for leg in legs[1:]:
-        joined = joined.join(leg, "doc_id")
-    m = len(terms)
-    w = m - 1 + slop  # window END offset from the anchor (inclusive)
-    mult = Counter(terms)
-
-    def _count_in(col_name: str, p):
-        def inside(q):
-            return (q >= p) & (q <= p + w)
-
-        return F.size(F.filter(F.col(col_name), inside))
-
-    def _ok(p):
-        cond = F.lit(True)
-        for i, t in enumerate(distinct):
-            cond = cond & (_count_in(f"p{i}", p) >= mult[t])
-        return cond
-
-    anchors = F.col("p0")
-    for i in range(1, len(distinct)):
-        anchors = F.array_union(anchors, F.col(f"p{i}"))
-    tf_col = F.size(F.filter(anchors, _ok))
-    tf_frame = joined.select("doc_id", "dl", tf_col.alias("tf"))
-    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
+    return topk_cut(
+        _proximity_scores(index, [[t] for t in terms], slop, ordered=in_order),
+        k,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -298,6 +241,10 @@ def _sql_quote(t: str) -> str:
     return "'" + t.replace("'", "''") + "'"
 
 
+def _empty(index) -> DataFrame:
+    return index.spark.createDataFrame([], "doc_id long, score double")
+
+
 def span_first_topk(
     docs: DataFrame,
     term: str,
@@ -318,7 +265,7 @@ def span_first_topk(
     base = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"), tokens_col(text_col, analyzer).alias("toks")
     )
-    tf = F.size(F.filter(F.slice("toks", 1, end), _eq(term))) if end else F.lit(0)
+    tf = F.size(F.filter(F.slice("toks", 1, end), _in([term]))) if end else F.lit(0)
     stats = base.select("doc_id", F.size("toks").alias("dl"), tf.alias("tf"))
     return pseudo_term_topk(stats, k, k1, b)
 
@@ -351,21 +298,12 @@ def span_first_positional(index, term: str, end: int, k: int = 10) -> DataFrame:
     leg; 0-based sidecar positions give tf = |{p : p < end}| directly)."""
     analyzer = index.meta.get("analyzer", "ascii")
     term = _validate_term(term, analyzer)
-    info = index.lookup_terms([term])
-    if not info or end <= 0:
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    meta = index.meta
-    leg = index.blocks([info[term][0]], "positions").select(
-        "doc_id", "dl", "positions"
-    )
-
-    def _lt_end(p):
-        return p < F.lit(int(end))
-
-    tf_frame = leg.select(
-        "doc_id", "dl", F.size(F.filter("positions", _lt_end)).alias("tf")
-    )
-    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
+    leg = _position_legs(index, [[term]])[0] if end > 0 else None
+    if leg is None:
+        return _empty(index)
+    tf = F.size(F.filter("p", lambda q: q < F.lit(int(end))))
+    tf_frame = leg.select("doc_id", "dl", tf.alias("tf"))
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, index.meta), k)
 
 
 def span_or_topk(
@@ -387,15 +325,10 @@ def span_or_topk(
     base = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("doc_id"), tokens_col(text_col, analyzer).alias("toks")
     )
-    members = F.array(*[F.lit(t) for t in terms])
-
-    def _member(x):
-        return F.array_contains(members, x)
-
     stats = base.select(
         "doc_id",
         F.size("toks").alias("dl"),
-        F.size(F.filter("toks", _member)).alias("tf"),
+        F.size(F.filter("toks", _in(terms))).alias("tf"),
     )
     return pseudo_term_topk(stats, k, k1, b)
 
@@ -428,30 +361,25 @@ def span_or_positional(index, terms: list[str], k: int = 10) -> DataFrame:
     terms = sorted({_validate_term(t, analyzer) for t in terms})
     if len(terms) < 2:
         raise ValueError("span_or needs >= 2 distinct span_term clauses")
-    info = index.lookup_terms(terms)
-    if not info:
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    meta = index.meta
-    present = sorted(info)
-    pos = index.blocks([tid for tid, _, _ in info.values()], "positions")
     legs = [
-        pos.filter(F.col("term_id") == info[t][0]).select(
-            "doc_id",
-            F.col("dl").alias(f"dl{i}"),
-            F.size("positions").alias(f"c{i}"),
+        leg.select(
+            "doc_id", F.col("dl").alias(f"dl{i}"), F.size("p").alias(f"c{i}")
         )
-        for i, t in enumerate(present)
+        for i, leg in enumerate(_position_legs(index, [[t] for t in terms]))
+        if leg is not None
     ]
+    if not legs:
+        return _empty(index)
     joined = legs[0]
     for leg in legs[1:]:
         joined = joined.join(leg, "doc_id", "full")
-    dl = F.coalesce(*[F.col(f"dl{i}") for i in range(len(present))])
+    n = len(legs)
+    dl = F.coalesce(*[F.col(f"dl{i}") for i in range(n)])
     tf = sum(
-        (F.coalesce(F.col(f"c{i}"), F.lit(0)) for i in range(len(present))),
-        F.lit(0),
+        (F.coalesce(F.col(f"c{i}"), F.lit(0)) for i in range(n)), F.lit(0)
     )
     tf_frame = joined.select("doc_id", dl.alias("dl"), tf.alias("tf"))
-    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, index.meta), k)
 
 
 def span_not_topk(
@@ -557,34 +485,26 @@ def span_not_positional(
     exclude = _validate_term(exclude, analyzer)
     if pre < 0 or post < 0:
         raise ValueError("span_not pre/post must be >= 0")
-    info = index.lookup_terms(sorted({include, exclude}))
-    if include not in info:
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    meta = index.meta
-    pos = index.blocks([tid for tid, _, _ in info.values()], "positions")
-    inc = pos.filter(F.col("term_id") == info[include][0]).select(
-        "doc_id", "dl", F.col("positions").alias("pi")
-    )
-    if exclude in info:
-        exc = pos.filter(F.col("term_id") == info[exclude][0]).select(
-            "doc_id", F.col("positions").alias("pe")
-        )
-        joined = inc.join(exc, "doc_id", "left").withColumn(
+    inc, exc = _position_legs(index, [[include], [exclude]])
+    if inc is None:
+        return _empty(index)
+    inc = inc.select("doc_id", "dl", F.col("p").alias("pi"))
+    if exc is not None:
+        joined = inc.join(
+            exc.select("doc_id", F.col("p").alias("pe")), "doc_id", "left"
+        ).withColumn(
             "pe", F.coalesce(F.col("pe"), F.array().cast("array<int>"))
         )
     else:  # OOV exclude: nothing is ever excluded
         joined = inc.withColumn("pe", F.array().cast("array<int>"))
 
     def _ok(p):
-        def near(q):
-            return (q >= p - F.lit(pre)) & (q <= p + F.lit(post))
-
-        return F.size(F.filter("pe", near)) == 0
+        return _count_within(F.col("pe"), p - F.lit(pre), p + F.lit(post)) == 0
 
     tf_frame = joined.select(
         "doc_id", "dl", F.size(F.filter("pi", _ok)).alias("tf")
     )
-    return topk_cut(indexed_pseudo_term_scores(tf_frame, meta), k)
+    return topk_cut(indexed_pseudo_term_scores(tf_frame, index.meta), k)
 
 
 # ---------------------------------------------------------------------------
@@ -607,46 +527,9 @@ def span_not_positional(
 # containment test is pure position membership, like Lucene's.
 # ---------------------------------------------------------------------------
 
-def _near_anchor_cond(toks: Column, terms: list[str], slop: int,
-                      in_order: bool):
-    """Per-anchor validity predicate of the pinned span_near rules —
-    the factored anchor test of :func:`span_near_tf_col` (unordered)
-    and the sloppy-phrase greedy fold (ordered)."""
-    m = len(terms)
-    if in_order:
-        rest = F.array(*[F.lit(t) for t in terms[1:]])
-        t0 = F.lit(terms[0])
-        win = m - 1 + slop
-
-        def _ok(i):
-            matched = F.aggregate(
-                F.slice(toks, i + 1, win),
-                F.lit(0),
-                lambda acc, x: F.when(
-                    (acc < m - 1) & (x == F.element_at(rest, acc + 1)),
-                    acc + 1,
-                ).otherwise(acc),
-            )
-            return (F.element_at(toks, i) == t0) & (matched == m - 1)
-
-        return _ok
-    w = m + slop
-    mult = sorted(Counter(terms).items())
-    members = F.array(*[F.lit(t) for t in sorted(set(terms))])
-
-    def _ok(i):
-        win_sl = F.slice(toks, i, w)
-        cond = F.array_contains(members, F.element_at(toks, i))
-        for u, c in mult:
-            cond = cond & (F.size(F.filter(win_sl, _eq(u))) >= c)
-        return cond
-
-    return _ok
-
-
 def _near_anchor_cond_sql(toks_expr: str, terms: list[str], slop: int,
                           in_order: bool) -> str:
-    """DuckDB twin of :func:`_near_anchor_cond` — a boolean expression
+    """DuckDB twin of the span_near anchor rule — a boolean expression
     over the anchor index ``i`` (the factored condition inside
     :func:`_span_tf_sql` / :func:`_phrase_tf_sql`)."""
     m = len(terms)
@@ -700,11 +583,13 @@ def span_containing_topk(
         tokens_col(text_col, analyzer).alias("toks"),
     )
     toks = F.col("toks")
-    big_ok = _near_anchor_cond(toks, big_terms, slop, in_order)
+    big_ok = _anchor_rule(
+        toks, [[t] for t in big_terms], slop, ordered=in_order
+    )
 
     def _ok(i):
         has_little = (
-            F.size(F.filter(F.slice(toks, i, w), _eq(little))) >= 1
+            F.size(F.filter(F.slice(toks, i, w), _in([little]))) >= 1
         )
         return big_ok(i) & has_little
 
@@ -774,7 +659,9 @@ def span_within_topk(
         tokens_col(text_col, analyzer).alias("toks"),
     )
     toks = F.col("toks")
-    big_ok = _near_anchor_cond(toks, big_terms, slop, in_order)
+    big_ok = _anchor_rule(
+        toks, [[t] for t in big_terms], slop, ordered=in_order
+    )
 
     def _covered(q):
         lo = F.greatest(F.lit(1), q - span_end)
@@ -957,7 +844,7 @@ def span_multi_near_search(
         t for t in expand_wildcard(index, pattern, max_expansions) if t != term
     ]
     if not exp:
-        return index.spark.createDataFrame([], "doc_id long, score double")
+        return _empty(index)
     return intervals_positional(
         index, [exp, [term]], k, max_gaps=slop, ordered=False
     )

@@ -17,11 +17,19 @@ The exact vector cosine is written once too, in ``ops/similarity.py``
 (``cosine`` over ``_dot``/``_norm``): no other module may divide by a
 product of two norms, and no other module may build a product with
 ``F.zip_with`` (the first half of a hand-written dot product).
+
+The proximity rules exist once per executor: over token arrays the
+anchored window is one ``F.aggregate`` fold (``query/phrase.py``), over
+position arrays the exact rule is one ``F.array_intersect`` and the
+ordered chain one ``F.array_min`` (``index/positions.py``), and one
+``.blocks(..., "positions")`` call reads the sidecar for every
+phrase, span and intervals query.
 """
 
 import ast
 import pathlib
 import re
+from collections import Counter
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "sparksearch"
 HOMES = {"query/bm25.py", "query/wand.py"}
@@ -31,6 +39,13 @@ TFN = re.compile(r"\* \(1(\.0)? - b \+ b \*")
 SQL_COMPILER = {"compile_query_string", "_emit"}
 SQL_COMPILER_CALLERS = SQL_COMPILER | {"query_string_sql"}
 VECTOR_HOME = "ops/similarity.py"
+PROXIMITY_DIRS = ("query", "index")
+PROXIMITY_KERNELS = {
+    "F.aggregate": "query/phrase.py",
+    "F.array_intersect": "index/positions.py",
+    "F.array_min": "index/positions.py",
+    'blocks("positions")': "index/positions.py",
+}
 NORMS = {"_norm", "_vnorm"}
 
 
@@ -135,6 +150,25 @@ def _zip_products(src: str) -> list[str]:
     ]
 
 
+def _proximity_sites(src: str) -> list[str]:
+    """``F.aggregate``/``F.array_intersect``/``F.array_min`` calls and
+    ``.blocks(...)`` calls that read the ``positions`` table."""
+    found = []
+    for node in ast.walk(ast.parse(src)):
+        if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Attribute):
+            continue
+        f = node.func
+        if isinstance(f.value, ast.Name) and f.value.id == "F" and (
+            f"F.{f.attr}" in PROXIMITY_KERNELS
+        ):
+            found.append(f"F.{f.attr}")
+        elif f.attr == "blocks" and any(
+            _strings(a) == "positions" for a in node.args
+        ):
+            found.append('blocks("positions")')
+    return found
+
+
 def test_shapes_are_recognised():
     assert _copies('idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)'
                    ' / (F.col("df") + 0.5))')
@@ -163,6 +197,12 @@ def test_shapes_are_recognised():
         "d = F.zip_with(a, b, lambda x, y: x.cast('double') * y.cast('double'))")
     assert not _zip_products(
         "p = F.zip_with(h, pos, lambda h, p: F.struct(h.alias('h'), p))")
+    assert _proximity_sites(
+        "a = F.aggregate(w, F.lit(0), f)\nb = F.array_min(F.filter(p, g))\n"
+        "c = F.array_intersect(x, y)\nd = index.blocks(ids, 'positions')\n"
+        "e = index.blocks(ids, 'stats')\nf = np.array_min(x)\n"
+    ) == ["F.aggregate", "F.array_min", "F.array_intersect",
+          'blocks("positions")']
 
 
 def _offenders(check) -> dict[str, list[str]]:
@@ -195,3 +235,12 @@ def test_vector_cosine_lives_in_one_module():
     }
     zips = _offenders(_zip_products)
     assert list(zips) == [VECTOR_HOME] and len(zips[VECTOR_HOME]) == 1
+
+
+def test_one_proximity_kernel_per_executor():
+    sites = {}
+    for d in PROXIMITY_DIRS:
+        for p in sorted((PKG / d).rglob("*.py")):
+            for site in _proximity_sites(p.read_text(encoding="utf-8")):
+                sites.setdefault(site, Counter())[p.relative_to(PKG).as_posix()] += 1
+    assert sites == {k: Counter({home: 1}) for k, home in PROXIMITY_KERNELS.items()}

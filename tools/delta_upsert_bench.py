@@ -9,7 +9,7 @@ generation and leaves base postings/tfrows bytes untouched — O(delta)
 writes plus one column-pruned tfrows read for the df/cf decrement of
 replaced docs.
 
-Protocol (same honesty rules as tools/calm_windows.py):
+Protocol:
   * one pristine base index built once; every rep copies it fresh so
     both modes always start from identical bytes;
   * modes alternate A/B inside each rep, starting order swapped per

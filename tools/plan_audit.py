@@ -94,6 +94,8 @@ def main() -> None:
         build_positions,
         match_phrase_positional,
     )
+    from sparksearch.query.intervals import intervals_positional
+    from sparksearch.query.spans import span_near_positional
 
     build_positions(spark, docs.select("doc_id", "text"), index_dir)
 
@@ -177,6 +179,28 @@ def main() -> None:
             "`array_intersect` of shifted position arrays — document "
             "text is never read (no corpus scan in the plan).",
             audit(match_phrase_positional(dist, "table hash", 10)),
+        ),
+        (
+            "span_near unordered (positional sidecar)",
+            "The same positions front: one leg per distinct clause term from "
+            "one bucket-pruned read, inner-joined on doc_id; the position "
+            "kernel's unordered rule counts anchors (union of the legs) "
+            "whose window holds every clause; df is a scalar subquery of "
+            "the same plan.",
+            audit(span_near_positional(dist, ["table", "hash"], 10, slop=2)),
+        ),
+        (
+            "intervals with multi-term slots (positional sidecar)",
+            "A multi-term slot's leg flattens its terms' position lists per "
+            "doc (one groupBy); single-term slots select their rows; the "
+            "position kernel's greedy `array_min` chain runs on the joined "
+            "legs.  Document text is never read.",
+            audit(
+                intervals_positional(
+                    dist, [["table", "data"], ["hash", "batch"]], 10,
+                    max_gaps=1,
+                )
+            ),
         ),
         (
             "bool compound query (engine path)",
