@@ -12,8 +12,10 @@ pinned here (mirrored by the DuckDB twins):
   Expressed as ``arrays_overlap`` so Catalyst keeps it inside
   whole-stage codegen; the indexed path derives the same set from the
   packed postings (same analyzer ⇒ identical set, pytest-pinned).
-* **terms agg** — bucket per distinct field value, ``doc_count`` desc,
-  key asc (OpenSearch tie order), top ``size`` buckets (default 10).
+* **terms agg** — bucket per distinct non-null field value (a doc
+  missing the field is in no bucket, OpenSearch's ``terms`` rule),
+  ``doc_count`` desc, key asc (OpenSearch tie order), top ``size``
+  buckets (default 10).
 * **stats agg** — one row: count / min / max / avg / sum (avg rounded
   4 dp — the engine's cross-engine float contract).
 * **range agg** — one bucket per requested range, ``from`` inclusive,
@@ -21,6 +23,20 @@ pinned here (mirrored by the DuckDB twins):
   buckets kept with doc_count 0, bucket order = request order
   (``bucket_idx``); key rendered ``"<from>-<to>"`` with ``*`` for an
   open end.
+
+One aggregation layer: every Spark agg here, in ``geo.py``,
+``joinq.py``, ``pipeaggs.py`` and ``sigterms.py`` is a match set
+(:func:`match_set`, or :func:`indexed_match_ids` for the indexed form),
+a key or a condition list, and a metric set, run through the steps
+below, each written once: the keyed buckets (:func:`_buckets`) and
+their cut (:func:`_top_buckets`), the one-row aggregate stacked into
+bucket rows (:func:`_stacked`, :func:`_count_buckets` over the
+conditional count :func:`_count_where`), the stats metric set
+(:func:`_stats`), the exact percentile (:func:`_percentile`), the
+gap-filled grid (:func:`_gap_filled`), the event context
+(:func:`_events`) and the pinned BM25 sample (:func:`_sample_stats`).
+The DuckDB ``*_sql`` twins share none of it: an expression shared by
+an engine and its oracle would hide the engine's bugs.
 
 Scale: the match set never leaves the JVM — each agg is one
 filter → groupBy/aggregate with map-side partial aggregation; the
@@ -32,7 +48,7 @@ first, so the corpus is touched only for the matched doc ids.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
@@ -73,6 +89,162 @@ def _match_where_sql(query_text: str, analyzer: str, text_col: str = "text") -> 
     )
 
 
+# -- the aggregation layer (Spark side; see the module docstring) -----------
+def _buckets(rows: DataFrame, *keys: Column, metrics=()) -> DataFrame:
+    """One bucket per distinct key tuple → (keys..., doc_count,
+    metrics...).  A row with a null key is in no bucket (OpenSearch
+    skips documents missing the field); the filter is on the grouping
+    keys, so Catalyst pushes it below the groupBy."""
+    out = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("doc_count"), *metrics)
+    for k in out.columns[: len(keys)]:
+        out = out.filter(F.col(k).isNotNull())
+    return out
+
+
+def _top_buckets(rows: DataFrame, key: Column, size: int, *metrics) -> DataFrame:
+    """The bucket cut: ``key`` buckets (:func:`_buckets`) in OpenSearch
+    order, doc_count desc then key asc, top ``size``."""
+    return (
+        _buckets(rows, key, metrics=metrics)
+        .orderBy(F.desc("doc_count"), F.asc("key"))
+        .limit(size)
+    )
+
+
+def _stats(c: Column, rnd: int = AVG_ROUND) -> list[Column]:
+    """The stats metric set: count of values / min / max / avg (rounded
+    ``rnd`` dp) / sum; min, max and sum as doubles."""
+    return [
+        F.count(c).alias("count"),
+        F.min(c).cast("double").alias("min"),
+        F.max(c).cast("double").alias("max"),
+        F.round(F.avg(c), rnd).alias("avg"),
+        F.sum(c).cast("double").alias("sum"),
+    ]
+
+
+def _percentile(x: str, q: float) -> Column:
+    """EXACT linear-interpolation percentile ``q`` ∈ [0, 1] of the SQL
+    expression ``x`` (Spark ``percentile`` ≡ DuckDB ``quantile_cont``)."""
+    return F.expr(f"percentile({x}, {q!r})")
+
+
+def _sql_lit(v) -> str:
+    if isinstance(v, float):
+        return f"CAST({v!r} AS DOUBLE)"
+    if isinstance(v, str):
+        return "'" + v.replace("'", "''") + "'"
+    return str(int(v))
+
+
+def _stacked(rows: DataFrame, names: tuple, cells: list) -> DataFrame:
+    """One aggregate row over ``rows`` → one output row per cell, in
+    request order.  ``cells`` are (labels, metric) pairs; ``names``
+    names the label columns, then the metric column.  The match set is
+    read once however many cells there are."""
+    one = rows.agg(*[m.alias(f"_c{i}") for i, (_, m) in enumerate(cells)])
+    body = ", ".join(
+        ", ".join(map(_sql_lit, labels)) + f", _c{i}"
+        for i, (labels, _) in enumerate(cells)
+    )
+    return one.selectExpr(f"stack({len(cells)}, {body}) AS ({', '.join(names)})")
+
+
+def _percentile_rows(rows: DataFrame, x: str, percents, rnd: int) -> DataFrame:
+    """(percent, value) rows in request order: :func:`_percentile` of
+    the SQL expression ``x`` at each percent, rounded ``rnd`` dp."""
+    if not percents:
+        raise ValueError("percents must be non-empty")
+    return _stacked(rows, ("percent", "value"), [
+        ((float(p),), F.round(_percentile(x, p / 100.0), rnd)) for p in percents
+    ])
+
+
+def _count_where(cond: Column) -> Column:
+    """The conditional count: rows where ``cond`` holds (NULL over no
+    rows, like SQL ``sum``)."""
+    return F.sum(F.when(cond, 1).otherwise(0))
+
+
+def _count_buckets(rows: DataFrame, names: tuple, buckets: list) -> DataFrame:
+    """(labels, condition) buckets counted in one pass (:func:`_stacked`);
+    an empty match set counts 0 in every bucket."""
+    return _stacked(
+        rows, names,
+        [(labels, F.coalesce(_count_where(c), F.lit(0))) for labels, c in buckets],
+    )
+
+
+def _in_range(v: Column, lo, hi) -> Column:
+    """``lo`` inclusive, ``hi`` exclusive, None an open end; a null
+    value is in no range."""
+    cond = v.isNotNull()
+    if lo is not None:
+        cond = cond & (v >= lo)
+    if hi is not None:
+        cond = cond & (v < hi)
+    return cond
+
+
+_RANGE_COLS = ("bucket_idx", "key", "doc_count")
+
+
+def _gap_filled(counts: DataFrame, span: DataFrame, step: Column, *carry: str):
+    """(key, doc_count) buckets with the empty ones filled in: every
+    ``step`` from ``span``'s ``lo`` to ``hi`` is a key (``span`` is one
+    row, NULL bounds when nothing matched), doc_count 0 where ``counts``
+    has none; ``carry`` columns of ``span`` ride along; key asc.  The
+    grid is a ``sequence`` over the single span row — bucket-sized,
+    never corpus-sized."""
+    grid = span.select(
+        F.explode(F.sequence(F.col("lo"), F.col("hi"), step)).alias("key"), *carry
+    )
+    return (
+        grid.join(counts, "key", "left")
+        .select(
+            "key", *carry,
+            F.coalesce(F.col("doc_count"), F.lit(0)).cast("long").alias("doc_count"),
+        )
+        .orderBy("key")
+    )
+
+
+def _histogram(keys: DataFrame, step, min_doc_count: int) -> DataFrame:
+    """(key) rows → (key, doc_count), key asc: gap-filled every ``step``
+    at ``min_doc_count`` 0, else the buckets holding at least that many."""
+    counts = _buckets(keys, F.col("key"))
+    if min_doc_count >= 1:
+        return counts.filter(F.col("doc_count") >= min_doc_count).orderBy("key")
+    span = keys.agg(F.min("key").alias("lo"), F.max("key").alias("hi"))
+    return _gap_filled(counts, span, step)
+
+
+def _events(events: DataFrame, ts_col: str, event_type: str | None) -> DataFrame:
+    """The event query context: rows with a timestamp, of
+    ``event_type`` when one is given (a filtered `_search` with aggs)."""
+    m = events.filter(F.col(ts_col).isNotNull())
+    if event_type is not None:
+        m = m.filter(F.col("event_type") == event_type)
+    return m
+
+
+def _sample_stats(docs: DataFrame, scored: DataFrame, field: str, shard_size: int):
+    """:func:`_stats` of ``field`` over the pinned sample: the GLOBAL top
+    ``shard_size`` of ``scored`` (rounded BM25 desc, doc_id asc — the
+    engine's tie rule), one TakeOrderedAndProject broadcast-semi-joined
+    back to ``docs``."""
+    from sparksearch.query.bm25 import SCORE_ROUND
+
+    sample = (
+        scored.orderBy(F.desc(F.round("raw", SCORE_ROUND)), F.asc("doc_id"))
+        .limit(shard_size)
+        .select("doc_id")
+    )
+    return docs.join(F.broadcast(sample), "doc_id", "leftsemi").agg(
+        *_stats(F.col(field))
+    )
+
+
 def terms_agg(
     docs: DataFrame,
     query_text: str,
@@ -84,12 +256,7 @@ def terms_agg(
 ) -> DataFrame:
     """Terms facet → (key string, doc_count long), OpenSearch bucket order."""
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
-    return (
-        m.groupBy(F.col(field).cast("string").alias("key"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .orderBy(F.desc("doc_count"), F.asc("key"))
-        .limit(size)
-    )
+    return _top_buckets(m, F.col(field).cast("string").alias("key"), size)
 
 
 def terms_agg_sql(
@@ -102,7 +269,8 @@ def terms_agg_sql(
 ) -> str:
     return f"""
 SELECT CAST({field} AS VARCHAR) AS key, count(*) AS doc_count
-FROM {table} WHERE {_match_where_sql(query_text, analyzer)}
+FROM {table}
+WHERE {_match_where_sql(query_text, analyzer)} AND {field} IS NOT NULL
 GROUP BY 1 ORDER BY doc_count DESC, key ASC LIMIT {size}
 """.strip()
 
@@ -117,14 +285,7 @@ def stats_agg(
 ) -> DataFrame:
     """Stats facet → one row (count, min, max, avg, sum) over ``field``."""
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
-    c = F.col(field)
-    return m.agg(
-        F.count(c).alias("count"),
-        F.min(c).cast("double").alias("min"),
-        F.max(c).cast("double").alias("max"),
-        F.round(F.avg(c), AVG_ROUND).alias("avg"),
-        F.sum(c).cast("double").alias("sum"),
-    )
+    return m.agg(*_stats(F.col(field)))
 
 
 def stats_agg_sql(
@@ -172,32 +333,10 @@ def range_agg(
     if not ranges:
         raise ValueError("ranges must be non-empty")
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
-    c = F.col(field)
-    conds = []
-    for lo, hi in ranges:
-        cond = c.isNotNull()
-        if lo is not None:
-            cond = cond & (c >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (c < F.lit(hi))
-        conds.append(cond)
-    one = m.agg(
-        *[
-            F.sum(F.when(cond, 1).otherwise(0)).alias(f"_b{i}")
-            for i, cond in enumerate(conds)
-        ]
-    )
-    stack = ", ".join(
-        f"{i}, '{_range_key(lo, hi)}', _b{i}"
+    return _count_buckets(m, _RANGE_COLS, [
+        ((i, _range_key(lo, hi)), _in_range(F.col(field), lo, hi))
         for i, (lo, hi) in enumerate(ranges)
-    )
-    return one.selectExpr(
-        f"stack({len(ranges)}, {stack}) AS (bucket_idx, key, doc_count)"
-    ).select(
-        F.col("bucket_idx").cast("int"),
-        "key",
-        F.coalesce(F.col("doc_count"), F.lit(0)).cast("long").alias("doc_count"),
-    )
+    ])
 
 
 def range_agg_sql(
@@ -247,19 +386,9 @@ def terms_stats_agg(
     as the flat one.
     """
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
-    c = F.col(metric_field)
-    return (
-        m.groupBy(F.col(bucket_field).cast("string").alias("key"))
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.min(c).cast("double").alias("min"),
-            F.max(c).cast("double").alias("max"),
-            F.round(F.avg(c), AVG_ROUND).alias("avg"),
-            F.sum(c).cast("double").alias("sum"),
-        )
-        .orderBy(F.desc("doc_count"), F.asc("key"))
-        .limit(size)
-    )
+    key = F.col(bucket_field).cast("string").alias("key")
+    # the bucket's doc_count stands in for the stats value count
+    return _top_buckets(m, key, size, *_stats(F.col(metric_field))[1:])
 
 
 def terms_stats_agg_sql(
@@ -277,7 +406,8 @@ SELECT CAST({bucket_field} AS VARCHAR) AS key, count(*) AS doc_count,
        CAST(max({metric_field}) AS DOUBLE) AS max,
        round(avg({metric_field}), {AVG_ROUND}) AS avg,
        CAST(sum({metric_field}) AS DOUBLE) AS sum
-FROM {table} WHERE {_match_where_sql(query_text, analyzer)}
+FROM {table}
+WHERE {_match_where_sql(query_text, analyzer)} AND {bucket_field} IS NOT NULL
 GROUP BY 1 ORDER BY doc_count DESC, key ASC LIMIT {size}
 """.strip()
 
@@ -306,23 +436,8 @@ def percentiles_agg(
     100 TB swap in ``percentile_approx`` when a bounded-error sketch is
     acceptable (same API shape, no oracle).
     """
-    if not percents:
-        raise ValueError("percents must be non-empty")
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
-    one = m.agg(
-        *[
-            F.round(
-                F.expr(f"percentile({field}, {p / 100.0!r})"), AVG_ROUND
-            ).alias(f"_p{i}")
-            for i, p in enumerate(percents)
-        ]
-    )
-    stack = ", ".join(
-        f"CAST({p!r} AS DOUBLE), _p{i}" for i, p in enumerate(percents)
-    )
-    return one.selectExpr(
-        f"stack({len(percents)}, {stack}) AS (percent, value)"
-    )
+    return _percentile_rows(m, field, percents, AVG_ROUND)
 
 
 def percentiles_agg_sql(
@@ -370,12 +485,7 @@ def terms_agg_indexed(
     """
     ids = indexed_match_ids(index, query_text)
     m = docs.join(ids, docs[id_col] == ids["doc_id"], "leftsemi")
-    return (
-        m.groupBy(F.col(field).cast("string").alias("key"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .orderBy(F.desc("doc_count"), F.asc("key"))
-        .limit(size)
-    )
+    return _top_buckets(m, F.col(field).cast("string").alias("key"), size)
 
 
 def cardinality_agg(
@@ -433,11 +543,7 @@ def extended_stats_agg(
     c = F.col(field)
     sd = F.stddev_pop(c)
     return m.agg(
-        F.count(c).alias("count"),
-        F.min(c).cast("double").alias("min"),
-        F.max(c).cast("double").alias("max"),
-        F.round(F.avg(c), AVG_ROUND).alias("avg"),
-        F.sum(c).cast("double").alias("sum"),
+        *_stats(c),
         F.sum(c * c).cast("double").alias("sum_of_squares"),
         F.round(F.var_pop(c), AVG_ROUND).alias("variance"),
         F.round(sd, AVG_ROUND).alias("std_deviation"),
@@ -498,26 +604,7 @@ def histogram_agg(
     keys = m.filter(F.col(field).isNotNull()).select(
         (F.floor(F.col(field) / interval) * interval).cast("long").alias("key")
     )
-    counts = keys.groupBy("key").agg(F.count(F.lit(1)).alias("doc_count"))
-    if min_doc_count >= 1:
-        return counts.filter(F.col("doc_count") >= min_doc_count).orderBy("key")
-    grid = (
-        keys.agg(F.min("key").alias("mn"), F.max("key").alias("mx"))
-        .filter(F.col("mn").isNotNull())
-        .select(
-            F.explode(
-                F.sequence(F.col("mn"), F.col("mx"), F.lit(int(interval)))
-            ).alias("key")
-        )
-    )
-    return (
-        grid.join(counts, "key", "left")
-        .select(
-            "key",
-            F.coalesce(F.col("doc_count"), F.lit(0)).cast("long").alias("doc_count"),
-        )
-        .orderBy("key")
-    )
+    return _histogram(keys, F.lit(int(interval)), min_doc_count)
 
 
 def histogram_agg_sql(
@@ -553,6 +640,9 @@ FROM grid LEFT JOIN counts USING (key) ORDER BY key
 
 
 _DATE_UNITS = ("hour", "day", "week", "month", "year", "minute")
+# fixed-width units only: month/year buckets are calendar-irregular
+_DATE_STEPS = {"minute": "1 minute", "hour": "1 hour", "day": "1 day",
+               "week": "7 days"}
 
 
 def date_histogram_agg(
@@ -579,34 +669,12 @@ def date_histogram_agg(
     """
     if unit not in _DATE_UNITS:
         raise ValueError(f"unit must be one of {_DATE_UNITS}")
-    m = events.filter(F.col(ts_col).isNotNull())
-    if event_type is not None:
-        m = m.filter(F.col("event_type") == event_type)
-    keys = m.select(F.date_trunc(unit, F.col(ts_col)).alias("key"))
-    counts = keys.groupBy("key").agg(F.count(F.lit(1)).alias("doc_count"))
-    if min_doc_count >= 1 or unit in ("month", "year"):
-        return counts.filter(
-            F.col("doc_count") >= max(1, min_doc_count)
-        ).orderBy("key")
-    step = {"minute": "1 minute", "hour": "1 hour", "day": "1 day",
-            "week": "7 days"}[unit]
-    grid = (
-        keys.agg(F.min("key").alias("mn"), F.max("key").alias("mx"))
-        .filter(F.col("mn").isNotNull())
-        .select(
-            F.explode(
-                F.expr(f"sequence(mn, mx, interval {step})")
-            ).alias("key")
-        )
+    keys = _events(events, ts_col, event_type).select(
+        F.date_trunc(unit, F.col(ts_col)).alias("key")
     )
-    return (
-        grid.join(counts, "key", "left")
-        .select(
-            "key",
-            F.coalesce(F.col("doc_count"), F.lit(0)).cast("long").alias("doc_count"),
-        )
-        .orderBy("key")
-    )
+    if unit not in _DATE_STEPS:
+        return _histogram(keys, None, max(1, min_doc_count))
+    return _histogram(keys, F.expr(f"interval {_DATE_STEPS[unit]}"), min_doc_count)
 
 
 def date_histogram_agg_sql(
@@ -684,12 +752,7 @@ def top_hits_agg(
     sk = scored.join(flds, "doc_id").select(
         "key", "doc_id", F.round("raw", SCORE_ROUND).alias("score")
     )
-    buckets = (
-        sk.groupBy("key")
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .orderBy(F.desc("doc_count"), F.asc("key"))
-        .limit(size)
-    )
+    buckets = _top_buckets(sk, F.col("key"), size)
     w = Window.partitionBy("key").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = sk.select(
         "key", "doc_id", "score", F.row_number().over(w).alias("hit_rank")
@@ -732,6 +795,7 @@ sk AS (
   SELECT CAST(t.{bucket_field} AS VARCHAR) AS key, scored.doc_id,
          round(scored.raw, {SCORE_ROUND}) AS score
   FROM scored JOIN {table} t ON t.{id_col} = scored.doc_id
+  WHERE t.{bucket_field} IS NOT NULL
 ),
 buckets AS (
   SELECT key, count(*)::BIGINT AS doc_count FROM sk GROUP BY key
@@ -778,10 +842,7 @@ def composite_agg(
     if after is not None and len(after) != len(sources):
         raise ValueError("after cursor arity != sources arity")
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
-    cols = [F.col(s).cast("string").alias(s) for s in sources]
-    grouped = m.groupBy(*cols).agg(F.count(F.lit(1)).alias("doc_count"))
-    for s in sources:
-        grouped = grouped.filter(F.col(s).isNotNull())
+    grouped = _buckets(m, *[F.col(s).cast("string").alias(s) for s in sources])
     if after is not None:
         cond = F.lit(False)
         eq = F.lit(True)
@@ -846,25 +907,23 @@ def filters_agg(
     """
     if not named_queries:
         raise ValueError("named_queries must be non-empty")
-    names = sorted(named_queries)
-    base = docs.filter(F.col(text_col).isNotNull())
-    sums = []
-    for i, name in enumerate(names):
+    conds = _named_conds(named_queries, text_col, analyzer)
+    return _count_buckets(
+        docs.filter(F.col(text_col).isNotNull()), ("name", "doc_count"),
+        [((name,), c) for name, c in conds.items()],
+    )
+
+
+def _named_conds(named_queries: dict[str, str], text_col: str, analyzer: str):
+    """name → match condition, names sorted (a query with no terms
+    matches nothing)."""
+    conds = {}
+    for name in sorted(named_queries):
         terms = sorted(set(tokenize_str(named_queries[name], analyzer)))
-        cond = (
+        conds[name] = (
             _match_filter(text_col, terms, analyzer) if terms else F.lit(False)
         )
-        sums.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"_b{i}"))
-    one = base.agg(*sums)
-    stack = ", ".join(
-        "'" + n.replace("'", "''") + f"', _b{i}" for i, n in enumerate(names)
-    )
-    return one.selectExpr(
-        f"stack({len(names)}, {stack}) AS (name, doc_count)"
-    ).select(
-        "name",
-        F.coalesce(F.col("doc_count"), F.lit(0)).cast("long").alias("doc_count"),
-    )
+    return conds
 
 
 def filters_agg_sql(
@@ -912,12 +971,7 @@ def multi_terms_agg(
     for f in fields:
         m = m.filter(F.col(f).isNotNull())
     key = F.concat_ws("|", *[F.col(f).cast("string") for f in fields])
-    return (
-        m.groupBy(key.alias("key"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .orderBy(F.desc("doc_count"), F.asc("key"))
-        .limit(size)
-    )
+    return _top_buckets(m, key.alias("key"), size)
 
 
 def multi_terms_agg_sql(
@@ -961,9 +1015,7 @@ def rare_terms_agg(
     the field's near-distinct tail; callers page it."""
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
     return (
-        m.filter(F.col(field).isNotNull())
-        .groupBy(F.col(field).cast("string").alias("key"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
+        _buckets(m, F.col(field).cast("string").alias("key"))
         .filter(F.col("doc_count") <= int(max_doc_count))
         .orderBy(F.asc("doc_count"), F.asc("key"))
     )
@@ -1104,14 +1156,9 @@ def mad_agg(
     cross-engine).  Two bounded single-column aggregates — the inner
     median broadcast into the deviation pass."""
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
-    med = m.agg(F.expr(f"percentile({field}, 0.5)").alias("_med"))
-    return (
-        m.crossJoin(F.broadcast(med))
-        .agg(
-            F.round(
-                F.expr(f"percentile(abs({field} - _med), 0.5)"), AVG_ROUND
-            ).alias("value")
-        )
+    med = m.agg(_percentile(field, 0.5).alias("_med"))
+    return m.crossJoin(F.broadcast(med)).agg(
+        F.round(_percentile(f"abs({field} - _med)", 0.5), AVG_ROUND).alias("value")
     )
 
 
@@ -1148,31 +1195,17 @@ def adjacency_matrix_agg(
     a single aggregate — n + n(n−1)/2 counters, never a self-join."""
     if len(named_queries) < 2:
         raise ValueError("adjacency_matrix needs >= 2 named filters")
-    names = sorted(named_queries)
-    base = docs.filter(F.col(text_col).isNotNull())
-    conds = {}
-    for name in names:
-        terms = sorted(set(tokenize_str(named_queries[name], analyzer)))
-        conds[name] = (
-            _match_filter(text_col, terms, analyzer) if terms else F.lit(False)
-        )
-    keys, sums = [], []
+    conds = _named_conds(named_queries, text_col, analyzer)
+    names = list(conds)
+    buckets = []
     for i, a in enumerate(names):
-        keys.append(a)
-        sums.append(F.sum(F.when(conds[a], 1).otherwise(0)).alias(f"_b{len(sums)}"))
+        buckets.append(((a,), conds[a]))
         for b_ in names[i + 1:]:
-            keys.append(f"{a}{separator}{b_}")
-            sums.append(
-                F.sum(F.when(conds[a] & conds[b_], 1).otherwise(0))
-                .alias(f"_b{len(sums)}")
-            )
-    one = base.agg(*sums)
-    stack = ", ".join(
-        "'" + k.replace("'", "''") + f"', _b{i}" for i, k in enumerate(keys)
-    )
+            buckets.append(((f"{a}{separator}{b_}",), conds[a] & conds[b_]))
     return (
-        one.selectExpr(f"stack({len(keys)}, {stack}) AS (key, doc_count)")
-        .select("key", F.coalesce("doc_count", F.lit(0)).cast("long").alias("doc_count"))
+        _count_buckets(
+            docs.filter(F.col(text_col).isNotNull()), ("key", "doc_count"), buckets
+        )
         .filter(F.col("doc_count") > 0)
         .orderBy("key")
     )
@@ -1234,28 +1267,11 @@ def sampler_stats_agg(
     shape: the full scored match set already exists (`bm25_scores_df`,
     every scoring operator's shared front) → one TakeOrderedAndProject
     → a sample-sized join back for the child field."""
-    from sparksearch.query.bm25 import SCORE_ROUND, bm25_scores_df
+    from sparksearch.query.bm25 import bm25_scores_df
 
     scored = bm25_scores_df(docs, query_text, text_col=text_col,
                             analyzer=analyzer)
-    sample = (
-        scored.orderBy(
-            F.desc(F.round("raw", SCORE_ROUND)), F.asc("doc_id")
-        )
-        .limit(shard_size)
-        .select("doc_id")
-    )
-    c = F.col(field)
-    return (
-        docs.join(F.broadcast(sample), "doc_id", "leftsemi")
-        .agg(
-            F.count(c).alias("count"),
-            F.min(c).cast("double").alias("min"),
-            F.max(c).cast("double").alias("max"),
-            F.round(F.avg(c), AVG_ROUND).alias("avg"),
-            F.sum(c).cast("double").alias("sum"),
-        )
-    )
+    return _sample_stats(docs, scored, field, shard_size)
 
 
 def sampler_stats_agg_sql(
@@ -1350,9 +1366,10 @@ def boxplot_agg(
     return m.filter(c.isNotNull()).agg(
         F.min(c).cast("double").alias("min"),
         F.max(c).cast("double").alias("max"),
-        F.round(F.expr(f"percentile({field}, 0.25)"), AVG_ROUND).alias("q1"),
-        F.round(F.expr(f"percentile({field}, 0.5)"), AVG_ROUND).alias("q2"),
-        F.round(F.expr(f"percentile({field}, 0.75)"), AVG_ROUND).alias("q3"),
+        *[
+            F.round(_percentile(field, q), AVG_ROUND).alias(f"q{i}")
+            for i, q in enumerate((0.25, 0.5, 0.75), 1)
+        ],
     )
 
 
@@ -1457,9 +1474,7 @@ def auto_date_histogram_agg(
     plus a 1-row broadcast."""
     if target_buckets < 1:
         raise ValueError("target_buckets must be >= 1")
-    m = events.filter(F.col(ts_col).isNotNull())
-    if event_type is not None:
-        m = m.filter(F.col("event_type") == event_type)
+    m = _events(events, ts_col, event_type)
     ep = m.select(F.unix_timestamp(F.col(ts_col)).alias("ep"))
     span = ep.agg(F.min("ep").alias("mn"), F.max("ep").alias("mx")).filter(
         F.col("mn").isNotNull()
@@ -1478,34 +1493,16 @@ def auto_date_histogram_agg(
     chosen = span.select(
         F.col("mn"), F.col("mx"), iv_expr.cast("long").alias("iv")
     )
-    counts = (
-        ep.crossJoin(F.broadcast(chosen))
-        .groupBy(
-            (F.floor(F.col("ep") / F.col("iv")) * F.col("iv")).alias("kep"),
-            F.col("iv"),
-        )
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-    )
-    grid = chosen.select(
-        F.explode(
-            F.sequence(
-                F.floor(F.col("mn") / F.col("iv")) * F.col("iv"),
-                F.floor(F.col("mx") / F.col("iv")) * F.col("iv"),
-                F.col("iv"),
-            )
-        ).alias("kep"),
-        F.col("iv"),
-    )
-    return (
-        grid.join(counts, ["kep", "iv"], "left")
-        .select(
-            F.timestamp_seconds(F.col("kep")).alias("key"),
-            F.coalesce(F.col("doc_count"), F.lit(0))
-            .cast("long")
-            .alias("doc_count"),
-            F.col("iv").cast("long").alias("interval_sec"),
-        )
-        .orderBy("key")
+
+    def _key(c: str):
+        return F.floor(F.col(c) / F.col("iv")) * F.col("iv")
+
+    counts = _buckets(ep.crossJoin(F.broadcast(chosen)), _key("ep").alias("key"))
+    bounds = chosen.select(_key("mn").alias("lo"), _key("mx").alias("hi"), "iv")
+    return _gap_filled(counts, bounds, F.col("iv"), "iv").select(
+        F.timestamp_seconds(F.col("key")).alias("key"),
+        "doc_count",
+        F.col("iv").alias("interval_sec"),
     )
 
 
@@ -1583,21 +1580,10 @@ def diversified_sampler_stats_agg(
     w = Window.partitionBy("_dv").orderBy(
         F.desc(F.round("raw", SCORE_ROUND)), F.asc("doc_id")
     )
-    sample = (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_docs_per_value)
-        .orderBy(F.desc(F.round("raw", SCORE_ROUND)), F.asc("doc_id"))
-        .limit(shard_size)
-        .select("doc_id")
+    diverse = keyed.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= max_docs_per_value
     )
-    c = F.col(field)
-    return docs.join(F.broadcast(sample), "doc_id", "leftsemi").agg(
-        F.count(c).alias("count"),
-        F.min(c).cast("double").alias("min"),
-        F.max(c).cast("double").alias("max"),
-        F.round(F.avg(c), AVG_ROUND).alias("avg"),
-        F.sum(c).cast("double").alias("sum"),
-    )
+    return _sample_stats(docs, diverse, field, shard_size)
 
 
 def diversified_sampler_stats_agg_sql(
@@ -1655,23 +1641,14 @@ def percentile_ranks_agg(
     if not values:
         raise ValueError("values must be non-empty")
     m = match_set(docs, query_text, text_col=text_col, analyzer=analyzer)
-    m = m.filter(F.col(field).isNotNull())
     c = F.col(field)
-    one = m.agg(
-        *[
-            F.round(
-                100.0 * F.avg(F.when(c <= F.lit(float(v)), 1.0).otherwise(0.0)),
-                AVG_ROUND,
-            ).alias(f"_r{i}")
-            for i, v in enumerate(values)
-        ]
-    )
-    stack = ", ".join(
-        f"CAST({float(v)!r} AS DOUBLE), _r{i}" for i, v in enumerate(values)
-    )
-    return one.selectExpr(
-        f"stack({len(values)}, {stack}) AS (value, rank)"
-    )
+    return _stacked(m.filter(c.isNotNull()), ("value", "rank"), [
+        ((float(v),), F.round(
+            100.0 * F.avg(F.when(c <= F.lit(float(v)), 1.0).otherwise(0.0)),
+            AVG_ROUND,
+        ))
+        for v in values
+    ])
 
 
 def percentile_ranks_agg_sql(
@@ -1969,36 +1946,14 @@ def date_range_agg(
     per-range jobs."""
     if not ranges:
         raise ValueError("ranges must be non-empty")
-    m = events.filter(F.col(ts_col).isNotNull())
-    if event_type is not None:
-        m = m.filter(F.col("event_type") == event_type)
-    c = F.col(ts_col)
-    conds, keys = [], []
-    for lo, hi in ranges:
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c >= F.to_timestamp(F.lit(lo)))
-        if hi is not None:
-            cond = cond & (c < F.to_timestamp(F.lit(hi)))
-        conds.append(cond)
-        keys.append(f"{lo or '*'}-{hi or '*'}")
-    one = m.agg(
-        *[
-            F.sum(F.when(cond, 1).otherwise(0)).alias(f"_b{i}")
-            for i, cond in enumerate(conds)
-        ]
-    )
-    stack = ", ".join(
-        f"{i}, '{k}', _b{i}" for i, k in enumerate(keys)
-    )
-    return one.selectExpr(
-        f"stack({len(ranges)}, {stack}) AS (bucket_idx, key, doc_count)"
-    ).select(
-        F.col("bucket_idx").cast("int"),
-        "key",
-        F.coalesce(F.col("doc_count"), F.lit(0)).cast("long")
-        .alias("doc_count"),
-    )
+
+    def ts(x):
+        return None if x is None else F.to_timestamp(F.lit(x))
+
+    return _count_buckets(_events(events, ts_col, event_type), _RANGE_COLS, [
+        ((i, f"{lo or '*'}-{hi or '*'}"), _in_range(F.col(ts_col), ts(lo), ts(hi)))
+        for i, (lo, hi) in enumerate(ranges)
+    ])
 
 
 def date_range_agg_sql(
@@ -2058,9 +2013,7 @@ def rate_agg(
     for u in (unit, rate_unit):
         if u not in _RATE_SECONDS:
             raise ValueError(f"unit must be one of {sorted(_RATE_SECONDS)}")
-    m = events.filter(F.col(ts_col).isNotNull())
-    if event_type is not None:
-        m = m.filter(F.col("event_type") == event_type)
+    m = _events(events, ts_col, event_type)
     val = (
         F.count(F.lit(1)).cast("double")
         if value_col is None

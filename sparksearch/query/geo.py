@@ -12,7 +12,10 @@ Spark-first re-expression: a geo point is two double columns
 the distance predicate/sort and tile key push straight into the scan's
 column pruning.  At 100 TB the distance filter is a map-local predicate
 and every agg is one map-side-partial aggregation; nothing here
-shuffles more than the bucket keys.
+shuffles more than the bucket keys.  The aggs run on the one
+aggregation layer of ``query/aggs.py``: ``geotile_grid`` is its bucket
+cut over a tile key, ``geo_distance`` its stacked range buckets over
+the rounded distance.
 
 Cross-engine float discipline: distances round to ``DIST_ROUND``
 (meter-ish) decimals BEFORE they are compared, bucketed, or sorted, in
@@ -28,7 +31,17 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sparksearch.query.aggs import AVG_ROUND, _match_where_sql, match_set
+from sparksearch.query.aggs import (
+    _RANGE_COLS,
+    AVG_ROUND,
+    _count_where,
+    _in_range,
+    _match_where_sql,
+    _range_key,
+    _stacked,
+    _top_buckets,
+    match_set,
+)
 
 EARTH_RADIUS_KM = 6371.0
 DIST_ROUND = 3  # ~meter precision in km
@@ -208,13 +221,7 @@ def geotile_grid_agg(
     m = m.filter(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
     x, y = _tile_xy(F.col(lat_col), F.col(lon_col), z)
     tile = F.concat_ws("/", F.lit(str(z)), x.cast("string"), y.cast("string"))
-    return (
-        m.select(tile.alias("tile"))
-        .groupBy("tile")
-        .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-        .orderBy(F.desc("doc_count"), F.asc("tile"))
-        .limit(size)
-    )
+    return _top_buckets(m, tile.alias("key"), size).withColumnRenamed("key", "tile")
 
 
 def _tile_sql(lat: str, lon: str, z: int) -> str:
@@ -364,29 +371,11 @@ def geo_distance_agg(
         haversine_km(F.col(lat_col), F.col(lon_col), olat, olon), DIST_ROUND
     )
     bounds = [None] + [float(e) for e in edges] + [None]
-    exprs, keys = [], []
-    for i in range(len(bounds) - 1):
-        lo, hi = bounds[i], bounds[i + 1]
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (d >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (d < F.lit(hi))
-        exprs.append(F.sum(F.when(cond, 1).otherwise(0)).alias(f"_b{i}"))
-        keys.append(
-            ("*" if lo is None else f"{lo:g}")
-            + "-"
-            + ("*" if hi is None else f"{hi:g}")
-        )
-    one = m.agg(*exprs)
-    stack = ", ".join(f"{i}, '{k}', _b{i}" for i, k in enumerate(keys))
-    return one.selectExpr(
-        f"stack({len(keys)}, {stack}) AS (bucket_idx, key, doc_count)"
-    ).select(
-        F.col("bucket_idx").cast("int"),
-        "key",
-        F.col("doc_count").cast("long"),
-    )
+    # no empty-set fill: the twin's sum() is NULL over an empty match set
+    return _stacked(m, _RANGE_COLS, [
+        ((i, _range_key(lo, hi)), _count_where(_in_range(d, lo, hi)))
+        for i, (lo, hi) in enumerate(zip(bounds, bounds[1:]))
+    ])
 
 
 def geo_distance_agg_sql(

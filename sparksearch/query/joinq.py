@@ -416,7 +416,7 @@ def reverse_nested_agg(
     doc_count), doc_count desc / key asc, top ``size`` (the
     reverse_nested agg under a nested query context; each parent
     counts once no matter how many of its children matched)."""
-    from sparksearch.query.aggs import match_set
+    from sparksearch.query.aggs import _top_buckets, match_set
 
     cm = (
         match_set(
@@ -427,13 +427,7 @@ def reverse_nested_agg(
         .distinct()
     )
     joined = parents.join(cm, parent_col, "leftsemi")
-    return (
-        joined.filter(F.col(group_field).isNotNull())
-        .groupBy(F.col(group_field).alias("key"))
-        .agg(F.count(F.lit(1)).cast("long").alias("doc_count"))
-        .orderBy(F.desc("doc_count"), F.asc("key"))
-        .limit(size)
-    )
+    return _top_buckets(joined, F.col(group_field).alias("key"), size)
 
 
 def reverse_nested_agg_sql(

@@ -50,6 +50,12 @@ Pinned semantics (cross-engine bit-identical, deviations documented):
   buckets where any referenced metric is null are omitted
   (OpenSearch's skip gap policy), output rounded 6 dp.
 
+The sibling aggs that reduce bucket metrics to one row or a stacked row
+set (``stats_bucket``, ``percentiles_bucket``) use the stats metric set
+and the exact percentile rows of the one aggregation layer in
+``query/aggs.py``; the windowed ones are bucket-frame transforms of
+their own.
+
 Every function has a ``*_sql`` twin that wraps the PARENT agg's SQL
 (`aggs.py` ``*_sql`` output) in a window-function outer query, so the
 DuckDB oracle reduces the same buckets the Spark path does.
@@ -60,8 +66,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparksearch.query.aggs import _percentile_rows, _stats
+
 _MOVING_FNS = {"avg": F.avg, "sum": F.sum, "min": F.min, "max": F.max}
 _SEL_OPS = (">", ">=", "<", "<=", "==", "!=")
+NORM_ROUND = 6  # the pipeline aggs' cross-engine float contract
 
 
 def _w(key: str) -> Window:
@@ -159,14 +168,7 @@ def stats_bucket(
 ) -> DataFrame:
     """Sibling pipeline agg: count/min/max/avg/sum over the parent's
     metric values in ONE row (``avg_bucket`` … are its projections)."""
-    m = F.col(metric).cast("double")
-    return buckets.agg(
-        F.count(m).alias("count"),
-        F.min(m).alias("min"),
-        F.max(m).alias("max"),
-        F.round(F.avg(m), 6).alias("avg"),
-        F.sum(m).alias("sum"),
-    )
+    return buckets.agg(*_stats(F.col(metric).cast("double"), NORM_ROUND))
 
 
 def stats_bucket_sql(parent_sql: str, metric: str = "doc_count") -> str:
@@ -228,7 +230,6 @@ def bucket_selector(
 
 
 _NORM_METHODS = ("percent_of_sum", "mean", "rescale_0_1")
-NORM_ROUND = 6
 
 
 def normalize(
@@ -331,22 +332,8 @@ def percentiles_bucket(
     ``percentiles`` pin of ``query.aggs`` applied at the bucket level
     (OpenSearch's percentiles_bucket is likewise exact, since the
     coordinator holds every bucket value)."""
-    if not percents:
-        raise ValueError("percents must be non-empty")
-    one = buckets.agg(
-        *[
-            F.round(
-                F.expr(f"percentile(CAST({metric} AS DOUBLE), {p / 100.0!r})"),
-                6,
-            ).alias(f"_p{i}")
-            for i, p in enumerate(percents)
-        ]
-    )
-    stack = ", ".join(
-        f"CAST({p!r} AS DOUBLE), _p{i}" for i, p in enumerate(percents)
-    )
-    return one.selectExpr(
-        f"stack({len(percents)}, {stack}) AS (percent, value)"
+    return _percentile_rows(
+        buckets, f"CAST({metric} AS DOUBLE)", percents, NORM_ROUND
     )
 
 

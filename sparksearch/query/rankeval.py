@@ -33,6 +33,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparksearch.query.aggs import _count_where
 from sparksearch.query.bm25 import SCORE_ROUND, bm25_scores_df, bm25_scores_cte
 
 
@@ -82,7 +83,7 @@ def rank_eval(
         F.col("rank") + 1.0
     )
     per_q = joined.groupBy("query_id").agg(
-        (F.sum(F.when(F.col("rating") > 0, 1).otherwise(0)) / k).alias("p"),
+        (_count_where(F.col("rating") > 0) / k).alias("p"),
         F.coalesce(
             F.max(F.when(F.col("rating") > 0, 1.0 / F.col("rank"))),
             F.lit(0.0),

@@ -21,10 +21,14 @@ index-sidecar variant):
   engine);
 * order: score desc, term asc; top ``size`` (default 10).
 
-Scale shape: the exhaustive path tokenizes the corpus ONCE into a
-persisted (doc_id, distinct-tokens) frame that both frequency passes
-and both scalar counts reuse; each pass is explode → map-side-combined
-groupBy (the same shuffle shape as the index's own term-stats job).
+Scale shape: the exhaustive path counts both sides in ONE pass — explode
+the distinct tokens → map-side-combined groupBy with a plain count
+(background) and a conditional count over the match flag (foreground),
+the same shuffle shape as the index's own term-stats job — plus one
+scalar aggregate for |M| and N.  Nothing is cached, so no frame
+outlives the call.  The JLH filter, score and cut
+(:func:`_jlh_top`) are written once and shared by every form; the
+match set is the one of the aggregation layer in ``query/aggs.py``.
 At 100 TB use :func:`significant_text_indexed`: foreground counts come
 from the tfrows forward index semi-joined to the pruned-postings match
 set, background from the stats sidecar, term strings from the lexicon —
@@ -35,7 +39,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
@@ -43,12 +47,52 @@ from sparksearch.analyze import duckdb_tokens_expr, tokenize_str, tokens_col
 SIG_ROUND = 6
 
 
-def _score_cols():
-    fg_pct = F.col("fg_count") / F.col("m_docs")
-    bg_pct = F.col("bg_count") / F.col("n_docs")
+def _jlh_top(counts: DataFrame, key: str, m_docs, n_docs, min_doc_count: int,
+             size: int) -> DataFrame:
+    """(key, fg_count, bg_count) rows → JLH order: kept when ``fg_count
+    >= min_doc_count`` and fg_pct > bg_pct, score ``(fg_pct − bg_pct) ·
+    (fg_pct / bg_pct)`` rounded ``SIG_ROUND`` dp, score desc / key asc,
+    top ``size``.  ``m_docs``/``n_docs`` are the foreground and
+    background doc counts (Columns)."""
+    fg_pct = F.col("fg_count") / m_docs
+    bg_pct = F.col("bg_count") / n_docs
     return (
-        F.round((fg_pct - bg_pct) * (fg_pct / bg_pct), SIG_ROUND).alias("score"),
-        fg_pct > bg_pct,
+        counts.filter((F.col("fg_count") >= min_doc_count) & (fg_pct > bg_pct))
+        .select(
+            key,
+            "fg_count",
+            "bg_count",
+            F.round((fg_pct - bg_pct) * (fg_pct / bg_pct), SIG_ROUND).alias(
+                "score"
+            ),
+        )
+        .orderBy(F.desc("score"), F.asc(key))
+        .limit(size)
+    )
+
+
+def _fg_bg(base: DataFrame, key: Column, name: str, terms: list[str],
+           min_doc_count: int, size: int) -> DataFrame:
+    """JLH over ``base``, one row per background doc with its tokens in
+    ``ts``.  ``key`` (one or more values per doc, named ``name``) groups
+    both sides in one pass; the foreground is the docs whose tokens
+    overlap ``terms``.  The doc counts are a second aggregate over the
+    same rows, broadcast as one row."""
+    hit = F.arrays_overlap(F.col("ts"), F.array(*[F.lit(t) for t in terms]))
+    flagged = base.select("*", hit.alias("hit"))
+    # a key that no matched doc holds is not in the foreground
+    counts = (
+        flagged.select(key.alias(name), "hit")
+        .groupBy(name)
+        .agg(F.count(F.lit(1)).alias("bg_count"), F.count_if("hit").alias("fg_count"))
+        .filter(F.col("fg_count") > 0)
+    )
+    n = flagged.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.count_if("hit").alias("m_docs")
+    )
+    return _jlh_top(
+        counts.crossJoin(F.broadcast(n)), name, F.col("m_docs"), F.col("n_docs"),
+        min_doc_count, size,
     )
 
 
@@ -69,32 +113,10 @@ def significant_text(
     )
     if not terms:
         return empty
-    base = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.array_distinct(tokens_col(text_col, analyzer)).alias("ts"))
-        .persist()  # one tokenize pass feeds bg, fg, and both counts
+    base = docs.filter(F.col(text_col).isNotNull()).select(
+        F.array_distinct(tokens_col(text_col, analyzer)).alias("ts")
     )
-    m = base.filter(
-        F.arrays_overlap(F.col("ts"), F.array(*[F.lit(t) for t in terms]))
-    )
-    bg = base.select(F.explode("ts").alias("term")).groupBy("term").agg(
-        F.count(F.lit(1)).alias("bg_count")
-    )
-    fg = m.select(F.explode("ts").alias("term")).groupBy("term").agg(
-        F.count(F.lit(1)).alias("fg_count")
-    )
-    n = base.agg(F.count(F.lit(1)).alias("n_docs"))
-    mn = m.agg(F.count(F.lit(1)).alias("m_docs"))
-    score, positive = _score_cols()
-    return (
-        fg.join(bg, "term")
-        .crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(mn))
-        .filter((F.col("fg_count") >= min_doc_count) & positive)
-        .select("term", "fg_count", "bg_count", score)
-        .orderBy(F.desc("score"), F.asc("term"))
-        .limit(size)
-    )
+    return _fg_bg(base, F.explode("ts"), "term", terms, min_doc_count, size)
 
 
 def significant_text_sql(
@@ -177,27 +199,13 @@ def significant_text_indexed(
 
     lex = read_lexicon(spark, index.index_dir).select("term", "term_id")
     mn = ids.agg(F.count(F.lit(1)).alias("m_docs"))
-    n = F.lit(int(meta["n_docs"]))
-    fg_pct = F.col("fg_count") / F.col("m_docs")
-    bg_pct = F.col("bg_count") / n
-    return (
-        # lex join deliberately NOT broadcast-hinted: the lexicon is
-        # vocab-sized (can be 10^8 terms at 100 TB) — AQE broadcasts it
-        # when it is actually small
-        fg.join(bg, "term_id")
-        .join(lex, "term_id")
-        .crossJoin(F.broadcast(mn))
-        .filter((F.col("fg_count") >= min_doc_count) & (fg_pct > bg_pct))
-        .select(
-            "term",
-            "fg_count",
-            "bg_count",
-            F.round((fg_pct - bg_pct) * (fg_pct / bg_pct), SIG_ROUND).alias(
-                "score"
-            ),
-        )
-        .orderBy(F.desc("score"), F.asc("term"))
-        .limit(size)
+    # lex join deliberately NOT broadcast-hinted: the lexicon is
+    # vocab-sized (can be 10^8 terms at 100 TB) — AQE broadcasts it
+    # when it is actually small
+    counts = fg.join(bg, "term_id").join(lex, "term_id").crossJoin(F.broadcast(mn))
+    return _jlh_top(
+        counts, "term", F.col("m_docs"), F.lit(int(meta["n_docs"])),
+        min_doc_count, size,
     )
 
 
@@ -205,8 +213,9 @@ def significant_text_indexed(
 # significant_terms (keyword field) — the field-valued sibling of
 # significant_text: over-represented FIELD VALUES of the match set vs
 # the whole corpus, same JLH score / min_doc_count / positive-lift
-# rules.  One groupBy per frequency side (no tokenize pass at all);
-# null field values form no bucket (OpenSearch emits none).
+# rules.  One groupBy on the field value counts both sides (tokens
+# only decide the match flag); null field values form no bucket
+# (OpenSearch emits none).
 # ---------------------------------------------------------------------------
 
 def significant_terms_agg(
@@ -227,31 +236,11 @@ def significant_terms_agg(
     )
     if not terms:
         return empty
-    base = (
-        docs.filter(F.col(text_col).isNotNull() & F.col(field).isNotNull())
-        .select(
-            F.col(field).cast("string").alias("key"),
-            tokens_col(text_col, analyzer).alias("ts"),
-        )
-        .persist()
+    base = docs.filter(F.col(text_col).isNotNull() & F.col(field).isNotNull()).select(
+        F.col(field).cast("string").alias("key"),
+        tokens_col(text_col, analyzer).alias("ts"),
     )
-    m = base.filter(
-        F.arrays_overlap(F.col("ts"), F.array(*[F.lit(t) for t in terms]))
-    )
-    bg = base.groupBy("key").agg(F.count(F.lit(1)).alias("bg_count"))
-    fg = m.groupBy("key").agg(F.count(F.lit(1)).alias("fg_count"))
-    n = base.agg(F.count(F.lit(1)).alias("n_docs"))
-    mn = m.agg(F.count(F.lit(1)).alias("m_docs"))
-    score, positive = _score_cols()
-    return (
-        fg.join(bg, "key")
-        .crossJoin(F.broadcast(n))
-        .crossJoin(F.broadcast(mn))
-        .filter((F.col("fg_count") >= min_doc_count) & positive)
-        .select("key", "fg_count", "bg_count", score)
-        .orderBy(F.desc("score"), F.asc("key"))
-        .limit(size)
-    )
+    return _fg_bg(base, F.col("key"), "key", terms, min_doc_count, size)
 
 
 def significant_terms_agg_sql(

@@ -174,19 +174,21 @@ class InvertedIndex:
             from sparksearch.index.ordmap import load_map
 
             self._ordmap = load_map(self.index_dir)
+        # both term-stats reads go through pyarrow: a reload after a
+        # write launches no Spark job
         cache_stats = self._cache_stats_opt
         if cache_stats is None:
             limit = self._stats_cache_max_terms or self.STATS_CACHE_MAX_TERMS
             # metadata-only count: parquet row counts come from footers
-            n_terms = self.spark.read.parquet(self.stats_path).count()
-            cache_stats = n_terms <= limit
+            cache_stats = self._dataset("stats").count_rows() <= limit
         if cache_stats:
             # int-indexed: the index stores no term strings (v3) — query
             # terms hash to term_id driver-side (sparksearch.hashing)
             self._stats_pdf = (
-                self.spark.read.parquet(self.stats_path)
-                .select("term_id", "df")
-                .toPandas()
+                self._dataset("stats")
+                .to_table(columns=["term_id", "df"])
+                .to_pandas()
+                .sort_values("term_id")
                 .set_index("term_id")
             )
 

@@ -24,6 +24,13 @@ position arrays the exact rule is one ``F.array_intersect`` and the
 ordered chain one ``F.array_min`` (``index/positions.py``), and one
 ``.blocks(..., "positions")`` call reads the sidecar for every
 phrase, span and intervals query.
+
+Each aggregation step exists once on the Spark side of ``query/``
+(``*_sql`` twins excluded): one ``stack(`` SQL string (the one-row
+aggregate stacked into bucket rows), one conditional count
+``sum(when(c, 1).otherwise(0))``, one function writing an exact
+``percentile(`` and one bucket cut ``orderBy(desc("doc_count"),
+…).limit(…)``, all in ``query/aggs.py``.
 """
 
 import ast
@@ -47,6 +54,14 @@ PROXIMITY_KERNELS = {
     'blocks("positions")': "index/positions.py",
 }
 NORMS = {"_norm", "_vnorm"}
+AGG_STEPS = {
+    "stack(": "query/aggs.py:_stacked",
+    "conditional count": "query/aggs.py:_count_where",
+    "percentile(": "query/aggs.py:_percentile",
+    "bucket cut": "query/aggs.py:_top_buckets",
+}
+SQL_WORD = {"stack(": re.compile(r"\bstack\("),
+            "percentile(": re.compile(r"\bpercentile\(")}
 
 
 def _copies(src: str) -> list[str]:
@@ -169,6 +184,48 @@ def _proximity_sites(src: str) -> list[str]:
     return found
 
 
+def _is_const(node, value) -> bool:
+    return isinstance(node, ast.Constant) and node.value == value
+
+
+def _agg_steps(src: str) -> list[tuple[str, str]]:
+    """(step, function) for each aggregation step written outside a
+    ``*_sql`` function; ``percentile(`` counts once per function."""
+    found = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if node.name.endswith("_sql"):
+                return
+            func = node.name if func is None else func
+        if isinstance(node, ast.Call):
+            for step, word in SQL_WORD.items():
+                if any(word.search(_strings(a)) for a in node.args):
+                    found.append((step, func))
+            f = node.func
+            if (
+                _called(node) == "sum" and node.args
+                and _called(node.args[0]) == "otherwise"
+                and _is_const(node.args[0].args[0], 0)
+                and _called(node.args[0].func.value) == "when"
+                and _is_const(node.args[0].func.value.args[1], 1)
+            ):
+                found.append(("conditional count", func))
+            if (
+                _called(node) == "limit"
+                and _called(f.value) == "orderBy" and f.value.args
+                and _called(f.value.args[0]) == "desc"
+                and _is_const(f.value.args[0].args[0], "doc_count")
+            ):
+                found.append(("bucket cut", func))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(src), None)
+    pct = sorted({x for x in found if x[0] == "percentile("})
+    return pct + [x for x in found if x[0] != "percentile("]
+
+
 def test_shapes_are_recognised():
     assert _copies('idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)'
                    ' / (F.col("df") + 0.5))')
@@ -203,6 +260,15 @@ def test_shapes_are_recognised():
         "e = index.blocks(ids, 'stats')\nf = np.array_min(x)\n"
     ) == ["F.aggregate", "F.array_min", "F.array_intersect",
           'blocks("positions")']
+    assert _agg_steps(
+        "def f(m):\n    a = m.selectExpr(f'stack({n}, {b}) AS (k, v)')\n"
+        "    c = F.sum(F.when(x > 1, 1).otherwise(0))\n"
+        "    d = F.expr(f'percentile({x}, 0.5)') + F.expr('percentile(y, 0.1)')\n"
+        "    e = g.orderBy(F.desc('doc_count'), F.asc('key')).limit(3)\n"
+        "def f_sql(q):\n    return q.selectExpr('stack(1, 1, 2)')\n"
+        "def g(m):\n    return m.orderBy(F.asc('doc_count')).limit(3)\n"
+    ) == [("percentile(", "f"), ("stack(", "f"), ("conditional count", "f"),
+          ("bucket cut", "f")]
 
 
 def _offenders(check) -> dict[str, list[str]]:
@@ -244,3 +310,12 @@ def test_one_proximity_kernel_per_executor():
             for site in _proximity_sites(p.read_text(encoding="utf-8")):
                 sites.setdefault(site, Counter())[p.relative_to(PKG).as_posix()] += 1
     assert sites == {k: Counter({home: 1}) for k, home in PROXIMITY_KERNELS.items()}
+
+
+def test_each_aggregation_step_exists_once():
+    sites = {}
+    for p in sorted((PKG / "query").rglob("*.py")):
+        for step, func in _agg_steps(p.read_text(encoding="utf-8")):
+            rel = p.relative_to(PKG).as_posix()
+            sites.setdefault(step, []).append(f"{rel}:{func}")
+    assert sites == {step: [home] for step, home in AGG_STEPS.items()}

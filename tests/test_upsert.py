@@ -505,3 +505,33 @@ def test_delete_by_query_and_operator_and_oov(spark, corpora, tmp_path):
     assert meta["n_docs"] == n0 - len(both)
     with pytest.raises(ValueError):
         delete_by_query(spark, d, "x", operator="xor")
+
+
+def test_open_and_first_read_after_upsert_launch_no_spark_job(
+    spark, corpora, tmp_path_factory
+):
+    """The term-stats reload reads parquet footers and the (term_id, df)
+    table with pyarrow: opening a handle and the first driver-path read
+    after a write launch no Spark job."""
+    full, old, delta = corpora
+    d = str(tmp_path_factory.mktemp("ujobs") / "idx")
+    build_index(spark, old, d, n_segments=4, n_buckets=8, n_units=2)
+    sc = spark.sparkContext
+    q = make_vocab(100)[0]
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    handle, opened = jobs("open-handle", lambda: InvertedIndex(spark, d))
+    assert opened == []
+    upsert_index(spark, delta, d)
+    got, first_read = jobs("first-read", lambda: handle.search_local(q, 5))
+    assert first_read == []
+    assert handle.meta["gen"] == 1
+    fresh = InvertedIndex(spark, d)
+    assert got.equals(fresh.search_local(q, 5))
